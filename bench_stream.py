@@ -573,7 +573,7 @@ def bench_http_delivery(
     ckpt = os.path.join(work, "ckpt")
 
     def _frame(changes):
-        frame = build_delivery_frame(changes, spark)
+        frame = build_delivery_frame(changes)
         # plant the poison route deterministically (md5 coin on the
         # idempotency key — reproducible across runs)
         return frame.withColumn(
@@ -834,7 +834,7 @@ def bench_http_delivery_batched(
     ckpt = os.path.join(work, "ckpt")
 
     def _frame(changes):
-        frame = build_delivery_frame(changes, spark)
+        frame = build_delivery_frame(changes)
         return frame.withColumn(
             "grp",
             F.when(

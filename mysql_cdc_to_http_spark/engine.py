@@ -32,11 +32,7 @@ from mysql_cdc_to_http_spark.operators.envelope import (
     extract_table_name,
     serialize,
 )
-from mysql_cdc_to_http_spark.operators.routing import (
-    DEFAULT_GROUPS,
-    load_groups,
-    routing_dim,
-)
+from mysql_cdc_to_http_spark.operators.routing import assign_group, load_groups
 from mysql_cdc_to_http_spark.sources.cdc import stream_change_events
 from mysql_cdc_to_http_spark.sources.http_sink import http_batch_poster
 from mysql_cdc_to_http_spark.sources.queue import dequeue_stream, enqueue_stream
@@ -63,7 +59,7 @@ class PipelineHandles:
 
 
 def build_delivery_frame(
-    changes: DataFrame, spark: SparkSession,
+    changes: DataFrame,
     groups: dict[str, list[str]] | None = None,
     keep_deletes: bool = True,
 ) -> DataFrame:
@@ -79,11 +75,9 @@ def build_delivery_frame(
 
     if changes.isStreaming:
         changes = observe_actions_stream(changes, name="consume_metrics")
-    ev = action_filter(changes, keep=keep)
-    dim = routing_dim(spark, groups or DEFAULT_GROUPS)
-    routed = ev.join(
-        F.broadcast(dim), ev["source.table"] == dim["table"], "inner"
-    ).drop(dim["table"])
+    routed = assign_group(
+        action_filter(changes, keep=keep), "source.table", groups
+    )
     payload = serialize(
         F.struct("before", "after", "source", "op", "offset", "ts_ms")
     )
@@ -113,10 +107,10 @@ def run_pipeline(
         spark, events_dir, max_files_per_trigger=config.max_files_per_trigger
     )
     delivery = build_delivery_frame(
-        changes, spark, groups, keep_deletes=not config.compat_drop_deletes
+        changes, groups, keep_deletes=not config.compat_drop_deletes
     )
 
-    poster = http_batch_poster(config.post_url)
+    poster = http_batch_poster(config.post_url, retries=config.http_retries)
     direct = (
         delivery.writeStream.foreachBatch(poster)
         .option("checkpointLocation", os.path.join(work_dir, "ckpt_direct"))
@@ -134,18 +128,18 @@ def run_pipeline(
             config.queue_dir,
             os.path.join(work_dir, "ckpt_queue_write"),
         )
-        worker_frame = dequeue_stream(spark, config.queue_dir).select(
-            F.get_json_object("value", "$.grp").alias("grp"),
-            F.get_json_object("value", "$.payload").alias("payload"),
-            F.get_json_object("value", "$.idem_key").alias("idem_key"),
-        )
-        # the worker re-filters by group like main.go:404-408 (tables may
-        # have been un-grouped between enqueue and drain)
-        dim = routing_dim(spark, groups)
-        worker_frame = worker_frame.join(
-            F.broadcast(dim.select(F.col("grp").alias("g2"))),
-            F.col("grp") == F.col("g2"),
-            "left_semi",
+        payload = F.get_json_object("value", "$.payload")
+        # the worker re-parses the payload and re-routes its table like
+        # main.go:404-408 (tables may have been re-grouped or un-grouped
+        # between enqueue and drain)
+        worker_frame = assign_group(
+            dequeue_stream(spark, config.queue_dir).select(
+                payload.alias("payload"),
+                F.get_json_object("value", "$.idem_key").alias("idem_key"),
+                F.get_json_object(payload, "$.source.table").alias("table"),
+            ),
+            "table",
+            groups,
         )
         queue_worker = (
             worker_frame.writeStream.foreachBatch(poster)

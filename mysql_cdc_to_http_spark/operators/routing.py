@@ -1,6 +1,8 @@
 """Table-group routing — the reference's YAML group config inverted into a
-table→group map (``main.go:28-29, 308-332``), re-expressed as a broadcast
-dimension join so routing scales with the event stream, not the driver.
+table→group map (``main.go:28-29, 308-332``), re-expressed as one column
+expression: a literal ``map<table, group>`` looked up per row. The config
+is small and fixed for a query's lifetime, so the lookup runs inside the
+scan's projection: no join, no broadcast job, no shuffle.
 
 The reference keys groups by bare table name, so identically-named tables
 in different databases collide (last YAML group wins, main.go:325-329).
@@ -10,7 +12,7 @@ compat can pass bare names.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 #: Default groups, mirroring config/table_groups.example.yaml shape against
 #: the testdata star schema (FIXTURES.md §4).
@@ -22,15 +24,16 @@ DEFAULT_GROUPS: dict[str, list[str]] = {
 
 def load_groups(path: str | None = None) -> dict[str, list[str]]:
     """Load group→tables config from YAML when available (the reference's
-    loadTableGroups, main.go:313-332); fall back to DEFAULT_GROUPS."""
+    loadTableGroups, main.go:313-332); fall back to DEFAULT_GROUPS. An
+    empty file is an empty config: nothing is routed."""
     if path is None:
         return dict(DEFAULT_GROUPS)
     try:
         import yaml  # optional dep — gated per environment contract
 
         with open(path) as fh:
-            raw = yaml.safe_load(fh)
-        return {str(g): [str(t) for t in ts] for g, ts in raw.items()}
+            raw = yaml.safe_load(fh) or {}
+        return {str(g): [str(t) for t in ts or []] for g, ts in raw.items()}
     except ImportError:
         return dict(DEFAULT_GROUPS)
 
@@ -45,32 +48,37 @@ def invert_groups(groups: dict[str, list[str]]) -> dict[str, str]:
     return table_to_group
 
 
-def routing_dim(spark: SparkSession, groups: dict[str, list[str]]) -> DataFrame:
-    """(table, grp) dimension DataFrame for broadcast joins."""
-    rows = [(t, g) for t, g in invert_groups(groups).items()]
-    return spark.createDataFrame(rows, "table string, grp string")
+def route(
+    table: Column | str, groups: dict[str, list[str]] | None = None
+) -> Column:
+    """The group of ``table`` (getGroupForTable, main.go:308-310); null
+    when the table is in no group or the table name is null.
+
+    ``groups=None`` means DEFAULT_GROUPS; an empty dict routes nothing.
+    An empty ``create_map()`` is typed ``map<void, void>``, so that case
+    is a typed null literal instead of a lookup."""
+    table_to_group = invert_groups(DEFAULT_GROUPS if groups is None else groups)
+    if not table_to_group:
+        return F.lit(None).cast("string")
+    pairs = [F.lit(x) for kv in table_to_group.items() for x in kv]
+    col = F.col(table) if isinstance(table, str) else table
+    return F.element_at(F.create_map(*pairs), col)
 
 
 def group_filter(
-    df: DataFrame, spark: SparkSession, table_col: str = "table",
+    df: DataFrame, table_col: str = "table",
     groups: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """Drop events whose table is in no group (main.go:51-55) — a
-    broadcast left-semi join (no shuffle of the event stream)."""
-    dim = routing_dim(spark, groups or DEFAULT_GROUPS)
-    return df.join(
-        F.broadcast(dim), df[table_col] == dim["table"], "left_semi"
-    )
+    """Drop events whose table is in no group (main.go:51-55)."""
+    return df.filter(route(table_col, groups).isNotNull())
 
 
 def assign_group(
-    df: DataFrame, spark: SparkSession, table_col: str = "table",
+    df: DataFrame, table_col: str = "table",
     groups: dict[str, list[str]] | None = None,
 ) -> DataFrame:
-    """Attach the routing key (main.go:105): broadcast inner join against
-    the inverted config dim; ungrouped events drop out, exactly like the
-    reference's empty-group skip."""
-    dim = routing_dim(spark, groups or DEFAULT_GROUPS)
-    return df.join(
-        F.broadcast(dim), df[table_col] == dim["table"], "inner"
-    ).drop(dim["table"])
+    """Attach the routing key ``grp`` (main.go:105); ungrouped events drop
+    out, exactly like the reference's empty-group skip."""
+    return df.withColumn("grp", route(table_col, groups)).filter(
+        F.col("grp").isNotNull()
+    )

@@ -98,7 +98,7 @@ def q_action_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_group_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = group_filter(_flat_events(spark, sf_dir), spark, table_col="tbl")
+    ev = group_filter(_flat_events(spark, sf_dir), table_col="tbl")
     return ev.groupBy("tbl").agg(F.count(F.lit(1)).alias("n")).orderBy("tbl")
 
 
@@ -118,7 +118,7 @@ def q_group_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_group_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = assign_group(_flat_events(spark, sf_dir), spark, table_col="tbl")
+    ev = assign_group(_flat_events(spark, sf_dir), table_col="tbl")
     return (
         ev.groupBy("grp", "tbl").agg(F.count(F.lit(1)).alias("n")).orderBy("grp", "tbl")
     )

@@ -942,7 +942,7 @@ def q_http_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
         ev = assign_group(
-            _flat_events(spark, sf_dir), spark, table_col="tbl"
+            _flat_events(spark, sf_dir), table_col="tbl"
         ).filter(F.col("offset_id") < 400)
         batch = ev.select(
             "grp",
@@ -989,7 +989,7 @@ def q_queue_worker(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = dequeue_batch(spark, qdir).withColumn(
         "tbl", extract_table_name(F.col("value"))
     )
-    delivered = group_filter(q, spark, table_col="tbl")
+    delivered = group_filter(q, table_col="tbl")
     return (
         delivered.groupBy("tbl")
         .agg(F.count(F.lit(1)).alias("n_delivered"))

@@ -58,11 +58,8 @@ def get_spark(
     # must stay correct WITHOUT it (the external harness session never
     # loads it) — it is an accelerator, validated by running the whole
     # test suite through it. Disable with SPARK_GRAFT_EXTENSION=0.
-    _ext_jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "extension",
-        "spark-graft-extension.jar",
-    )
+    _repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    _ext_jar = os.path.join(_repo, "extension", "spark-graft-extension.jar")
     if (
         os.path.exists(_ext_jar)
         and os.environ.get("SPARK_GRAFT_EXTENSION", "1") != "0"
@@ -70,7 +67,22 @@ def get_spark(
         builder = builder.config("spark.jars", _ext_jar).config(
             "spark.sql.extensions", "sparkgraft.SparkGraftExtensions"
         )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    # Python workers import the installed pyspark, not pyspark.zip, when
+    # the versions match (vendor/pydaemon): task start-up no longer
+    # re-reads the zip directories. Local masters only — the module must
+    # exist at the same path on every worker host (MIGRATION.md §5).
+    if master.startswith("local"):
+        conf.setdefault("spark.python.daemon.module", "installed_pyspark_daemon")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p
+            for p in (
+                os.path.join(_repo, "vendor", "pydaemon"),
+                conf.get("spark.executorEnv.PYTHONPATH"),
+            )
+            if p
+        )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -228,11 +228,13 @@ def http_batch_poster(
     key_col: str = "idem_key",
     rate_rps: float | None = None,
     rate_burst: float | None = None,
+    retries: int = 3,
 ):
     """foreachBatch body: route each group to ``base_url/<group>`` and POST
     its rows partition-parallel (main.go:105's URL suffix semantics).
     ``rate_rps`` caps each PARTITION's egress with a token bucket
-    (see :class:`_TokenBucket`) — aggregate ceiling = rps × partitions."""
+    (see :class:`_TokenBucket`) — aggregate ceiling = rps × partitions.
+    ``retries`` is each row's retry budget (``HTTP_RETRIES``)."""
 
     def _post(batch_df: DataFrame, epoch_id: int) -> None:
         base = base_url.rstrip("/")
@@ -259,6 +261,7 @@ def http_batch_poster(
                     iter(rows),
                     payload_col,
                     key_col,
+                    retries=retries,
                     bucket=limiter,
                 )
 

@@ -5,6 +5,8 @@ compat vs correct mode, base64 heuristic edge cases, dead-letter extraction.
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from mysql_cdc_to_http_spark.operators import coercion
@@ -109,6 +111,61 @@ def test_group_collision_last_wins():
     # main.go:325-329: same table in two groups → last wins
     groups = {"g1": ["t1", "t2"], "g2": ["t1"]}
     assert invert_groups(groups)["t1"] == "g2"
+
+
+#: (TABLE_GROUPS_FILE text or None for no file, table → expected group;
+#: tables absent from the expectation must be dropped)
+ROUTING_CASES = {
+    # main.go:325-329: t1 sits in two groups, the last one wins
+    "collision_last_wins": ("g1: [t1, t2]\ng2: [t1]\n", {"t1": "g2", "t2": "g1"}),
+    # unrouted tables (t3, orders) and a null source.table are dropped
+    "unrouted_and_null_dropped": ("g1: [t2]\n", {"t2": "g1"}),
+    # an empty config routes nothing, and must still analyse
+    "empty_config": ("", {}),
+    "empty_mapping": ("{}\n", {}),
+    # no file: DEFAULT_GROUPS
+    "default_groups": (None, {"orders": "grp_sales"}),
+}
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+@pytest.mark.parametrize("case", sorted(ROUTING_CASES))
+def test_delivery_frame_routing(spark, tmp_path, monkeypatch, case, ansi):
+    """Routing through the shipped path: TABLE_GROUPS_FILE → EngineConfig
+    → load_groups → build_delivery_frame, with ANSI off and on."""
+    from mysql_cdc_to_http_spark.config import EngineConfig
+    from mysql_cdc_to_http_spark.engine import build_delivery_frame
+    from mysql_cdc_to_http_spark.operators.routing import load_groups
+    from mysql_cdc_to_http_spark.sources.cdc import ENVELOPE_SCHEMA
+
+    text, expected = ROUTING_CASES[case]
+    if text is None:
+        monkeypatch.delenv("TABLE_GROUPS_FILE", raising=False)
+    else:
+        path = tmp_path / "table_groups.yaml"
+        path.write_text(text)
+        monkeypatch.setenv("TABLE_GROUPS_FILE", str(path))
+    groups = load_groups(EngineConfig().table_groups_file)
+    tables = ["t1", "t2", "t3", "orders", None]
+    changes = spark.createDataFrame(
+        [
+            {"source": {"table": t}, "op": "c", "offset": i, "ts_ms": 0}
+            for i, t in enumerate(tables)
+        ],
+        ENVELOPE_SCHEMA,
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        got = {
+            r.t: r.grp
+            for r in build_delivery_frame(changes, groups)
+            .select(F.get_json_object("payload", "$.source.table").alias("t"), "grp")
+            .collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
+    assert got == expected
 
 
 # ---------------------------------------------------------------------------

@@ -646,3 +646,93 @@ def test_http_dlq_ndjson_batch_mode(spark, tmp_path):
         assert {r[1] for r in ok_reqs2} == want_keys
     finally:
         srv.shutdown()
+
+
+def _write_one_file_batches(events_dir, n_files: int, per_file: int) -> int:
+    """``n_files`` envelope files under ``events_dir/data``; returns how
+    many events DEFAULT_GROUPS routes."""
+    import json
+    import os
+
+    tables = ["orders", "customer", "widgets"]
+    os.makedirs(os.path.join(events_dir, "data"))
+    routed = 0
+    for k in range(n_files):
+        with open(os.path.join(events_dir, "data", f"{k:03d}.json"), "w") as fh:
+            for i in range(per_file):
+                table = tables[i % len(tables)]
+                routed += table != "widgets"
+                fh.write(json.dumps({
+                    "after": {"o_orderkey": i}, "source": {"table": table},
+                    "op": "c", "offset": k * per_file + i, "ts_ms": 0,
+                }) + "\n")
+    return routed
+
+
+def test_engine_one_spark_job_per_batch(spark, tmp_path, sink_server):
+    """Each non-empty micro-batch runs exactly one Spark job: the sink's
+    POST job. Routing adds none (no broadcast of a routing table)."""
+    base, sink = sink_server
+    n_files = 3
+    events_dir = str(tmp_path / "events")
+    n_routed = _write_one_file_batches(events_dir, n_files, per_file=6)
+    cfg = EngineConfig(
+        post_url=base, table_groups_file=None, max_files_per_trigger=1
+    )
+    handles = run_pipeline(spark, cfg, events_dir, str(tmp_path / "w"))
+    handles.process_all_available()
+    handles.stop()
+    batches = [p for p in handles.direct.recentProgress if p.numInputRows]
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(
+        str(handles.direct.runId)
+    )
+    assert len(batches) == n_files
+    assert len(jobs) == n_files
+    assert len(sink.hits) == n_routed
+
+
+class _FailTwice(http.server.BaseHTTPRequestHandler):
+    """500 on the first two POSTs of each idempotency key, then 200."""
+
+    attempts: Counter = Counter()
+
+    def do_POST(self):  # noqa: N802
+        self.rfile.read(int(self.headers.get("Content-Length", 0)))
+        key = self.headers.get("Idempotency-Key", "")
+        type(self).attempts[key] += 1
+        self.send_response(500 if type(self).attempts[key] <= 2 else 200)
+        self.end_headers()
+
+    def log_message(self, *a):
+        pass
+
+
+@pytest.mark.parametrize("retries,delivered", [(1, False), (2, True)])
+def test_engine_honours_http_retries(spark, tmp_path, retries, delivered):
+    """``EngineConfig.http_retries`` (HTTP_RETRIES) is each row's retry
+    budget in run_pipeline: an endpoint that fails twice needs two."""
+    from pyspark.errors import StreamingQueryException
+
+    _FailTwice.attempts = Counter()
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _FailTwice)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        events_dir = str(tmp_path / "events")
+        _write_one_file_batches(events_dir, 1, per_file=1)
+        cfg = EngineConfig(
+            post_url=f"http://127.0.0.1:{srv.server_port}",
+            table_groups_file=None,
+            http_retries=retries,
+        )
+        handles = run_pipeline(spark, cfg, events_dir, str(tmp_path / "w"))
+        try:
+            if delivered:
+                handles.process_all_available()
+            else:
+                with pytest.raises(StreamingQueryException):
+                    handles.process_all_available()
+        finally:
+            handles.stop()
+        assert list(_FailTwice.attempts.values()) == [1 + retries]
+    finally:
+        srv.shutdown()

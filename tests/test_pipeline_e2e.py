@@ -51,7 +51,7 @@ def test_reference_double_delivery_topology(spark, sf_dir, tmp_path, counter_ser
     Every surviving event is seen exactly twice per endpoint."""
     base, handler = counter_server
     ev = assign_group(
-        action_filter(_flat_events(spark, sf_dir)), spark, table_col="tbl"
+        action_filter(_flat_events(spark, sf_dir)), table_col="tbl"
     ).filter(F.col("offset_id") < 120)
     batch = ev.select(
         "grp",

@@ -148,9 +148,36 @@ def test_asof_join_is_single_window_not_theta(spark, sf_dir):
     assert "CartesianProduct" not in plan
 
 
-def test_group_routing_broadcasts_dim(spark, sf_dir):
-    plan = plan_of(QUERIES["q_group_routing"](spark, sf_dir))
-    assert "BroadcastExchange" in plan
+def test_group_routing_plans_no_join_or_exchange(spark, sf_dir):
+    """Group routing is a literal-map lookup inside the scan's
+    projection. The routed frames (the ones ``q_group_routing`` and
+    ``q_group_filter`` aggregate, and a batch delivery frame) plan no
+    join and no exchange; the two queries plan no join and no broadcast
+    (their own groupBy/orderBy still shuffle)."""
+    from mysql_cdc_to_http_spark.engine import build_delivery_frame
+    from mysql_cdc_to_http_spark.operators.routing import (
+        assign_group,
+        group_filter,
+    )
+    from mysql_cdc_to_http_spark.queries.cdc import _flat_events
+    from mysql_cdc_to_http_spark.sources.cdc import synthetic_change_events
+
+    flat = _flat_events(spark, sf_dir)
+    routed = {
+        "assign_group": assign_group(flat, table_col="tbl"),
+        "group_filter": group_filter(flat, table_col="tbl"),
+        "build_delivery_frame": build_delivery_frame(
+            synthetic_change_events(spark, sf_dir)
+        ),
+    }
+    for name, df in routed.items():
+        plan = plan_of(df)
+        for op in ("Join", "Exchange"):
+            assert op not in plan, f"{name} plan contains {op}:\n{plan}"
+    for name in ("q_group_routing", "q_group_filter"):
+        plan = plan_of(QUERIES[name](spark, sf_dir))
+        for op in ("Join", "BroadcastExchange"):
+            assert op not in plan, f"{name} plan contains {op}:\n{plan}"
 
 
 def test_no_cartesian_anywhere_unexpected(spark, sf_dir):
