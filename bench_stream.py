@@ -19,13 +19,14 @@ the two stateful surfaces that define the engine's streaming story:
 2. **Stream-stream interval join** (queries/streaming.py
    q_stream_stream_join): both sides streamed, watermark + event-time
    bound state eviction. Reports input rows/s through the join.
-3. **HTTP delivery path** (round 8 — the reference's actual value
-   path, R12): the CDC feed streams through ``build_delivery_frame``
-   into the DLQ-protected HTTP poster against a local HTTP/1.1 echo
-   server, with a deterministic ~2% of rows routed to a /poison
-   endpoint that 500s. Reports delivered rows/s (incl. retries + DLQ
-   parquet writes), dead-letter counts, and a heal + ``replay_dlq``
-   convergence cycle that must drain the DLQ to empty.
+3. **HTTP delivery path** (the reference's actual value path, R12):
+   the CDC feed streams through ``build_delivery_frame`` into
+   ``http_batch_poster`` — the poster ``run_pipeline`` ships — against
+   a local HTTP/1.1 echo server, with a deterministic ~2% of rows
+   routed to a /poison endpoint that 500s. Reports delivered rows/s
+   (incl. retries + DLQ parquet writes), dead-letter counts, and a
+   heal + ``replay_dlq`` convergence cycle that must drain the DLQ to
+   empty.
 
 Prints exactly ONE JSON line standalone; ``bench.py`` embeds the same
 dict under a ``"stream"`` key so the driver records it in BENCH_r{N}.
@@ -483,12 +484,13 @@ def bench_http_delivery(
 ) -> dict:
     """The reference's actual VALUE path (R12: consume → envelope →
     HTTP POST, main.go:105-113) measured end-to-end: the CDC feed
-    streams through build_delivery_frame into the DLQ-protected HTTP
-    poster against a local threaded echo server. ~poison_pct% of rows
-    are deterministically routed to a /poison endpoint that 500s, so
-    the run also exercises retry + dead-lettering; after the feed
-    drains the endpoint is healed and ONE replay_dlq cycle must
-    converge the DLQ to empty (drained epoch dirs deleted).
+    streams through build_delivery_frame into http_batch_poster (the
+    poster run_pipeline ships) against a local threaded echo server.
+    ~poison_pct% of rows are deterministically routed to a /poison
+    endpoint that 500s, so the run also exercises retry +
+    dead-lettering; after the feed drains the endpoint is healed and
+    ONE replay_dlq cycle must converge the DLQ to empty (drained epoch
+    dirs deleted).
 
     Reported: delivered rows/s (wall covers POSTs incl. retries and
     DLQ parquet writes), 2xx/5xx counts, dlq_rows, replay counters.
@@ -498,13 +500,12 @@ def bench_http_delivery(
     live ingestion converges (DLQ empty, every routed idempotency key
     delivered; the _SUCCESS commit gate in replay_dlq is what makes
     the race loss-free).
-    Scale shape: delivery runs partition-parallel inside mapInPandas
-    on executors, each partition holding ONE keep-alive HTTP
-    connection for its whole batch (_KeepAlivePoster — the same
-    connection-amortization the Go http.Client gave the reference
-    implicitly) — rows/s is therefore a LOWER bound set by the
-    localhost echo server's request round trip, not by connection
-    setup."""
+    Scale shape: delivery runs partition-parallel on executors, each
+    partition holding ONE keep-alive HTTP connection for its whole
+    batch (_KeepAlivePoster — the same connection-amortization the Go
+    http.Client gave the reference implicitly) — rows/s is therefore
+    a LOWER bound set by the localhost echo server's request round
+    trip, not by connection setup."""
     import http.server
     import threading
 
@@ -517,7 +518,7 @@ def bench_http_delivery(
         write_event_files,
     )
     from mysql_cdc_to_http_spark.sources.http_sink import (
-        http_batch_poster_with_dlq,
+        http_batch_poster,
         replay_dlq,
     )
 
@@ -585,25 +586,18 @@ def bench_http_delivery(
             ).otherwise(F.col("grp")),
         )
 
-    poster = http_batch_poster_with_dlq(
-        base, dlq, retries=1, backoff_s=0.01, timeout_s=5.0, parallelism=16
+    poster = http_batch_poster(base, dlq, retries=1)
+    t0 = time.perf_counter()
+    q = (
+        _frame(stream_change_events(spark, events_dir))
+        .writeStream.foreachBatch(poster)
+        .option("checkpointLocation", ckpt)
+        .outputMode("append")
+        .start()
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        t0 = time.perf_counter()
-        q = (
-            _frame(stream_change_events(spark, events_dir))
-            .writeStream.foreachBatch(poster)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        wall = time.perf_counter() - t0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    q.processAllAvailable()
+    q.stop()
+    wall = time.perf_counter() - t0
 
     import glob as _glob
 
@@ -637,9 +631,7 @@ def bench_http_delivery(
     ckpt2 = os.path.join(work2, "ckpt")
     seen_keys: set[str] = set()
     track_keys.append(seen_keys)  # _Echo records keys from here on
-    poster2 = http_batch_poster_with_dlq(
-        base, dlq2, retries=1, backoff_s=0.01, timeout_s=5.0, parallelism=16
-    )
+    poster2 = http_batch_poster(base, dlq2, retries=1)
     replay_cycles = {"n": 0}
     stop_replaying = threading.Event()
 
@@ -654,8 +646,6 @@ def bench_http_delivery(
             if replay_cycles["n"] == 3:
                 healed.set()  # heal mid-soak, while batches still post
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
     replayer = threading.Thread(target=_replay_loop, daemon=True)
     try:
         t2 = time.perf_counter()
@@ -687,7 +677,6 @@ def bench_http_delivery(
                 pass
     finally:
         stop_replaying.set()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         track_keys.clear()
 
     from mysql_cdc_to_http_spark.sources.cdc import read_change_events
@@ -722,268 +711,6 @@ def bench_http_delivery(
         "delivery_complete": bool(
             dlq_drained and replayed_ok == dlq_rows
         ),
-        "concurrent_replay_wall_sec": round(soak_wall, 3),
-        "concurrent_replay_cycles": replay_cycles["n"],
-        "concurrent_keys_expected": len(expected_keys),
-        "concurrent_keys_delivered": len(seen_keys),
-        "concurrent_replay_converged": concurrent_converged,
-    }
-
-
-def bench_http_delivery_batched(
-    spark, sf_dir: str, n_files: int = 8, poison_pct: int = 2,
-    batch_size: int = 32,
-) -> dict:
-    """NDJSON batch-mode twin of :func:`bench_http_delivery` (round-10
-    verdict #6): the same CDC feed, poison routing, and replay-drain
-    contract, delivered with ``batch_size``-row application/x-ndjson
-    POSTs. The echo server counts newline-separated ROWS (not
-    requests), so rows_per_sec is comparable row-for-row with the
-    per-row lane; the speedup comes from amortizing the request round
-    trip across batch members. Poisoned batches dead-letter their
-    member rows individually and one healed replay_dlq cycle must
-    drain the DLQ — identical convergence semantics to per-row.
-
-    Phase 2 (r11 verdict #7): the same replay-racing-live-ingestion
-    soak the per-row lane runs — fresh DLQ, poison on, background
-    replay cycles against the tree the batched poster is still
-    writing, heal mid-soak, bounded final convergence. Coverage is
-    asserted on ROW idempotency keys reconstructed from the NDJSON
-    payloads (table:offset), since batch requests carry only the
-    deterministic per-batch header key."""
-    import http.server
-    import threading
-
-    from pyspark.sql import functions as F
-
-    from mysql_cdc_to_http_spark.engine import build_delivery_frame
-    from mysql_cdc_to_http_spark.operators.sampling import split_bucket
-    from mysql_cdc_to_http_spark.sources.cdc import (
-        stream_change_events,
-        write_event_files,
-    )
-    from mysql_cdc_to_http_spark.sources.http_sink import (
-        http_batch_poster_with_dlq,
-        replay_dlq,
-    )
-
-    counters = {"ok_rows": 0, "ok_reqs": 0, "err": 0}
-    lock = threading.Lock()
-    healed = threading.Event()
-    # phase-2 key tracking (r11 verdict #7 — same contract as the
-    # per-row lane): when a set is pushed here, the echo server records
-    # each delivered ROW's idempotency key. Batched requests carry a
-    # per-BATCH header key, so row keys are reconstructed from the
-    # NDJSON payload itself (idem_key = "{source.table}:{offset}" —
-    # engine.build_delivery_frame), which also holds for the per-row
-    # replay deliveries.
-    track_keys: list[set] = []
-
-    def _body_keys(body: bytes) -> list[str]:
-        import json as _json
-
-        keys = []
-        for line in body.split(b"\n"):
-            if not line.strip():
-                continue
-            try:
-                d = _json.loads(line)
-                keys.append(
-                    f"{d['source']['table']}:{d['offset']}"
-                )
-            except Exception:  # noqa: BLE001 — malformed line = no key
-                pass
-        return keys
-
-    class _Echo(http.server.BaseHTTPRequestHandler):
-        protocol_version = "HTTP/1.1"
-        disable_nagle_algorithm = True
-
-        def do_POST(self):  # noqa: N802
-            body = self.rfile.read(
-                int(self.headers.get("Content-Length", 0))
-            )
-            if self.path.endswith("/poison") and not healed.is_set():
-                with lock:
-                    counters["err"] += 1
-                self.send_response(500)
-                self.send_header("Content-Length", "0")
-                self.end_headers()
-                return
-            with lock:
-                counters["ok_reqs"] += 1
-                counters["ok_rows"] += body.count(b"\n") + 1 if body else 0
-                if track_keys:
-                    track_keys[0].update(_body_keys(body))
-            out = b"{}"
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(out)))
-            self.end_headers()
-            self.wfile.write(out)
-
-        def log_message(self, *a):
-            pass
-
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _Echo)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    base = f"http://127.0.0.1:{srv.server_port}"
-
-    events_dir = write_event_files(spark, sf_dir, n_files=n_files)
-    work = tempfile.mkdtemp(prefix="graft_http_bench_nd_")
-    dlq = os.path.join(work, "dlq")
-    ckpt = os.path.join(work, "ckpt")
-
-    def _frame(changes):
-        frame = build_delivery_frame(changes)
-        return frame.withColumn(
-            "grp",
-            F.when(
-                split_bucket(F.col("idem_key"), 100, salt="http-soak-v1")
-                < poison_pct,
-                F.lit("poison"),
-            ).otherwise(F.col("grp")),
-        )
-
-    poster = http_batch_poster_with_dlq(
-        base, dlq, retries=1, backoff_s=0.01, timeout_s=5.0,
-        parallelism=16, batch_size=batch_size,
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        t0 = time.perf_counter()
-        q = (
-            _frame(stream_change_events(spark, events_dir))
-            .writeStream.foreachBatch(poster)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .start()
-        )
-        q.processAllAvailable()
-        q.stop()
-        wall = time.perf_counter() - t0
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-
-    import glob as _glob
-
-    dlq_rows = 0
-    if _glob.glob(f"{dlq}/epoch=*"):
-        dlq_rows = spark.read.parquet(f"{dlq}/epoch=*").count()
-    delivered_rows = counters["ok_rows"]
-
-    healed.set()
-    still_failing = replay_dlq(spark, dlq, base, retries=0)
-    dlq_drained = still_failing == 0 and _glob.glob(f"{dlq}/epoch=*") == []
-    replayed_rows = counters["ok_rows"] - delivered_rows
-    # Snapshot the request counters BEFORE phase 2 reuses the same echo
-    # server: requests_2xx feeds the http_batched_amortized_8x gate
-    # against the phase-1 row counts, so folding phase-2 traffic in
-    # roughly doubles it and spuriously fails the gate (r12 ADVICE).
-    phase1_ok_reqs = counters["ok_reqs"]
-    phase1_err_reqs = counters["err"]
-
-    # ---- phase 2 (r11 verdict #7): replay RACING live ingestion,
-    # batched lane — the same matrix the per-row lane runs. Fresh DLQ
-    # tree, poison back on; a background thread fires replay_dlq
-    # cycles against the tree the batched poster is still writing; the
-    # endpoint heals after 3 cycles. Convergence: DLQ empty and every
-    # routed ROW key delivered at least once (keys reconstructed from
-    # the NDJSON payloads — the per-batch header key is a transport
-    # detail, the row key is the delivery contract).
-    healed.clear()
-    work2 = tempfile.mkdtemp(prefix="graft_http_bench_nd2_")
-    dlq2 = os.path.join(work2, "dlq")
-    ckpt2 = os.path.join(work2, "ckpt")
-    seen_keys: set[str] = set()
-    track_keys.append(seen_keys)
-    poster2 = http_batch_poster_with_dlq(
-        base, dlq2, retries=1, backoff_s=0.01, timeout_s=5.0,
-        parallelism=16, batch_size=batch_size,
-    )
-    replay_cycles = {"n": 0}
-    stop_replaying = threading.Event()
-
-    def _replay_loop():
-        while not stop_replaying.is_set():
-            time.sleep(0.25)
-            try:
-                replay_dlq(spark, dlq2, base, retries=0)
-                replay_cycles["n"] += 1
-            except Exception:  # noqa: BLE001 — racing cycles may collide
-                pass
-            if replay_cycles["n"] == 3:
-                healed.set()  # heal mid-soak, while batches still post
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    replayer = threading.Thread(target=_replay_loop, daemon=True)
-    try:
-        t2 = time.perf_counter()
-        q2 = (
-            _frame(stream_change_events(spark, events_dir))
-            .writeStream.foreachBatch(poster2)
-            .option("checkpointLocation", ckpt2)
-            .outputMode("append")
-            .start()
-        )
-        replayer.start()
-        q2.processAllAvailable()
-        q2.stop()
-        healed.set()  # in case fewer than 3 cycles ran before drain
-        soak_wall = time.perf_counter() - t2
-        # JOIN the background replayer before the convergence loop —
-        # two replay cycles racing the same epoch dirs can collide on
-        # os.replace/rmtree (round-9 advice on the per-row lane).
-        stop_replaying.set()
-        replayer.join(timeout=10)
-        for _ in range(5):
-            try:
-                if replay_dlq(spark, dlq2, base, retries=0) == 0:
-                    break
-            except Exception:  # noqa: BLE001 — same guard as the thread
-                pass
-    finally:
-        stop_replaying.set()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        track_keys.clear()
-
-    from mysql_cdc_to_http_spark.sources.cdc import read_change_events
-
-    expected_keys = {
-        r["idem_key"]
-        for r in _frame(read_change_events(spark, events_dir))
-        .select("idem_key")
-        .collect()
-    }
-    concurrent_converged = bool(
-        _glob.glob(f"{dlq2}/epoch=*") == []
-        and expected_keys <= seen_keys
-    )
-
-    srv.shutdown()
-    shutil.rmtree(work, ignore_errors=True)
-    shutil.rmtree(work2, ignore_errors=True)
-
-    rows_total = delivered_rows + dlq_rows
-    return {
-        "batch_size": batch_size,
-        "rows_routed": rows_total,
-        "rows_delivered_2xx": delivered_rows,
-        "requests_2xx": phase1_ok_reqs,
-        # counters["err"] counts REJECTED REQUESTS (one per batch
-        # attempt, retries included), not rows — named accordingly so it
-        # reads correctly next to the row-denominated fields (r11
-        # ADVICE). Phase-1 snapshots: rows_delivered_2xx/dlq_rows are
-        # phase-1 numbers, so the request counters must be too.
-        "requests_rejected_5xx": phase1_err_reqs,
-        "dlq_rows": dlq_rows,
-        "wall_sec": round(wall, 3),
-        "rows_per_sec": round(rows_total / wall, 1) if wall > 0 else None,
-        "replay_still_failing": still_failing,
-        "replay_delivered_rows": replayed_rows,
-        "dlq_drained_after_replay": bool(dlq_drained),
-        "delivery_complete": bool(dlq_drained and replayed_rows == dlq_rows),
         "concurrent_replay_wall_sec": round(soak_wall, 3),
         "concurrent_replay_cycles": replay_cycles["n"],
         "concurrent_keys_expected": len(expected_keys),
@@ -1029,26 +756,6 @@ def run(spark, sf_dir: str, n_files: int = 16) -> dict:
     ivm = _guard(bench_ivm_view, spark, sf_dir, n_files=n_files)
     sess = _guard(bench_session_state, spark, sf_dir)
     http = _guard(bench_http_delivery, spark, sf_dir, n_files=n_files // 2)
-    httpb = _guard(
-        bench_http_delivery_batched, spark, sf_dir, n_files=n_files // 2
-    )
-    if "error" not in http and "error" not in httpb:
-        # Gate on the DETERMINISTIC effect of batching — request
-        # amortization (>=8x fewer 2xx requests than delivered rows at
-        # batch_size=32; group fragmentation costs some) — not on a
-        # wall-clock ratio: the batched lane's wall is dominated by the
-        # fixed micro-batch floor, so a 5x rows/s gate flaps with suite
-        # load (measured 5.6x standalone, 3.1x mid-suite, same code).
-        # The measured ratio still ships in the payload for the record.
-        batched_ok = bool(
-            httpb["delivery_complete"]
-            and httpb["requests_2xx"] * 8 <= httpb["rows_delivered_2xx"]
-        )
-        httpb["speedup_vs_per_row"] = round(
-            (httpb["rows_per_sec"] or 0) / (http["rows_per_sec"] or 1), 2
-        )
-    else:
-        batched_ok = False
     return {
         "cdc_pipeline": cdc,
         "cdc_pipeline_10x": cdc10,
@@ -1057,7 +764,6 @@ def run(spark, sf_dir: str, n_files: int = 16) -> dict:
         "ivm_view": ivm,
         "session_state": sess,
         "http_delivery": http,
-        "http_delivery_batched": httpb,
         "checks": {
             "resumed_exactly_once": cdc.get("resumed_exactly_once", False),
             "state_bounded": cdc.get("state_bounded", False),
@@ -1069,14 +775,6 @@ def run(spark, sf_dir: str, n_files: int = 16) -> dict:
             "ivm_view_matches_batch": ivm.get("view_matches_batch", False),
             "http_delivery_complete": http.get("delivery_complete", False),
             "http_concurrent_replay_converged": http.get(
-                "concurrent_replay_converged", False
-            ),
-            "http_batched_complete": httpb.get("delivery_complete", False),
-            "http_batched_amortized_8x": batched_ok,
-            # r11 verdict #7: the batched lane runs the SAME
-            # poison-endpoint convergence matrix as per-row — replay
-            # racing live ingestion, heal mid-soak, row-key coverage.
-            "http_batched_concurrent_replay_converged": httpb.get(
                 "concurrent_replay_converged", False
             ),
         },

@@ -3,7 +3,9 @@
 
 Commands:
   pipeline   run the CDC delivery pipeline from EngineConfig env vars
-             (POST_URL, QUEUE_DIR, TABLE_GROUPS_FILE, COMPAT_* flags)
+             (POST_URL, QUEUE_DIR, TABLE_GROUPS_FILE, MAX_FILES_PER_TRIGGER,
+             HTTP_RETRIES, COMPAT_DROP_DELETES); dead letters land in
+             <work-dir>/dlq
   queries    list registered queries (oracle-checked marked *)
   run NAME   execute one registered query and show its result
   bench      run the headline bench suite (same as bench.py)

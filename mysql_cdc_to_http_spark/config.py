@@ -4,15 +4,18 @@
 
 Reference keys map as:
 
-| reference (.env.example)    | engine field        | note |
-|-----------------------------|---------------------|------|
-| DB_ADDR/DB_USER/DB_PASSWORD | source_uri          | file/kafka URI of the envelope stream (wire protocol out of scope) |
-| DB_FLAVOR, SERVER_ID        | (n/a)               | binlog-client specifics |
-| POSITION_FILE               | checkpoint_dir      | Spark checkpoint replaces the JSON position file (main.go:287-306) |
-| POST_URL                    | post_url            | HTTP sink base URL (main.go:105) |
-| TABLE_GROUPS_FILE           | table_groups_file   | YAML group→tables routing (main.go:313-332) |
-| REDIS_ADDR/.../REDIS_DB     | queue_dir           | file-directory queue replaces the Redis list (main.go:38) |
-| LOG_LEVEL                   | log_level           | |
+| reference (.env.example)    | engine field          | note |
+|-----------------------------|-----------------------|------|
+| DB_ADDR/DB_USER/DB_PASSWORD | (CLI --events-dir)    | directory of the envelope stream (wire protocol out of scope) |
+| DB_FLAVOR, SERVER_ID        | (n/a)                 | binlog-client specifics |
+| POSITION_FILE               | (CLI --work-dir)      | Spark checkpoints under the work dir replace the JSON position file (main.go:287-306) |
+| POST_URL                    | post_url              | HTTP sink base URL (main.go:105) |
+| TABLE_GROUPS_FILE           | table_groups_file     | YAML group→tables routing (main.go:313-332) |
+| REDIS_ADDR/.../REDIS_DB     | queue_dir             | file-directory queue replaces the Redis list (main.go:38) |
+| LOG_LEVEL                   | (n/a)                 | Spark's log4j configuration sets log levels |
+| (none)                      | max_files_per_trigger | envelope files per micro-batch (MAX_FILES_PER_TRIGGER) |
+| (none)                      | http_retries          | retries per event before it is dead-lettered (HTTP_RETRIES) |
+| (none)                      | compat_drop_deletes   | drop ``op = 'd'`` events like main.go:58-60 (COMPAT_DROP_DELETES) |
 """
 
 from __future__ import annotations
@@ -36,12 +39,6 @@ def _env_int(key: str, default: int) -> int:
 
 @dataclass
 class EngineConfig:
-    source_uri: str = field(
-        default_factory=lambda: _env("CDC_SOURCE_URI", "/tmp/spark_graft_cdc")
-    )
-    checkpoint_dir: str = field(
-        default_factory=lambda: _env("CHECKPOINT_DIR", "./storage/checkpoints")
-    )
     post_url: str = field(
         default_factory=lambda: _env("POST_URL", "http://localhost:8080/cdc")
     )
@@ -51,20 +48,13 @@ class EngineConfig:
     queue_dir: str = field(
         default_factory=lambda: _env("QUEUE_DIR", "./storage/queue")
     )
-    log_level: str = field(default_factory=lambda: _env("LOG_LEVEL", "WARN"))
     max_files_per_trigger: int = field(
         default_factory=lambda: _env_int("MAX_FILES_PER_TRIGGER", 8)
     )
     http_retries: int = field(default_factory=lambda: _env_int("HTTP_RETRIES", 3))
-    #: compat flags reproducing lossy reference behaviors (SURVEY §7 Phase 2)
+    #: compat flag reproducing the reference's lossy delete drop
     compat_drop_deletes: bool = field(
         default_factory=lambda: _env("COMPAT_DROP_DELETES", "false") == "true"
-    )
-    compat_decimal_as_double: bool = field(
-        default_factory=lambda: _env("COMPAT_DECIMAL_DOUBLE", "false") == "true"
-    )
-    compat_base64_heuristic: bool = field(
-        default_factory=lambda: _env("COMPAT_BASE64", "false") == "true"
     )
 
 

@@ -97,10 +97,14 @@ def run_pipeline(
     """Start the CDC delivery pipeline.
 
     Default topology: source → delivery frame → HTTP sink (foreachBatch,
-    at-least-once, idempotent). With ``compat_double_delivery`` the
-    reference's second path runs too: payloads are also enqueued and a
-    worker query re-POSTs them (2× delivery, as the reference does when
-    Redis is up — main.go:107 + main.go:411).
+    at-least-once, idempotent). Events that still fail after
+    ``config.http_retries`` retries are dead-lettered to
+    ``<work_dir>/dlq/epoch=<id>`` and the stream keeps running;
+    ``sources.http_sink.replay_dlq`` re-drives them. With
+    ``compat_double_delivery`` the reference's second path runs too:
+    payloads are also enqueued and a worker query re-POSTs them (2×
+    delivery, as the reference does when Redis is up — main.go:107 +
+    main.go:411), dead-lettering to ``<work_dir>/dlq_worker``.
     """
     groups = load_groups(config.table_groups_file)
     changes = stream_change_events(
@@ -110,9 +114,15 @@ def run_pipeline(
         changes, groups, keep_deletes=not config.compat_drop_deletes
     )
 
-    poster = http_batch_poster(config.post_url, retries=config.http_retries)
+    def poster(dlq_name: str):
+        return http_batch_poster(
+            config.post_url,
+            os.path.join(work_dir, dlq_name),
+            retries=config.http_retries,
+        )
+
     direct = (
-        delivery.writeStream.foreachBatch(poster)
+        delivery.writeStream.foreachBatch(poster("dlq"))
         .option("checkpointLocation", os.path.join(work_dir, "ckpt_direct"))
         .outputMode("append")
         .start()
@@ -142,7 +152,8 @@ def run_pipeline(
             groups,
         )
         queue_worker = (
-            worker_frame.writeStream.foreachBatch(poster)
+            # its own DLQ: the two queries' epoch ids overlap
+            worker_frame.writeStream.foreachBatch(poster("dlq_worker"))
             .option(
                 "checkpointLocation", os.path.join(work_dir, "ckpt_worker")
             )

@@ -920,6 +920,7 @@ def q_http_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     then returns the server's per-path delivery counts. Exercises per-group
     URL routing, executor-side POSTs, and idempotency keys end-to-end."""
     import http.server
+    import shutil
     import threading
 
     from mysql_cdc_to_http_spark.operators.routing import assign_group
@@ -940,6 +941,7 @@ def q_http_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _Echo)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
+    dlq = tempfile.mkdtemp(prefix="q_http_sink_dlq_")
     try:
         ev = assign_group(
             _flat_events(spark, sf_dir), table_col="tbl"
@@ -955,10 +957,11 @@ def q_http_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("payload"),
             F.concat_ws(":", "tbl", "offset_id").alias("idem_key"),
         )
-        poster = http_batch_poster(f"http://127.0.0.1:{srv.server_port}")
+        poster = http_batch_poster(f"http://127.0.0.1:{srv.server_port}", dlq)
         poster(batch, epoch_id=0)
     finally:
         srv.shutdown()
+        shutil.rmtree(dlq, ignore_errors=True)
     rows = [(p.lstrip("/"), 1) for p in received]
     return (
         spark.createDataFrame(rows, "grp string, one int")

@@ -1,25 +1,30 @@
 """HTTP POST sink — the reference's delivery path (``main.go:105-113``)
-hardened: per-partition parallel POSTs from executors, bounded retry with
-backoff, and an idempotency key per event so an at-least-once retry is
-safe downstream (the reference fire-and-forgets and silently drops on
-error, ``main.go:108-111``).
+hardened: per-partition POSTs from executors, bounded retry with backoff,
+an idempotency key per event so an at-least-once retry is safe
+downstream, and a dead-letter queue (DLQ) where the reference silently
+drops an event on error (``main.go:108-111``).
 
-Streaming wiring is ``writeStream.foreachBatch(http_batch_poster(url))``;
-each micro-batch fans out per group (the URL path suffix, main.go:105)
-and POSTs rows partition-parallel via ``foreachPartition`` — no driver
-collect, no connection per row (one opener per partition).
+Streaming wiring is
+``writeStream.foreachBatch(http_batch_poster(url, dlq_dir))``; each
+micro-batch POSTs every row to ``url/<group>`` (main.go:105's URL suffix)
+partition-parallel, and only the rows that still fail after their
+retries reach the driver, which writes them to ``dlq_dir/epoch=<id>``.
+:func:`replay_dlq` re-drives them through the same partition function.
 """
 
 from __future__ import annotations
 
+import http.client
 import os
+import shutil
+import socket
 import time
 import urllib.error
-import urllib.request
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from urllib.parse import urlsplit
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, functions as F
 
 
 class _KeepAlivePoster:
@@ -42,9 +47,6 @@ class _KeepAlivePoster:
         self._conns: dict[tuple[str, str], object] = {}
 
     def _conn(self, scheme: str, netloc: str):
-        import http.client
-        import socket
-
         base = (
             http.client.HTTPSConnection
             if scheme == "https"
@@ -88,15 +90,11 @@ class _KeepAlivePoster:
         idem_key: str,
         retries: int,
         backoff_s: float,
-        content_type: str = "application/json",
     ) -> None:
-        import http.client
-        from urllib.parse import urlsplit
-
         parts = urlsplit(url)
         path = parts.path or "/"
         headers = {
-            "Content-Type": content_type,
+            "Content-Type": "application/json",
             "Idempotency-Key": idem_key,
         }
         attempt = 0
@@ -139,344 +137,109 @@ class _KeepAlivePoster:
             time.sleep(backoff_s * (2 ** (attempt - 1)))
 
 
-class _TokenBucket:
-    """Per-partition token-bucket rate limiter for the delivery path
-    (X211). ``rps`` tokens refill per second up to ``burst``; ``take``
-    blocks until a token is available. Runs ON EXECUTORS, one bucket
-    per partition — the aggregate egress is therefore rps × active
-    partitions, which is the knob a 1000-executor cluster actually
-    needs (a global limiter would serialize through one host). The
-    sleep happens inside foreachBatch, so a slow endpoint lengthens
-    the micro-batch and Spark's trigger loop backpressures upstream
-    consumption naturally — rate limiting and backpressure are the
-    same mechanism here, like the reference's synchronous post loop
-    (main.go:105-113) but with an explicit, configurable ceiling."""
-
-    def __init__(self, rps: float, burst: float | None = None):
-        import time as _t
-
-        self.rps = float(rps)
-        self.capacity = float(burst if burst is not None else max(rps, 1.0))
-        self.allowance = self.capacity
-        self.last = _t.monotonic()
-
-    def take(self) -> None:
-        import time as _t
-
-        now = _t.monotonic()
-        self.allowance = min(
-            self.capacity, self.allowance + (now - self.last) * self.rps
-        )
-        self.last = now
-        if self.allowance < 1.0:
-            wait = (1.0 - self.allowance) / self.rps
-            _t.sleep(wait)
-            self.last = _t.monotonic()
-            self.allowance = 0.0
-        else:
-            self.allowance -= 1.0
-
-
-def post_rows(
-    url: str,
-    rows: Iterator,
-    payload_col: str = "payload",
-    key_col: str = "idem_key",
-    retries: int = 3,
-    backoff_s: float = 0.2,
-    timeout_s: float = 5.0,
-    rate_rps: float | None = None,
-    rate_burst: float | None = None,
-    bucket: "_TokenBucket | None" = None,
-) -> None:
-    """Executor-side partition POST loop. Runs on workers — must not touch
-    driver state. Retries with exponential backoff; raises after final
-    failure so the task (and micro-batch) retries rather than silently
-    dropping the event like the reference does.
-
-    Shares :class:`_KeepAlivePoster`'s retry loop (ADVICE r7): permanent
-    4xx responses (except 408/429) raise immediately instead of burning
-    retries×backoff on a poison row that can never succeed; the
-    idempotency key is the table+offset binlog-position analog. One
-    keep-alive connection serves the whole partition (round 8).
-
-    ``bucket`` lets the caller share one limiter across multiple
-    ``post_rows`` calls (one per partition, not per group — round-9
-    advice); when omitted, ``rate_rps`` builds a fresh one here."""
-    poster = _KeepAlivePoster(timeout_s)
-    if bucket is None and rate_rps:
-        bucket = _TokenBucket(rate_rps, rate_burst)
-    try:
-        for row in rows:
-            if bucket is not None:
-                bucket.take()
-            poster.post(
-                url,
-                row[payload_col].encode("utf-8"),
-                str(row[key_col]),
-                retries,
-                backoff_s,
-            )
-    finally:
-        poster.close()
-
-
-def http_batch_poster(
-    base_url: str,
-    group_col: str = "grp",
-    payload_col: str = "payload",
-    key_col: str = "idem_key",
-    rate_rps: float | None = None,
-    rate_burst: float | None = None,
-    retries: int = 3,
-):
-    """foreachBatch body: route each group to ``base_url/<group>`` and POST
-    its rows partition-parallel (main.go:105's URL suffix semantics).
-    ``rate_rps`` caps each PARTITION's egress with a token bucket
-    (see :class:`_TokenBucket`) — aggregate ceiling = rps × partitions.
-    ``retries`` is each row's retry budget (``HTTP_RETRIES``)."""
-
-    def _post(batch_df: DataFrame, epoch_id: int) -> None:
-        base = base_url.rstrip("/")
-        sel = batch_df.select(group_col, payload_col, key_col)
-
-        def _route_partition(it: Iterator) -> None:
-            # ONE scan of the micro-batch: bucket rows by group inside
-            # the partition and POST each bucket to its URL (the old
-            # per-group filter re-scanned the batch G times). Buffering
-            # is bounded by partition size — micro-batch partitions are
-            # small by construction (maxFilesPerTrigger/maxOffsets).
-            buckets: dict[object, list] = {}
-            for row in it:
-                buckets.setdefault(row[group_col], []).append(row)
-            # ONE token bucket for the whole partition, shared across
-            # every group's post_rows call — the documented ceiling is
-            # rps × active partitions; a per-(partition, group) bucket
-            # would under-enforce it by a factor of G and grant a fresh
-            # burst per group (round-9 advice, medium).
-            limiter = _TokenBucket(rate_rps, rate_burst) if rate_rps else None
-            for grp, rows in buckets.items():
-                post_rows(
-                    f"{base}/{grp}",
-                    iter(rows),
-                    payload_col,
-                    key_col,
-                    retries=retries,
-                    bucket=limiter,
-                )
-
-        sel.foreachPartition(_route_partition)
-
-    return _post
-
-
-
 DLQ_SCHEMA = (
     "grp string, payload string, idem_key string, error string, "
     "attempts int"
 )
 
-
-def _post_one(
-    url: str,
-    body: bytes,
-    idem_key: str,
-    retries: int,
-    backoff_s: float,
-    timeout_s: float,
-) -> None:
-    """Single-shot POST with the sink's retry contract (permanent 4xx
-    fail-fast, bounded backoff otherwise) — a one-row
-    :class:`_KeepAlivePoster`. Partition loops should hold a poster
-    instead of calling this per row."""
-    poster = _KeepAlivePoster(timeout_s)
-    try:
-        poster.post(url, body, idem_key, retries, backoff_s)
-    finally:
-        poster.close()
+#: first retry's backoff, doubled per further retry
+_BACKOFF_S = 0.2
+_TIMEOUT_S = 5.0
 
 
-def http_batch_poster_with_dlq(
-    base_url: str,
-    dlq_dir: str,
-    group_col: str = "grp",
-    payload_col: str = "payload",
-    key_col: str = "idem_key",
-    retries: int = 3,
-    backoff_s: float = 0.05,
-    timeout_s: float = 5.0,
-    parallelism: int | None = None,
-    batch_size: int | None = None,
-):
-    """foreachBatch body with a DEAD-LETTER QUEUE: events that still fail
-    after the bounded retries land in ``dlq_dir/epoch=<id>/`` as parquet
-    (payload + idempotency key + last error) instead of failing the
-    micro-batch — delivery of the healthy events proceeds, and the
-    poisoned ones stay replayable (:func:`replay_dlq`).
+def _deliver(base_url: str, retries: int) -> Callable[[Iterator], Iterator]:
+    """Partition function of every delivery: POST each
+    ``(grp, payload, idem_key, attempts)`` row to ``base_url/<grp>``
+    with ``retries`` retries, and yield the rows that still fail as
+    :data:`DLQ_SCHEMA` tuples (``attempts`` counts earlier runs too).
+    Runs on executors — must not touch driver state."""
+    base = base_url.rstrip("/")
 
-    Tradeoff vs :func:`http_batch_poster` (fail-the-batch): the DLQ form
-    trades at-least-once-ALL for at-least-once-each-eventually — the
-    right call when one poisoned endpoint must not stall the stream
-    (the reference silently DROPS on error, main.go:108-111; the DLQ
-    keeps the reference's don't-stall behavior without the data loss).
-    Exactly-once effect on replayed batches: the epoch-keyed overwrite
-    makes re-executed micro-batches idempotent in the DLQ, and
-    downstream dedup on the idempotency key absorbs double POSTs.
-    Scale shape: delivery runs inside ``mapInPandas`` on executors
-    (Arrow batches, no driver collect); only failures are materialized,
-    and the DLQ write is an ordinary parquet sink. Each partition holds
-    ONE keep-alive connection per endpoint host for its whole Arrow
-    stream (round 8 — per-row connection setup capped throughput at
-    ~600 rows/s). ``parallelism`` repartitions the micro-batch before
-    delivery: micro-batch partitioning follows SOURCE file layout
-    (often 1 file = 1 partition), which says nothing about how many
-    concurrent HTTP streams the endpoint can absorb — set it to the
-    delivery concurrency you want; None keeps the source layout.
+    def deliver(rows: Iterator) -> Iterator[tuple]:
+        # ONE scan of the partition: bucket rows by group, then POST
+        # each bucket to its URL. Buffering is bounded by partition
+        # size — micro-batch partitions are small by construction
+        # (maxFilesPerTrigger).
+        buckets: dict[str, list] = {}
+        for row in rows:
+            buckets.setdefault(row[0], []).append(row)
+        # one keep-alive connection serves the whole partition
+        poster = _KeepAlivePoster(_TIMEOUT_S)
+        try:
+            for grp, group_rows in buckets.items():
+                url = f"{base}/{grp}"
+                for _, payload, key, attempts in group_rows:
+                    try:
+                        poster.post(
+                            url, payload.encode("utf-8"), key, retries,
+                            _BACKOFF_S,
+                        )
+                    except (http.client.HTTPException, OSError) as exc:
+                        yield (
+                            grp,
+                            payload,
+                            key,
+                            f"{type(exc).__name__}: {exc}"[:500],
+                            attempts + retries + 1,
+                        )
+        finally:
+            poster.close()
 
-    ``batch_size`` (opt-in, round-10 verdict #6): coalesce up to that
-    many same-group rows into ONE NDJSON POST (newline-joined payloads,
-    ``application/x-ndjson``). Per-row POST stays the default — it is
-    the reference's wire contract (main.go:107) — but the per-row form
-    is request-round-trip-bound (the slowest stream lane by ~5×), and a
-    batch amortizes that round trip across its members. Batch
-    composition is DETERMINISTIC under micro-batch replay: rows sort by
-    idempotency key inside each (partition, group) before chunking, so
-    the same row set always forms the same batches, and the per-batch
-    idempotency key is the md5 of the member keys — downstream dedup
-    sees a stable identity for the whole batch exactly as it does for a
-    row. Failure granularity is preserved: a batch that still fails
-    after retries dead-letters its member ROWS individually (original
-    payload + per-row key), so ``replay_dlq`` and the poison-endpoint
-    convergence semantics are unchanged — replay re-POSTs per row."""
+    return deliver
+
+
+def http_batch_poster(base_url: str, dlq_dir: str, retries: int = 3):
+    """foreachBatch body: POST each row to ``base_url/<group>``, retrying
+    each ``retries`` times (``HTTP_RETRIES``); rows that still fail are
+    dead-lettered to ``dlq_dir/epoch=<id>/`` as parquet (payload,
+    idempotency key, last error) instead of failing the micro-batch, so
+    one poisoned endpoint cannot stall the stream and its events stay
+    replayable (:func:`replay_dlq`).
+
+    Exactly-once effect on re-executed micro-batches (Structured
+    Streaming's epoch-keyed idempotent sink): the epoch directory is
+    overwritten, or deleted when the re-run has no failures, and
+    downstream dedup on the idempotency key absorbs double POSTs. Only
+    failures reach the driver; a healthy batch is one Spark job and
+    writes nothing."""
+    deliver = _deliver(base_url, retries)
+    root = dlq_dir.rstrip("/")
 
     def _post(batch_df: DataFrame, epoch_id: int) -> None:
-        base = base_url.rstrip("/")
-        sel = batch_df.select(group_col, payload_col, key_col)
-        if parallelism:
-            sel = sel.repartition(parallelism)
-
-        def _deliver(pdfs):
-            import hashlib
-
-            import pandas as pd
-
-            poster = _KeepAlivePoster(timeout_s)
-
-            def _fail_rows(rows, exc):
-                return [
-                    {
-                        "grp": grp,
-                        "payload": payload,
-                        "idem_key": str(key),
-                        "error": f"{type(exc).__name__}: {exc}"[:500],
-                        "attempts": retries + 1,
-                    }
-                    for grp, payload, key in rows
-                ]
-
-            try:
-                for pdf in pdfs:
-                    fails: list[dict] = []
-                    if batch_size:
-                        # deterministic batches: sort by idem_key within
-                        # each group, then chunk — same row set, same
-                        # batches, same per-batch keys, on every replay
-                        for grp, g in pdf.groupby(group_col, sort=True):
-                            g = g.sort_values(key_col, kind="mergesort")
-                            members = list(
-                                zip(
-                                    g[group_col].astype(str),
-                                    g[payload_col].astype(str),
-                                    g[key_col].astype(str),
-                                )
-                            )
-                            url = f"{base}/{grp}"
-                            for i in range(0, len(members), batch_size):
-                                chunk = members[i : i + batch_size]
-                                body = "\n".join(
-                                    p for _, p, _ in chunk
-                                ).encode("utf-8")
-                                bkey = "b-" + hashlib.md5(
-                                    "\n".join(k for _, _, k in chunk).encode()
-                                ).hexdigest()
-                                try:
-                                    poster.post(
-                                        url,
-                                        body,
-                                        bkey,
-                                        retries,
-                                        backoff_s,
-                                        content_type="application/x-ndjson",
-                                    )
-                                except Exception as exc:  # noqa: BLE001
-                                    fails.extend(_fail_rows(chunk, exc))
-                    else:
-                        for _, row in pdf.iterrows():
-                            url = f"{base}/{row[group_col]}"
-                            try:
-                                poster.post(
-                                    url,
-                                    str(row[payload_col]).encode("utf-8"),
-                                    str(row[key_col]),
-                                    retries,
-                                    backoff_s,
-                                )
-                            except Exception as exc:  # noqa: BLE001 — poison
-                                fails.extend(
-                                    _fail_rows(
-                                        [
-                                            (
-                                                row[group_col],
-                                                row[payload_col],
-                                                str(row[key_col]),
-                                            )
-                                        ],
-                                        exc,
-                                    )
-                                )
-                    yield pd.DataFrame(
-                        fails,
-                        columns=[
-                            "grp", "payload", "idem_key", "error", "attempts",
-                        ],
-                    )
-            finally:
-                poster.close()
-
-        failures = sel.mapInPandas(_deliver, schema=DLQ_SCHEMA)
-        failures.write.mode("overwrite").parquet(
-            f"{dlq_dir.rstrip('/')}/epoch={int(epoch_id)}"
+        fails = (
+            batch_df.select(
+                "grp", "payload", "idem_key", F.lit(0).alias("attempts")
+            )
+            .rdd.mapPartitions(deliver)
+            .collect()
         )
+        epoch_dir = f"{root}/epoch={int(epoch_id)}"
+        if fails:
+            batch_df.sparkSession.createDataFrame(
+                fails, DLQ_SCHEMA
+            ).write.mode("overwrite").parquet(epoch_dir)
+        elif os.path.isdir(epoch_dir):
+            shutil.rmtree(epoch_dir)
 
     return _post
 
 
-def replay_dlq(
-    spark,
-    dlq_dir: str,
-    base_url: str,
-    retries: int = 3,
-    backoff_s: float = 0.05,
-    timeout_s: float = 5.0,
-) -> int:
+def replay_dlq(spark, dlq_dir: str, base_url: str, retries: int = 3) -> int:
     """Re-POST every dead-lettered event; returns how many STILL fail.
 
     CONVERGENT replays: after delivery, each epoch directory is
     REWRITTEN with only its still-failing rows (attempts incremented),
     and fully-drained epochs are deleted — so a delivered event is
     never re-POSTed by the next replay and repeated invocations
-    monotonically shrink the DLQ to empty. (The pre-round-7 form
-    re-sent every row forever and leaned entirely on downstream
-    idempotency-key dedup; keys are still preserved, so the dedup
-    remains a second line of defense for the replay that crashes
-    between POST and rewrite.)"""
+    monotonically shrink the DLQ to empty. Keys are preserved, so
+    downstream idempotency-key dedup remains a second line of defense
+    for the replay that crashes between POST and rewrite."""
     import glob as _glob
-    import shutil as _shutil
 
     root = dlq_dir.rstrip("/")
-    # Crash recovery (ADVICE r7+r8): scratch dirs are named so the
-    # 'epoch=*' discovery glob can never match them ('_replay_tmp_…'
-    # sorts outside the pattern). Two crash positions exist:
+    # Crash recovery: scratch dirs are named so the 'epoch=*' discovery
+    # glob can never match them ('_replay_tmp_…' sorts outside the
+    # pattern). Two crash positions exist:
     #  - before the rmtree(epoch): the epoch dir is intact and
     #    authoritative, so the scratch is a discardable duplicate;
     #  - between rmtree(epoch) and os.replace(tmp, epoch): the scratch
@@ -486,80 +249,46 @@ def replay_dlq(
     for stale in _glob.glob(f"{root}/_replay_tmp_epoch=*"):
         orig = f"{root}/{os.path.basename(stale)[len('_replay_tmp_'):]}"
         if os.path.isdir(orig):
-            _shutil.rmtree(stale, ignore_errors=True)
+            shutil.rmtree(stale, ignore_errors=True)
         else:
             os.replace(stale, orig)
     # Only COMMITTED epochs are replayable: a replay racing live
-    # ingestion (r8 verdict #8) can glob an epoch dir the poster is
-    # still writing; without this gate the replay would read a partial
-    # parquet dir and then REWRITE the epoch with only the rows it saw
-    # — losing whatever the poster committed after the read. Parquet's
-    # _SUCCESS marker is written at job commit, so gating on it makes
-    # replay and ingestion safely concurrent (an uncommitted epoch is
-    # simply picked up by the next replay cycle). Our own rewrites go
-    # through the same parquet writer, so shrunk epochs stay eligible.
+    # ingestion can glob an epoch dir the poster is still writing;
+    # without this gate the replay would read a partial parquet dir and
+    # then REWRITE the epoch with only the rows it saw — losing whatever
+    # the poster committed after the read. Parquet's _SUCCESS marker is
+    # written at job commit, so gating on it makes replay and ingestion
+    # safely concurrent (an uncommitted epoch is simply picked up by the
+    # next replay cycle). Our own rewrites go through the same parquet
+    # writer, so shrunk epochs stay eligible.
     paths = sorted(
         p
         for p in _glob.glob(f"{root}/epoch=*")
         if os.path.exists(os.path.join(p, "_SUCCESS"))
     )
-    if not paths:
-        return 0
-    base = base_url.rstrip("/")
-
-    def _redeliver(pdfs):
-        import pandas as pd
-
-        poster = _KeepAlivePoster(timeout_s)
-        try:
-            for pdf in pdfs:
-                fails: list[dict] = []
-                for _, row in pdf.iterrows():
-                    try:
-                        poster.post(
-                            f"{base}/{row['grp']}",
-                            str(row["payload"]).encode("utf-8"),
-                            str(row["idem_key"]),
-                            retries,
-                            backoff_s,
-                        )
-                    except Exception as exc:  # noqa: BLE001 — still poison
-                        fails.append(
-                            {
-                                "grp": row["grp"],
-                                "payload": row["payload"],
-                                "idem_key": row["idem_key"],
-                                "error": f"{type(exc).__name__}: {exc}"[:500],
-                                "attempts": (
-                                    int(row["attempts"]) + retries + 1
-                                ),
-                            }
-                        )
-                yield pd.DataFrame(
-                    fails,
-                    columns=[
-                        "grp", "payload", "idem_key", "error", "attempts",
-                    ],
-                )
-        finally:
-            poster.close()
-
+    deliver = _deliver(base_url, retries)
     n_fail_total = 0
     for path in paths:
-        df = spark.read.schema(DLQ_SCHEMA).parquet(path)
-        still = df.mapInPandas(_redeliver, schema=DLQ_SCHEMA)
-        tmp = f"{root}/_replay_tmp_{os.path.basename(path)}"
-        still.write.mode("overwrite").parquet(tmp)
-        n_fail = spark.read.schema(DLQ_SCHEMA).parquet(tmp).count()
-        n_fail_total += n_fail
+        fails = (
+            spark.read.schema(DLQ_SCHEMA)
+            .parquet(path)
+            .select("grp", "payload", "idem_key", "attempts")
+            .rdd.mapPartitions(deliver)
+            .collect()
+        )
+        n_fail_total += len(fails)
         # swap: the epoch dir now holds ONLY rows that still fail;
         # a drained epoch disappears entirely
-        _shutil.rmtree(path, ignore_errors=True)
-        if n_fail > 0:
+        if fails:
+            tmp = f"{root}/_replay_tmp_{os.path.basename(path)}"
+            spark.createDataFrame(fails, DLQ_SCHEMA).write.mode(
+                "overwrite"
+            ).parquet(tmp)
+            shutil.rmtree(path, ignore_errors=True)
             os.replace(tmp, path)
         else:
-            _shutil.rmtree(tmp, ignore_errors=True)
-    return int(n_fail_total)
+            shutil.rmtree(path, ignore_errors=True)
+    return n_fail_total
 
 
 # Executors must not need this repo on their PYTHONPATH: register this

@@ -5,6 +5,7 @@ reference-compat (double-delivery) topologies."""
 from __future__ import annotations
 
 import http.server
+import os
 import threading
 
 from collections import Counter
@@ -147,7 +148,7 @@ def test_http_dlq_quarantines_poison_and_replays(spark, tmp_path):
     batch; healthy events deliver; replay after heal converges to zero
     failures with the ORIGINAL idempotency keys."""
     from mysql_cdc_to_http_spark.sources.http_sink import (
-        http_batch_poster_with_dlq,
+        http_batch_poster,
         replay_dlq,
     )
 
@@ -164,9 +165,7 @@ def test_http_dlq_quarantines_poison_and_replays(spark, tmp_path):
             rows, "grp string, payload string, idem_key string"
         )
         dlq = str(tmp_path / "dlq")
-        poster = http_batch_poster_with_dlq(
-            base, dlq, retries=1, backoff_s=0.01
-        )
+        poster = http_batch_poster(base, dlq, retries=1)
         poster(batch, epoch_id=0)
         delivered = {k for _, k in _FlakySink.hits}
         assert delivered == {f"k{i}" for i in range(6)}
@@ -185,6 +184,10 @@ def test_http_dlq_quarantines_poison_and_replays(spark, tmp_path):
         _FlakySink.healed = False
         poster(batch, epoch_id=0)
         assert spark.read.parquet(f"{dlq}/epoch=0").count() == 3
+        # a re-run with no failures removes the epoch's stale dead letters
+        _FlakySink.healed = True
+        poster(batch, epoch_id=0)
+        assert not os.path.exists(f"{dlq}/epoch=0")
     finally:
         srv.shutdown()
 
@@ -195,7 +198,7 @@ def test_replay_dlq_prunes_delivered_rows(spark, tmp_path):
     deleted), so a delivered event is never re-POSTed by the next
     replay."""
     from mysql_cdc_to_http_spark.sources.http_sink import (
-        http_batch_poster_with_dlq,
+        http_batch_poster,
         replay_dlq,
     )
 
@@ -210,7 +213,7 @@ def test_replay_dlq_prunes_delivered_rows(spark, tmp_path):
             "grp string, payload string, idem_key string",
         )
         dlq = str(tmp_path / "dlq")
-        http_batch_poster_with_dlq(base, dlq, retries=0)(batch, epoch_id=5)
+        http_batch_poster(base, dlq, retries=0)(batch, epoch_id=5)
         assert spark.read.parquet(f"{dlq}/epoch=5").count() == 3
         # still poisoned: all fail, epoch rewritten with attempts bumped
         assert replay_dlq(spark, dlq, base, retries=0) == 3
@@ -246,65 +249,27 @@ class _PermanentReject(http.server.BaseHTTPRequestHandler):
         pass
 
 
-def test_post_one_does_not_retry_permanent_4xx():
-    """ADVICE r6: permanent 4xx (here 404) must fail IMMEDIATELY — one
-    attempt, no backoff stall — while 5xx still consumes the retry
-    budget."""
-    import pytest
+@pytest.mark.parametrize("code,attempts", [(404, 1), (500, 3), (429, 3)])
+def test_keepalive_poster_does_not_retry_permanent_4xx(code, attempts):
+    """Permanent 4xx (here 404) fails IMMEDIATELY — one attempt, no
+    backoff stall — while 5xx and the 429 throttle consume the whole
+    retry budget (1 + retries attempts)."""
     import urllib.error
 
-    from mysql_cdc_to_http_spark.sources.http_sink import _post_one
+    from mysql_cdc_to_http_spark.sources.http_sink import _KeepAlivePoster
 
     _PermanentReject.attempts = 0
-    _PermanentReject.code = 404
+    _PermanentReject.code = code
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _PermanentReject)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
+    poster = _KeepAlivePoster(timeout_s=2)
     try:
         url = f"http://127.0.0.1:{srv.server_port}/x"
         with pytest.raises(urllib.error.HTTPError):
-            _post_one(url, b"{}", "k1", retries=3, backoff_s=0.01, timeout_s=2)
-        assert _PermanentReject.attempts == 1  # no retries burned
-        # 500 IS retryable: full budget consumed
-        _PermanentReject.attempts = 0
-        _PermanentReject.code = 500
-        with pytest.raises(urllib.error.HTTPError):
-            _post_one(url, b"{}", "k2", retries=2, backoff_s=0.01, timeout_s=2)
-        assert _PermanentReject.attempts == 3  # 1 + 2 retries
-        # 429 throttle is retryable too
-        _PermanentReject.attempts = 0
-        _PermanentReject.code = 429
-        with pytest.raises(urllib.error.HTTPError):
-            _post_one(url, b"{}", "k3", retries=1, backoff_s=0.01, timeout_s=2)
-        assert _PermanentReject.attempts == 2
+            poster.post(url, b"{}", "k1", retries=2, backoff_s=0.01)
+        assert _PermanentReject.attempts == attempts
     finally:
-        srv.shutdown()
-
-
-def test_post_rows_does_not_retry_permanent_4xx():
-    """ADVICE r7: the primary foreachBatch sink loop (post_rows) shares
-    _post_one's 4xx fail-fast — a 404 poison row costs ONE attempt, not
-    retries×backoff, while 5xx still consumes the retry budget."""
-    import pytest
-    import urllib.error
-
-    from mysql_cdc_to_http_spark.sources.http_sink import post_rows
-
-    _PermanentReject.attempts = 0
-    _PermanentReject.code = 404
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _PermanentReject)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        url = f"http://127.0.0.1:{srv.server_port}/x"
-        rows = [{"payload": "{}", "idem_key": "k1"}]
-        with pytest.raises(urllib.error.HTTPError):
-            post_rows(url, iter(rows), retries=3, backoff_s=0.01, timeout_s=2)
-        assert _PermanentReject.attempts == 1  # no retries burned
-        _PermanentReject.attempts = 0
-        _PermanentReject.code = 500
-        with pytest.raises(urllib.error.HTTPError):
-            post_rows(url, iter(rows), retries=2, backoff_s=0.01, timeout_s=2)
-        assert _PermanentReject.attempts == 3  # 1 + 2 retries
-    finally:
+        poster.close()
         srv.shutdown()
 
 
@@ -317,7 +282,7 @@ def test_replay_dlq_ignores_and_sweeps_stale_tmp(spark, tmp_path):
     import shutil
 
     from mysql_cdc_to_http_spark.sources.http_sink import (
-        http_batch_poster_with_dlq,
+        http_batch_poster,
         replay_dlq,
     )
 
@@ -332,7 +297,7 @@ def test_replay_dlq_ignores_and_sweeps_stale_tmp(spark, tmp_path):
             "grp string, payload string, idem_key string",
         )
         dlq = str(tmp_path / "dlq")
-        http_batch_poster_with_dlq(base, dlq, retries=0)(batch, epoch_id=2)
+        http_batch_poster(base, dlq, retries=0)(batch, epoch_id=2)
         # simulate the crash window: a stale scratch dir with the SAME
         # rows sits next to the intact epoch dir
         shutil.copytree(f"{dlq}/epoch=2", f"{dlq}/_replay_tmp_epoch=2")
@@ -359,7 +324,7 @@ def test_replay_dlq_promotes_orphan_tmp(spark, tmp_path):
     import shutil
 
     from mysql_cdc_to_http_spark.sources.http_sink import (
-        http_batch_poster_with_dlq,
+        http_batch_poster,
         replay_dlq,
     )
 
@@ -374,7 +339,7 @@ def test_replay_dlq_promotes_orphan_tmp(spark, tmp_path):
             "grp string, payload string, idem_key string",
         )
         dlq = str(tmp_path / "dlq")
-        http_batch_poster_with_dlq(base, dlq, retries=0)(batch, epoch_id=7)
+        http_batch_poster(base, dlq, retries=0)(batch, epoch_id=7)
         # simulate the post-rmtree crash: epoch dir GONE, scratch is the
         # sole survivor
         shutil.move(f"{dlq}/epoch=7", f"{dlq}/_replay_tmp_epoch=7")
@@ -444,7 +409,7 @@ def test_replay_dlq_skips_uncommitted_epoch(spark, tmp_path):
     import os
 
     from mysql_cdc_to_http_spark.sources.http_sink import (
-        http_batch_poster_with_dlq,
+        http_batch_poster,
         replay_dlq,
     )
 
@@ -460,7 +425,7 @@ def test_replay_dlq_skips_uncommitted_epoch(spark, tmp_path):
         )
         dlq = str(tmp_path / "dlq")
         _FlakySink.healed = False
-        http_batch_poster_with_dlq(base, dlq, retries=0)(batch, epoch_id=3)
+        http_batch_poster(base, dlq, retries=0)(batch, epoch_id=3)
         # simulate a mid-write epoch: committed data, _SUCCESS removed
         os.remove(f"{dlq}/epoch=3/_SUCCESS")
         _FlakySink.healed = True
@@ -476,210 +441,42 @@ def test_replay_dlq_skips_uncommitted_epoch(spark, tmp_path):
         srv.shutdown()
 
 
-def test_http_sink_token_bucket_rate_limit(spark):
-    """X211: a rate-limited poster paces its partition to ~rate_rps
-    (after the burst) and still delivers every row; the unlimited path
-    is unaffected. The limiter is executor-side, so pacing lengthens
-    the foreachBatch call — which is exactly how it backpressures the
-    trigger loop."""
-    import time
-
-    from pyspark.sql import Row
-
-    from mysql_cdc_to_http_spark.sources.http_sink import (
-        http_batch_poster,
-        post_rows,
-    )
-
-    _Sink.hits = []
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _Sink)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        base = f"http://127.0.0.1:{srv.server_port}"
-        n = 40
-        rows = [
-            Row(grp="g", payload='{"i": %d}' % i, idem_key=f"k{i}")
-            for i in range(n)
-        ]
-        # Pacing is asserted at the post_rows level — driverless, so the
-        # timing has no Spark job-scheduling noise (the old Spark-level
-        # relative compare flaked under full-suite load, where ~8 s of
-        # ambient job overhead swamped the 0.7 s pacing delta).
-        # burst 5, 50 rps: 40 rows need >= (40-5)/50 = 0.7 s
-        t0 = time.perf_counter()
-        post_rows(f"{base}/g", iter(rows), rate_rps=50, rate_burst=5)
-        limited = time.perf_counter() - t0
-        assert sorted(k for _, k in _Sink.hits) == sorted(
-            f"k{i}" for i in range(n)
-        )
-        assert limited >= 0.6, limited  # paced (scheduling slack aside)
-
-        _Sink.hits = []
-        t1 = time.perf_counter()
-        post_rows(f"{base}/g", iter(rows))
-        unlimited = time.perf_counter() - t1
-        assert len(_Sink.hits) == n
-        # No pacing on the default path: compare against the LIMITED run
-        # instead of an absolute wall-clock ceiling — 40 POSTs through a
-        # ThreadingHTTPServer under full-suite CPU contention can blow
-        # any absolute bound, but ambient load hits both runs, and the
-        # limited run carries >= 0.7 s of deliberate sleep the unlimited
-        # one must lack (round-10 advice).
-        assert unlimited < limited, (unlimited, limited)
-
-        # ONE bucket per PARTITION, not per (partition, group): the same
-        # 40 rows split across 4 groups must pace identically through the
-        # real foreachBatch path — a per-group bucket would grant 4
-        # bursts and 4×rps, finishing in ~(10-5)/50 = 0.1 s of pacing
-        # (round-9 advice, medium). Lower-bound asserts only: ambient
-        # Spark load can only ADD time, never remove the bucket's sleep.
-        _Sink.hits = []
-        multi = spark.createDataFrame(
-            [("g%d" % (i % 4), '{"i": %d}' % i, f"k{i}") for i in range(n)],
-            "grp string, payload string, idem_key string",
-        ).coalesce(1)
-        t2 = time.perf_counter()
-        http_batch_poster(base, rate_rps=50, rate_burst=5)(multi, 2)
-        multi_grp = time.perf_counter() - t2
-        assert len(_Sink.hits) == n
-        assert multi_grp >= 0.6, multi_grp  # still rps × partitions
-    finally:
-        srv.shutdown()
-
-
-class _NdjsonSink(http.server.BaseHTTPRequestHandler):
-    """Records (path, idem_key, body_lines, content_type); /poison 500s
-    until healed."""
-
-    requests: list[tuple[str, str, list[str], str]] = []
-    healed = False
-
-    def do_POST(self):  # noqa: N802
-        body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
-        if self.path.endswith("/poison") and not type(self).healed:
-            self.send_response(500)
-            self.end_headers()
-            return
-        type(self).requests.append(
-            (
-                self.path,
-                self.headers.get("Idempotency-Key", ""),
-                body.decode("utf-8").split("\n"),
-                self.headers.get("Content-Type", ""),
-            )
-        )
-        self.send_response(200)
-        self.end_headers()
-        self.wfile.write(b"{}")
-
-    def log_message(self, *a):
-        pass
-
-
-def test_http_dlq_ndjson_batch_mode(spark, tmp_path):
-    """Round-10 verdict #6 — opt-in NDJSON batching: same-group rows
-    coalesce into one application/x-ndjson POST with a deterministic
-    per-batch idempotency key (md5 of the key-sorted member keys);
-    failed batches dead-letter their member ROWS individually so
-    replay_dlq semantics are unchanged; re-running the same epoch
-    produces byte-identical batches and keys."""
-    import hashlib
-
-    from mysql_cdc_to_http_spark.sources.http_sink import (
-        http_batch_poster_with_dlq,
-        replay_dlq,
-    )
-
-    _NdjsonSink.requests = []
-    _NdjsonSink.healed = False
-    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _NdjsonSink)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    try:
-        base = f"http://127.0.0.1:{srv.server_port}"
-        ok_rows = [("ok", '{"id": %d}' % i, f"k{i}") for i in range(7)]
-        poison_rows = [
-            ("poison", '{"id": %d}' % i, f"p{i}") for i in range(3)
-        ]
-        batch = spark.createDataFrame(
-            ok_rows + poison_rows,
-            "grp string, payload string, idem_key string",
-        ).coalesce(1)
-        dlq = str(tmp_path / "dlq")
-        poster = http_batch_poster_with_dlq(
-            base, dlq, retries=0, backoff_s=0.01, batch_size=4
-        )
-        poster(batch, epoch_id=0)
-        # 7 ok rows in batches of 4 → 2 requests (4 + 3 lines), NDJSON
-        ok_reqs = [r for r in _NdjsonSink.requests if r[0].endswith("/ok")]
-        assert sorted(len(r[2]) for r in ok_reqs) == [3, 4]
-        assert all(ct == "application/x-ndjson" for *_, ct in ok_reqs)
-        got_payloads = sorted(line for r in ok_reqs for line in r[2])
-        assert got_payloads == sorted(p for _, p, _ in ok_rows)
-        # deterministic batch identity: md5 over the key-sorted chunk
-        keys = sorted(k for _, _, k in ok_rows)
-        want_keys = {
-            "b-" + hashlib.md5("\n".join(keys[i : i + 4]).encode()).hexdigest()
-            for i in range(0, len(keys), 4)
-        }
-        assert {r[1] for r in ok_reqs} == want_keys
-        # poison batch dead-letters its member ROWS (per-row payload+key)
-        dead = spark.read.parquet(f"{dlq}/epoch=0").collect()
-        assert sorted(r["idem_key"] for r in dead) == ["p0", "p1", "p2"]
-        assert sorted(r["payload"] for r in dead) == sorted(
-            p for _, p, _ in poison_rows
-        )
-        # replay is per-row and converges after heal — unchanged contract
-        _NdjsonSink.healed = True
-        assert replay_dlq(spark, dlq, base, retries=0) == 0
-        import glob
-
-        assert glob.glob(f"{dlq}/epoch=*") == []
-        # replayed rows arrive individually with their ORIGINAL keys
-        poison_reqs = [
-            r for r in _NdjsonSink.requests if r[0].endswith("/poison")
-        ]
-        assert {r[1] for r in poison_reqs} == {"p0", "p1", "p2"}
-        # same epoch re-run → identical batch keys (replay determinism)
-        _NdjsonSink.requests = []
-        poster(batch, epoch_id=0)
-        ok_reqs2 = [r for r in _NdjsonSink.requests if r[0].endswith("/ok")]
-        assert {r[1] for r in ok_reqs2} == want_keys
-    finally:
-        srv.shutdown()
-
-
-def _write_one_file_batches(events_dir, n_files: int, per_file: int) -> int:
-    """``n_files`` envelope files under ``events_dir/data``; returns how
-    many events DEFAULT_GROUPS routes."""
+def _write_one_file_batches(
+    events_dir, n_files: int, per_file: int, first: int = 0
+) -> list[str]:
+    """``n_files`` envelope files under ``events_dir/data``, numbered from
+    ``first``; returns the idempotency keys DEFAULT_GROUPS routes."""
     import json
-    import os
 
     tables = ["orders", "customer", "widgets"]
-    os.makedirs(os.path.join(events_dir, "data"))
-    routed = 0
-    for k in range(n_files):
+    os.makedirs(os.path.join(events_dir, "data"), exist_ok=True)
+    routed = []
+    for k in range(first, first + n_files):
         with open(os.path.join(events_dir, "data", f"{k:03d}.json"), "w") as fh:
             for i in range(per_file):
-                table = tables[i % len(tables)]
-                routed += table != "widgets"
+                table, offset = tables[i % len(tables)], k * per_file + i
+                if table != "widgets":
+                    routed.append(f"{table}:{offset}")
                 fh.write(json.dumps({
                     "after": {"o_orderkey": i}, "source": {"table": table},
-                    "op": "c", "offset": k * per_file + i, "ts_ms": 0,
+                    "op": "c", "offset": offset, "ts_ms": 0,
                 }) + "\n")
     return routed
 
 
 def test_engine_one_spark_job_per_batch(spark, tmp_path, sink_server):
     """Each non-empty micro-batch runs exactly one Spark job: the sink's
-    POST job. Routing adds none (no broadcast of a routing table)."""
+    POST job. Routing adds none (no broadcast of a routing table), and a
+    healthy batch writes no dead letters."""
     base, sink = sink_server
     n_files = 3
     events_dir = str(tmp_path / "events")
-    n_routed = _write_one_file_batches(events_dir, n_files, per_file=6)
+    routed = _write_one_file_batches(events_dir, n_files, per_file=6)
     cfg = EngineConfig(
         post_url=base, table_groups_file=None, max_files_per_trigger=1
     )
-    handles = run_pipeline(spark, cfg, events_dir, str(tmp_path / "w"))
+    work_dir = tmp_path / "w"
+    handles = run_pipeline(spark, cfg, events_dir, str(work_dir))
     handles.process_all_available()
     handles.stop()
     batches = [p for p in handles.direct.recentProgress if p.numInputRows]
@@ -688,7 +485,8 @@ def test_engine_one_spark_job_per_batch(spark, tmp_path, sink_server):
     )
     assert len(batches) == n_files
     assert len(jobs) == n_files
-    assert len(sink.hits) == n_routed
+    assert len(sink.hits) == len(routed)
+    assert not (work_dir / "dlq").exists()
 
 
 class _FailTwice(http.server.BaseHTTPRequestHandler):
@@ -707,32 +505,115 @@ class _FailTwice(http.server.BaseHTTPRequestHandler):
         pass
 
 
+def _dead_letters(spark, dlq_dir) -> list[str]:
+    """Idempotency keys under ``dlq_dir/epoch=*`` (empty if none)."""
+    import glob
+
+    if not glob.glob(f"{dlq_dir}/epoch=*"):
+        return []
+    return [r.idem_key for r in spark.read.parquet(f"{dlq_dir}/epoch=*").collect()]
+
+
 @pytest.mark.parametrize("retries,delivered", [(1, False), (2, True)])
 def test_engine_honours_http_retries(spark, tmp_path, retries, delivered):
     """``EngineConfig.http_retries`` (HTTP_RETRIES) is each row's retry
-    budget in run_pipeline: an endpoint that fails twice needs two."""
-    from pyspark.errors import StreamingQueryException
-
+    budget in run_pipeline: an endpoint that fails twice needs two. An
+    event that exhausts its budget is dead-lettered under
+    ``<work_dir>/dlq`` and the query keeps running."""
     _FailTwice.attempts = Counter()
     srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _FailTwice)
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     try:
         events_dir = str(tmp_path / "events")
-        _write_one_file_batches(events_dir, 1, per_file=1)
+        routed = _write_one_file_batches(events_dir, 1, per_file=1)
         cfg = EngineConfig(
             post_url=f"http://127.0.0.1:{srv.server_port}",
             table_groups_file=None,
             http_retries=retries,
         )
-        handles = run_pipeline(spark, cfg, events_dir, str(tmp_path / "w"))
+        work_dir = tmp_path / "w"
+        handles = run_pipeline(spark, cfg, events_dir, str(work_dir))
         try:
-            if delivered:
-                handles.process_all_available()
-            else:
-                with pytest.raises(StreamingQueryException):
-                    handles.process_all_available()
+            handles.process_all_available()
+            assert handles.direct.isActive
         finally:
             handles.stop()
+        assert handles.direct.exception() is None
         assert list(_FailTwice.attempts.values()) == [1 + retries]
+        dead = _dead_letters(spark, work_dir / "dlq")
+        assert dead == ([] if delivered else routed)
+    finally:
+        srv.shutdown()
+
+
+class _PoisonParties(http.server.BaseHTTPRequestHandler):
+    """Rejects every POST to /grp_parties with 500 until ``healed``."""
+
+    hits: list[tuple[str, str]] = []
+    healed = False
+
+    def do_POST(self):  # noqa: N802
+        self.rfile.read(int(self.headers.get("Content-Length", 0)))
+        if self.path == "/grp_parties" and not type(self).healed:
+            self.send_response(500)
+            self.end_headers()
+            return
+        type(self).hits.append(
+            (self.path, self.headers.get("Idempotency-Key", ""))
+        )
+        self.send_response(200)
+        self.end_headers()
+
+    def log_message(self, *a):
+        pass
+
+
+def test_engine_dead_letters_poison_and_restarts(spark, tmp_path):
+    """The shipped pipeline survives a poisoned group endpoint and a
+    restart with exactly-once effect: healthy events arrive once, poison
+    events wait in ``<work_dir>/dlq``, a restart from the checkpoint
+    re-sends nothing, and a healed replay delivers every routed event."""
+    from mysql_cdc_to_http_spark.sources.http_sink import replay_dlq
+
+    _PoisonParties.hits = []
+    _PoisonParties.healed = False
+    srv = http.server.ThreadingHTTPServer(("127.0.0.1", 0), _PoisonParties)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    try:
+        base = f"http://127.0.0.1:{srv.server_port}"
+        events_dir = str(tmp_path / "events")
+        work_dir = tmp_path / "w"
+        dlq = work_dir / "dlq"
+        cfg = EngineConfig(
+            post_url=base,
+            table_groups_file=None,
+            max_files_per_trigger=1,
+            http_retries=0,
+        )
+
+        def _run_and_check(routed):
+            handles = run_pipeline(spark, cfg, events_dir, str(work_dir))
+            try:
+                handles.process_all_available()
+                assert handles.direct.isActive
+            finally:
+                handles.stop()
+            assert handles.direct.exception() is None
+            healthy = [k for k in routed if k.startswith("orders:")]
+            poison = [k for k in routed if k.startswith("customer:")]
+            counts = Counter(k for _, k in _PoisonParties.hits)
+            assert sorted(counts) == sorted(healthy)
+            assert set(counts.values()) == {1}
+            assert sorted(_dead_letters(spark, dlq)) == sorted(poison)
+
+        routed = _write_one_file_batches(events_dir, 3, per_file=6)
+        _run_and_check(routed)
+        routed += _write_one_file_batches(events_dir, 2, per_file=6, first=3)
+        _run_and_check(routed)
+
+        _PoisonParties.healed = True
+        assert replay_dlq(spark, str(dlq), base, retries=0) == 0
+        assert sorted(k for _, k in _PoisonParties.hits) == sorted(routed)
+        assert _dead_letters(spark, dlq) == []
     finally:
         srv.shutdown()

@@ -65,7 +65,7 @@ def test_reference_double_delivery_topology(spark, sf_dir, tmp_path, counter_ser
         F.concat_ws(":", "tbl", "offset_id").alias("idem_key"),
     )
     n_events = batch.count()
-    poster = http_batch_poster(base)
+    poster = http_batch_poster(base, str(tmp_path / "dlq"))
 
     # delivery path A: direct POST (main.go:105-113)
     poster(batch, epoch_id=0)

@@ -174,7 +174,7 @@ def echo_server():
     srv.shutdown()
 
 
-def test_http_sink_routing_and_retry(spark, echo_server):
+def test_http_sink_routing_and_retry(spark, echo_server, tmp_path):
     """R12: per-group URL routing, idempotency keys, retry on transient
     500 (the reference would drop the event; the engine redelivers)."""
     base, handler = echo_server
@@ -187,7 +187,7 @@ def test_http_sink_routing_and_retry(spark, echo_server):
         "grp string, payload string, idem_key string",
     )
     handler.fail_first_for = {"orders:2"}  # transient failure, then ok
-    poster = http_batch_poster(base)
+    poster = http_batch_poster(base, str(tmp_path / "dlq"))
     poster(df, epoch_id=0)
     paths = sorted(p for p, _, _ in handler.records)
     assert paths == ["/grp_parties", "/grp_sales", "/grp_sales"]
