@@ -5,7 +5,8 @@ Commands:
   pipeline   run the CDC delivery pipeline from EngineConfig env vars
              (POST_URL, QUEUE_DIR, TABLE_GROUPS_FILE, MAX_FILES_PER_TRIGGER,
              HTTP_RETRIES, COMPAT_DROP_DELETES); dead letters land in
-             <work-dir>/dlq
+             <work-dir>/dlq. Without --once, SIGTERM stops the queries
+             and Spark, then exits 0
   queries    list registered queries (oracle-checked marked *)
   run NAME   execute one registered query and show its result
   bench      run the headline bench suite (same as bench.py)
@@ -15,7 +16,9 @@ from __future__ import annotations
 
 import argparse
 import os
+import signal
 import sys
+import threading
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -71,6 +74,11 @@ def main(argv: list[str] | None = None) -> int:
         from mysql_cdc_to_http_spark.config import load_config
         from mysql_cdc_to_http_spark.engine import run_pipeline
 
+        # the handler only sets the event: py4j calls are not safe from a
+        # signal handler, so the main loop below notices it within 1 s
+        stop = threading.Event()
+        if not args.once:
+            signal.signal(signal.SIGTERM, lambda *_: stop.set())
         spark = get_spark(app_name="cdc-pipeline")
         handles = run_pipeline(
             spark,
@@ -81,10 +89,12 @@ def main(argv: list[str] | None = None) -> int:
         )
         if args.once:
             handles.process_all_available()
-            handles.stop()
         else:
-            for q in handles.queries():
-                q.awaitTermination()
+            running = handles.queries()
+            while running and not stop.is_set():
+                if running[0].awaitTermination(1):
+                    running.pop(0)
+        handles.stop()
         spark.stop()
         return 0
 

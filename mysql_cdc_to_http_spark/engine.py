@@ -5,7 +5,7 @@ envelope → routing → sinks, with checkpointed resume.
 Reference lifecycle mapped:
 
 - loadEnv / config            → EngineConfig (config.py)
-- canal.NewCanal + RunFrom    → streaming envelope source (file or Kafka)
+- canal.NewCanal + RunFrom    → streaming envelope file source
 - loadPosition fallback chain → checkpointLocation (offsets tracked by Spark)
 - OnRow hot path              → one declarative plan (filters/coercion/
                                 envelope are column expressions)

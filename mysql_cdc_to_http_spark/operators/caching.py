@@ -9,8 +9,9 @@ OOMs. Eagerly unpersisting inside the operator is not an option: the
 result is lazy, and forcing an action there would both double-execute
 and collapse the plan the tests assert on.
 
-Contract: the operator registers its persisted dependencies
-(``register_cached``); whoever runs the action calls
+Contract, three functions: an operator registers its persisted
+dependencies (``register_cached``) and any module-level memo of
+persisted frames (``register_memo``); whoever runs the action calls
 ``release_all_cached()`` afterwards (bench does, per query). The
 registry is MODULE-GLOBAL, not a DataFrame attribute: callers routinely
 wrap operator results (``.orderBy``/``.select`` return fresh objects),
@@ -68,31 +69,3 @@ def release_all_cached(blocking: bool = False) -> int:
         # the plan object and bounds memo growth across (appId, sf_dir).
         memo.clear()
     return n
-
-
-def release_cached(result: DataFrame, blocking: bool = False) -> None:
-    """Backwards-compatible alias: releases the global registry (the
-    per-object tag this originally read does not survive DataFrame
-    wrapping, so global release is the only shape that works)."""
-    release_all_cached(blocking)
-
-
-from contextlib import contextmanager
-
-
-@contextmanager
-def cache_scope(blocking: bool = False):
-    """Scope-local release: frames registered INSIDE the block are
-    unpersisted on exit; earlier registrations are untouched. This is
-    the precise form for pipelines that interleave operators in one
-    session — a pipeline releasing after materializing its own result
-    no longer evicts frames backing another pipeline's not-yet-run
-    result (the failure mode ``release_cached``'s global semantics
-    accept for serial drivers)."""
-    start = len(_LIVE)
-    try:
-        yield
-    finally:
-        for dep in _LIVE[start:]:
-            dep.unpersist(blocking)
-        del _LIVE[start:]

@@ -61,15 +61,3 @@ def score_tokens(toks: Column) -> Column:
         lambda acc, t: acc + feature_weight(feature_index(t)),
     )
     return total / F.size(toks).cast("double")
-
-
-def classifier_score_sql(text_expr: str = "text") -> str:
-    """DuckDB expression set mirroring the Spark path, for oracles:
-    returns (tokens CTE body hint) — callers embed the canonical
-    tokenization themselves; this documents the weight formula:
-
-    ((('0x' || substr(md5('qc-w1|' || CAST(feature AS VARCHAR)), 1, 6))::INTEGER
-      % 2049) - 1024) / 1024.0
-    where feature = ('0x' || substr(md5('qc-v1|' || tok), 1, 6))::INTEGER % 1024
-    """
-    return text_expr

@@ -110,27 +110,6 @@ def kmeans(
     return assigned.drop("cv")
 
 
-def kmeans_centroids(
-    df: DataFrame,
-    k: int = 16,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
-    """Trained centroids for IVF seeding: run Lloyd iterations and
-    return the FINAL recomputed centroid matrix (k × dim Python lists,
-    driver-sized). Drop-in replacement for
-    ``similarity.sample_centroids`` wherever centroid quality matters —
-    trained centroids partition the corpus into balanced Voronoi cells,
-    so IVF probes at the same nprobe recover more true neighbors than
-    the arbitrary lowest-id seed cells."""
-    cents = sample_centroids(df, k, id_col, vec_col)
-    for _ in range(iters):
-        assigned = assign_clusters(df, cents, id_col, vec_col)
-        cents = recompute_centroids(assigned, k)
-    return cents
-
-
 def product_quantize(
     df: DataFrame,
     m: int = 4,

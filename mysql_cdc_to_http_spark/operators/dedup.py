@@ -89,41 +89,6 @@ def word_shingle_hashes(token_hashes, k: int = 3):
     return F.transform(idx, shingle)
 
 
-def minhash_signature(shingles, n_hashes: int = 64, seed: int = 42):
-    """MinHash signature as an array<long>: for each (a,b) permutation,
-    min over shingle hashes of (a·h+b) mod p.
-
-    Single-pass fold: the accumulator is the whole signature array and
-    each shingle updates all 64 minima via ``zip_with`` against a literal
-    (a,b) parameter array — one scan of the shingle list total. (The
-    naive form — 64 separate ``aggregate`` expressions — re-evaluates the
-    shingle-hash array per permutation: 64× the work, measured 80s+ at
-    sf0.1 vs ~2s for this form.) xxhash64+pmod supplies the base hash
-    (pmod, not abs%: abs(Long.MIN_VALUE) overflows under ANSI mode).
-    """
-    hashes = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
-    return minhash_signature_from_hashes(hashes, n_hashes, seed)
-
-
-def minhash_signature_from_hashes(hashes, n_hashes: int = 64, seed: int = 42):
-    """Signature fold over pre-hashed shingles (array<long> in [0, p))."""
-    params = _hash_params(n_hashes, seed)
-    ab = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in params
-        ]
-    )
-    init = F.array_repeat(F.lit(_MERSENNE).cast("long"), n_hashes)
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc, ab, lambda m, p: F.least(m, (h * p["a"] + p["b"]) % _MERSENNE)
-        ),
-    )
-
-
 def minhash_signature_udf(n_hashes: int = 64, seed: int = 42):
     """Arrow-vectorized signature over pre-hashed shingles: one numpy
     outer product + column-min per row. Measured ~4× faster than the
@@ -466,7 +431,7 @@ def simhash_pairs(
     mask = (1 << width) - 1
     sh = docs.select(F.col(id_col), fingerprint(F.col(text_col)).alias("sh"))
     # consumed twice (banding + hamming verify) — compute the UDF once;
-    # tagged on the result for release_cached() (operators/caching.py)
+    # registered with register_cached (operators/caching.py) for release
     sh = sh.persist()
     chunks = F.array(
         *[

@@ -11,7 +11,7 @@ builder (operators/envelope.py).
 
 Scale shape: one full-outer join co-partitioned on the key columns —
 both sides shuffle exactly once on the same key, so at 100 TB you
-pre-bucket both snapshots by the key (operators/bucketing.py) and the
+pre-bucket both snapshots by the key (``DataFrameWriter.bucketBy``) and the
 join is shuffle-free; change detection is a null-safe projection over
 the joined row (single codegen stage, no second pass). Unchanged rows —
 the overwhelming majority of a real diff — are filtered before anything

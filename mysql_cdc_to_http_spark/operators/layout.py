@@ -1,5 +1,5 @@
 """Table-layout operators: partitioned + sorted parquet writes and
-small-file compaction.
+hash-sharded exports.
 
 At 100 TB the scan plan is decided at WRITE time: hive-partitioning by a
 low-cardinality predicate column turns matching filters into partition
@@ -41,113 +41,6 @@ def write_partitioned(
     if max_records_per_file is not None:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.partitionBy(*partition_by).parquet(path)
-
-
-def compact_small_files(
-    spark,
-    path: str,
-    target_files: int,
-    out_path: str,
-) -> None:
-    """Rewrite a fragmented dataset into ``target_files`` files —
-    the maintenance pass after many incremental appends. Coalesce (no
-    shuffle) is correct here because we only ever REDUCE file count."""
-    spark.read.parquet(path).coalesce(target_files).write.mode(
-        "overwrite"
-    ).parquet(out_path)
-
-
-def zorder_value(
-    df: DataFrame, cols: list[str], bits: int = 16
-) -> tuple[DataFrame, str]:
-    """Attach a Z-order (Morton) key interleaving ``cols``' bits —
-    multi-column data clustering so parquet min/max statistics prune
-    files/row-groups for predicates on ANY prefix-free subset of the
-    columns (a single-column sort only prunes its own leading column;
-    Z-order trades a little per-column locality on each dimension for
-    locality on all of them — the same layout Delta/Iceberg OPTIMIZE
-    ZORDER computes).
-
-    Each column is min-max scaled to ``bits``-wide integers from ONE
-    driver-sized (min, max) aggregate — no per-row window. Min-max
-    ranks poorly under heavy skew (a hot value collapses many rows onto
-    one z-prefix); for skewed columns pre-bucket with a rank/ntile pass
-    and z-order the bucket ids instead. Returns (df + key, key column
-    name)."""
-    if not 1 <= bits * len(cols) <= 63:
-        raise ValueError(
-            f"bits*len(cols) must fit a signed long, got {bits}*{len(cols)}"
-        )
-    bounds = df.agg(
-        *[F.min(c).cast("double").alias(f"mn_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"mx_{c}") for c in cols],
-    ).collect()[0]
-    top = (1 << bits) - 1
-    scaled = []
-    for c in cols:
-        mn, mx = bounds[f"mn_{c}"], bounds[f"mx_{c}"]
-        span = (mx - mn) or 1.0
-        scaled.append(
-            F.least(
-                F.lit(top),
-                ((F.col(c).cast("double") - F.lit(mn))
-                 / F.lit(span) * top).cast("long"),
-            )
-        )
-    # interleave: output bit (j*n_cols + k) = bit j of column k — a flat
-    # sum of shift/mask terms, all inside whole-stage codegen
-    n = len(cols)
-    z = F.lit(0).cast("long")
-    for j in range(bits):
-        for k, s in enumerate(scaled):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftrightunsigned(s, j).bitwiseAND(F.lit(1)),
-                    j * n + k,
-                )
-            )
-    return df.withColumn("__zorder", z), "__zorder"
-
-
-def write_zordered(
-    df: DataFrame, path: str, cols: list[str], n_files: int = 16
-) -> None:
-    """Z-order-clustered parquet: range-partition on the Morton key
-    (contiguous z-ranges per file ⇒ tight per-file min/max boxes on
-    EVERY z-ordered column), sort within files for row-group pruning,
-    drop the key before writing."""
-    keyed, zcol = zorder_value(df, cols)
-    (
-        keyed.repartitionByRange(n_files, F.col(zcol))
-        .sortWithinPartitions(zcol)
-        .drop(zcol)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def stream_to_partitioned_layout(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_by: list[str],
-):
-    """Continuous ingestion into the partitioned layout: append-mode
-    parquet sink with hive partitioning. The checkpoint gives
-    exactly-once file-level delivery across restarts (Spark's file sink
-    commits via the _spark_metadata transaction log — readers see only
-    committed files, and a replayed micro-batch is not re-committed).
-    Each micro-batch writes one file per in-flight partition value, so
-    periodic ``compact_small_files`` per partition directory is the
-    expected companion job at scale."""
-    return (
-        stream_df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy(*partition_by)
-        .outputMode("append")
-        .start()
-    )
 
 
 def write_shards(

@@ -3,7 +3,7 @@
 The reference logs every consumed event with its action and table
 (main.go's logger calls in the canal event loop); re-reading the output
 to count (``df.count()`` per action) would add full extra passes. Spark's
-``Observation`` API is the idiomatic equivalent: named aggregates ride
+named observations are the idiomatic equivalent: named aggregates ride
 the SAME job as the consuming action via accumulators — zero additional
 scans, exact counts, available on the driver the moment the action
 finishes. At 100 TB an extra counting pass is hours; observation metrics
@@ -13,34 +13,6 @@ are free.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.observation import Observation
-
-
-def observe_actions(
-    df: DataFrame,
-    action_col: str = "action",
-    name: str = "cdc_metrics",
-    actions: tuple[str, ...] = ("insert", "update", "delete"),
-) -> tuple[DataFrame, Observation]:
-    """Attach per-action counters (one ``n_<action>`` per vocabulary
-    entry + ``n_rows``) to the frame. Works for the snapshot-diff
-    vocabulary (default) and the CDC op codes
-    (``actions=("c", "u", "d")``). Returns (observed_df, observation);
-    read ``observation.get`` AFTER an action has materialized the frame.
-    Counts reflect rows that actually flowed past this point — filters
-    applied downstream don't rewind them, so attach at the stage whose
-    throughput you mean to measure (the reference logs at consume time,
-    before routing drops anything)."""
-    obs = Observation(name)
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        *[
-            F.sum((F.col(action_col) == a).cast("long")).alias(f"n_{a}")
-            for a in actions
-        ],
-    )
-    return observed, obs
 
 
 def observe_actions_stream(
@@ -49,12 +21,12 @@ def observe_actions_stream(
     name: str = "delivery_metrics",
     actions: tuple[str, ...] = ("c", "u", "d"),
 ) -> DataFrame:
-    """Streaming form: attach the same per-action counters to a
-    streaming frame by name. Metrics surface per micro-batch in
-    ``StreamingQueryProgress.observedMetrics[name]`` — the reference's
-    per-event consume log, aggregated per batch, with zero overhead on
-    the hot path (the ``Observation`` object used by the batch form
-    doesn't support streaming queries; the named variant does)."""
+    """Attach per-action counters (one ``n_<action>`` per vocabulary
+    entry + ``n_rows``) to a streaming frame by name. Metrics surface
+    per micro-batch in ``StreamingQueryProgress.observedMetrics[name]``
+    — the reference's per-event consume log, aggregated per batch, with
+    zero overhead on the hot path (an ``Observation`` object does not
+    support streaming queries; the named variant does)."""
     return df.observe(
         name,
         F.count(F.lit(1)).alias("n_rows"),

@@ -7,15 +7,12 @@ Decode reality ladder: baseline PNG (stdlib ``decode_png``) and PCM WAV
 codec library; other image formats decode when Pillow is importable;
 compressed audio / video stay behind an honest NotImplementedError
 (ffmpeg/torchaudio absent from this environment). Everything else —
-schemas, binary hashing for dedup keys, Arrow batch iteration shape,
-stats / feature-extraction / resize / resample / frame-sample pipelines
-over ``mapInPandas``, corrupt-blob quarantine — is real and tested
-regardless of codec availability.
+schemas, binary hashing for dedup keys, the feature-extraction pipeline
+over ``mapInPandas`` — is real and tested regardless of codec
+availability.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 from collections.abc import Iterator
 
@@ -266,72 +263,6 @@ def extract_features(assets: DataFrame) -> DataFrame:
     )
 
 
-_IMAGE_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("mean_intensity", T.DoubleType()),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-
-def image_stats(assets: DataFrame) -> DataFrame:
-    """REAL image decode over ``mapInPandas``: width/height/channels and
-    mean pixel intensity per asset, Arrow batches in/out — the same
-    plumbing shape as ``extract_features`` but running ``decode_media``
-    un-faked (stdlib PNG path; Pillow for other formats when present).
-    Undecodable assets yield a ``decode_error`` row instead of failing
-    the batch — at 100 TB a single corrupt blob must not kill the stage
-    (same quarantine philosophy as operators/validation.py)."""
-
-    def _stats_batch(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, mtype, content in zip(
-                pdf["asset_id"], pdf["media_type"], pdf["content"]
-            ):
-                try:
-                    arr = decode_media(bytes(content), str(mtype))
-                    if arr.ndim == 2:  # Pillow returns H×W for grayscale
-                        arr = arr[:, :, None]
-                    h, w, c = arr.shape
-                    rows.append(
-                        (int(aid), w, h, c, float(arr.mean()), None)
-                    )
-                except (NotImplementedError, ValueError) as exc:
-                    rows.append(
-                        (int(aid), None, None, None, None, str(exc)[:200])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "channels",
-                    "mean_intensity", "decode_error",
-                ],
-            )
-
-    return assets.select("asset_id", "media_type", "content").mapInPandas(
-        _stats_batch, schema=_IMAGE_STATS_SCHEMA
-    )
-
-
-_RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-        T.StructField("pixels", T.BinaryType()),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-
 def resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
     """Nearest-neighbor resize by pure index sampling (no imaging lib):
     output pixel (i, j) reads source pixel (⌊(i+.5)·sh/h⌋, ⌊(j+.5)·sw/w⌋)
@@ -342,79 +273,6 @@ def resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
     rows = np.floor((np.arange(height) + 0.5) * sh / height).astype(int)
     cols = np.floor((np.arange(width) + 0.5) * sw / width).astype(int)
     return arr[rows[:, None], cols[None, :], :]
-
-
-def resize_images(
-    assets: DataFrame, width: int = 32, height: int = 32
-) -> DataFrame:
-    """Thumbnail/resize pass over ``mapInPandas``: REAL decode
-    (stdlib PNG / Pillow via ``decode_media``), nearest-neighbor resize
-    to (width, height), raw pixel bytes back out as a binary column
-    plus typed shape metadata — the standard normalize-resolution step
-    before a vision encoder.
-
-    Same scale shape as ``extract_features``: Arrow batches in/out, one
-    output row per asset, undecodable blobs become ``decode_error``
-    rows instead of failing the stage. The resize itself is numpy index
-    sampling — no imaging dependency beyond the decode step, and
-    byte-deterministic (tested against hand-computed pixels), unlike
-    library resamplers whose filters vary by version."""
-
-    def _resize_batch(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, mtype, content in zip(
-                pdf["asset_id"], pdf["media_type"], pdf["content"]
-            ):
-                try:
-                    arr = decode_media(bytes(content), str(mtype))
-                    out = resize_nearest(arr, width, height)
-                    rows.append(
-                        (
-                            int(aid),
-                            width,
-                            height,
-                            out.shape[2],
-                            out.astype(np.uint8).tobytes(),
-                            None,
-                        )
-                    )
-                except (NotImplementedError, ValueError) as exc:
-                    rows.append(
-                        (int(aid), None, None, None, None, str(exc)[:200])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "width", "height", "channels",
-                    "pixels", "decode_error",
-                ],
-            )
-
-    return assets.select("asset_id", "media_type", "content").mapInPandas(
-        _resize_batch, schema=_RESIZE_SCHEMA
-    )
-
-
-def frame_sample_plan(assets: DataFrame, every_n: int = 10) -> DataFrame:
-    """Frame-sampling plumbing for video assets: emits (asset_id, frame_no)
-    rows for frames 0, n, 2n … — the real frame decode is the stubbed
-    step; the explode/partition shape is what matters at scale."""
-    n_frames = (F.col("n_bytes") / 100).cast("int")  # fake: 1 frame / 100 B
-    frames = F.sequence(
-        F.lit(0), F.greatest(n_frames - 1, F.lit(0)), F.lit(every_n)
-    )
-    return (
-        assets.filter(F.col("media_type") == "video/mp4")
-        .select("asset_id", F.explode(frames).alias("frame_no"))
-    )
-
-
-def python_hash_media(content: pd.Series) -> pd.Series:
-    """Reference hasher for tests (hashlib mirrors Spark's md5)."""
-    return content.map(lambda b: hashlib.md5(bytes(b)).hexdigest())
 
 
 # --------------------------------------------------------------------------
@@ -459,138 +317,6 @@ def decode_wav(content: bytes) -> tuple[np.ndarray, int]:
         raise ValueError(f"invalid WAV header: channels={n_ch} rate={rate}")
     return arr.reshape(-1, n_ch), rate
 
-
-_AUDIO_STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_channels", T.IntegerType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("duration_ms", T.LongType()),
-        T.StructField("peak_abs", T.LongType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-
-def audio_stats(assets: DataFrame) -> DataFrame:
-    """REAL audio decode over ``mapInPandas``: sample rate / channels /
-    frame count / duration / peak / RMS per asset — the audio analog of
-    ``image_stats``, same Arrow batch shape, same corrupt-blob
-    quarantine (an undecodable payload yields a ``decode_error`` row,
-    never a failed stage). duration_ms floors frames·1000/rate in
-    integer math; peak is the exact integer max |sample|."""
-
-    def _stats_batch(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                try:
-                    arr, rate = decode_wav(bytes(content))
-                    n_frames, n_ch = arr.shape
-                    peak = int(np.abs(arr).max()) if n_frames else 0
-                    rms = (
-                        float(np.sqrt(np.mean(arr.astype(np.float64) ** 2)))
-                        if n_frames
-                        else 0.0
-                    )
-                    rows.append(
-                        (
-                            int(aid), int(rate), int(n_ch), int(n_frames),
-                            n_frames * 1000 // rate, peak, rms, None,
-                        )
-                    )
-                except ValueError as exc:
-                    rows.append(
-                        (int(aid), None, None, None, None, None, None,
-                         str(exc)[:200])
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "sample_rate", "n_channels", "n_frames",
-                    "duration_ms", "peak_abs", "rms", "decode_error",
-                ],
-            )
-
-    return assets.select("asset_id", "content").mapInPandas(
-        _stats_batch, schema=_AUDIO_STATS_SCHEMA
-    )
-
-
-def resample_nearest_audio(
-    arr: np.ndarray, src_rate: int, dst_rate: int
-) -> np.ndarray:
-    """Nearest-sample resample by pure index math — output frame i reads
-    source frame ⌊(i+.5)·src/dst⌋, the same deterministic pixel-center
-    mapping as ``resize_nearest``. No interpolation, no filter design:
-    the point is reproducible plumbing (a real polyphase resampler
-    slots in behind the same signature)."""
-    if src_rate <= 0 or dst_rate <= 0:
-        raise ValueError(f"rates must be positive: {src_rate}->{dst_rate}")
-    n_src = arr.shape[0]
-    n_dst = n_src * dst_rate // src_rate
-    idx = np.floor((np.arange(n_dst) + 0.5) * src_rate / dst_rate).astype(int)
-    idx = np.clip(idx, 0, max(n_src - 1, 0))
-    return arr[idx]
-
-
-_RESAMPLE_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("sample_rate", T.IntegerType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("pcm16", T.BinaryType()),
-        T.StructField("decode_error", T.StringType()),
-    ]
-)
-
-
-def resample_wavs(assets: DataFrame, dst_rate: int = 16000) -> DataFrame:
-    """Decode → nearest-sample resample to ``dst_rate`` → re-emit mono
-    16-bit PCM bytes, over the same ``mapInPandas`` shape (the training
-    pipeline's "normalize all audio to 16 kHz mono" pass). Multi-channel
-    audio is mixed down by integer-truncated channel mean; corrupt blobs
-    quarantine to ``decode_error`` rows."""
-
-    def _resample_batch(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for aid, content in zip(pdf["asset_id"], pdf["content"]):
-                try:
-                    arr, rate = decode_wav(bytes(content))
-                    mono = (
-                        arr[:, 0]
-                        if arr.shape[1] == 1
-                        else arr.astype(np.int64).mean(axis=1).astype(np.int32)
-                    )
-                    out = resample_nearest_audio(mono, rate, dst_rate)
-                    pcm = (
-                        np.clip(out, -32768, 32767)
-                        .astype("<i2")
-                        .tobytes()
-                    )
-                    rows.append(
-                        (int(aid), dst_rate, int(out.shape[0]), pcm, None)
-                    )
-                except ValueError as exc:
-                    rows.append((int(aid), None, None, None, str(exc)[:200]))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "asset_id", "sample_rate", "n_frames", "pcm16",
-                    "decode_error",
-                ],
-            )
-
-    return assets.select("asset_id", "content").mapInPandas(
-        _resample_batch, schema=_RESAMPLE_SCHEMA
-    )
 
 # Executors must not need this repo on their PYTHONPATH: register this
 # module for pickle-by-value so UDFs/closures ship inside the task

@@ -23,19 +23,33 @@ DEFAULT_GROUPS: dict[str, list[str]] = {
 
 
 def load_groups(path: str | None = None) -> dict[str, list[str]]:
-    """Load group→tables config from YAML when available (the reference's
-    loadTableGroups, main.go:313-332); fall back to DEFAULT_GROUPS. An
-    empty file is an empty config: nothing is routed."""
+    """Load the group→tables YAML config (the reference's loadTableGroups,
+    main.go:313-332); no path means DEFAULT_GROUPS. An empty file is an
+    empty config and a null group has no tables: both route nothing.
+
+    A config that is not a mapping of group → list of table names (quote
+    a numeric name) raises ``ValueError`` naming the file and the group,
+    as does a file given without pyyaml installed: a config the engine
+    cannot read must stop it, never route tables it does not name."""
     if path is None:
         return dict(DEFAULT_GROUPS)
     try:
-        import yaml  # optional dep — gated per environment contract
-
-        with open(path) as fh:
-            raw = yaml.safe_load(fh) or {}
-        return {str(g): [str(t) for t in ts or []] for g, ts in raw.items()}
-    except ImportError:
-        return dict(DEFAULT_GROUPS)
+        import yaml
+    except ImportError as exc:
+        raise ValueError(f"{path}: reading TABLE_GROUPS_FILE needs pyyaml") from exc
+    with open(path) as fh:
+        raw = yaml.safe_load(fh)
+    if raw is None:
+        return {}
+    if not isinstance(raw, dict):
+        raise ValueError(f"{path}: expected a mapping of group to tables")
+    groups = {}
+    for g, ts in raw.items():
+        ts = [] if ts is None else ts
+        if not isinstance(ts, list) or not all(isinstance(t, str) for t in ts):
+            raise ValueError(f"{path}: group {g!r} must be a list of table names")
+        groups[str(g)] = ts
+    return groups
 
 
 def invert_groups(groups: dict[str, list[str]]) -> dict[str, str]:

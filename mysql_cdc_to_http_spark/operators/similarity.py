@@ -195,66 +195,6 @@ def ivf_topk(
     )
 
 
-#: corpora at or below this many rows stay on the exact broadcast scan;
-#: larger ones go through IVF bucketing. Overridable per session via
-#: ``spark.conf.set("spark.graft.knn.bruteforceMaxRows", n)``.
-_KNN_BRUTEFORCE_MAX_ROWS = 1_000_000
-
-
-def knn_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 3,
-    strategy: str = "auto",
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    corpus_rows: int | None = None,
-    centroids: list[list[float]] | None = None,
-) -> DataFrame:
-    """Strategy-selecting KNN planner — the engine's query-facing entry.
-
-    ``strategy``: ``"exact"`` pins the brute-force broadcast scan,
-    ``"ivf"`` pins the bucketed approximate path, ``"auto"`` (default)
-    picks by corpus size: exact while the corpus is small enough that a
-    linear scan per query beats paying the bucketing pass, IVF beyond.
-    The cutover (default 1e6 rows) comes from
-    ``spark.graft.knn.bruteforceMaxRows`` so operators can tune it per
-    cluster without code changes. Pass ``corpus_rows`` when the caller
-    already knows the cardinality (a catalog row count — avoids the
-    count job; at 100 TB you ALWAYS know this from table metadata).
-
-    This selection lives deliberately at the plan-builder layer, not in
-    a Catalyst rule: the exact→IVF rewrite CHANGES RESULTS (approximate
-    recall), and a silent optimizer rule altering semantics is exactly
-    the class of bug the LatestStateRewrite null-ordering review flagged
-    — approximation must be an explicit, visible choice.
-    """
-    if strategy not in ("auto", "exact", "ivf"):
-        raise ValueError(f"unknown knn strategy: {strategy!r}")
-    if strategy == "auto":
-        limit = int(
-            queries.sparkSession.conf.get(
-                "spark.graft.knn.bruteforceMaxRows",
-                str(_KNN_BRUTEFORCE_MAX_ROWS),
-            )
-        )
-        n = corpus_rows if corpus_rows is not None else corpus.count()
-        strategy = "exact" if n <= limit else "ivf"
-    if strategy == "exact":
-        return cosine_topk_bruteforce(queries, corpus, k, id_col, vec_col)
-    # pass kmeans-trained centroids (operators/clustering.py:
-    # kmeans_centroids) when recall matters; the lowest-id sample is
-    # the zero-cost default
-    if centroids is None:
-        centroids = sample_centroids(corpus, n_centroids, id_col, vec_col)
-    bucketed = assign_buckets(corpus, centroids, id_col, vec_col)
-    return ivf_topk(
-        queries, bucketed, centroids, k, nprobe, id_col, vec_col
-    )
-
-
 def hyperplane_lsh_pairs(
     corpus: DataFrame,
     dim: int,
@@ -291,8 +231,8 @@ def hyperplane_lsh_pairs(
     sig = (
         corpus.select(F.col(id_col), as_double(vec_col).alias("cv"))
         .withColumn("bits", sign_bits)
-        # consumed twice: banding + cosine verify join-back; tagged on
-        # the result for release_cached() (operators/caching.py)
+        # consumed twice: banding + cosine verify join-back; registered
+        # with register_cached (operators/caching.py) for release
         .persist()
     )
     chunks = F.array(

@@ -421,179 +421,6 @@ def c4_clean_page(text: Column) -> tuple[Column, Column, Column, Column]:
     return F.size(lines), F.size(kept), dropped, clean
 
 
-def bpe_train(
-    word_freqs: DataFrame, n_merges: int
-) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Byte-pair-encoding training loop, distributed (Sennrich et al.
-    2016, public algorithm). Input: the DISTINCT-word frequency table
-    ``(w string, f long)`` — the corpus-sized word count is the
-    caller's one fact aggregate (q_bpe_pairs); everything here is
-    VOCABULARY-sized.
-
-    Loop per merge (driver-coordinated, the standard structure —
-    n_merges is a config constant, not data-dependent):
-    1. adjacent-pair frequencies over the symbol arrays — JVM
-       higher-order zip of each array with its tail, explode, two-phase
-       aggregate;
-    2. argmax pair — ONE driver-sized collect of a single row
-       (orderBy(freq desc, pair).limit(1): deterministic tie-break);
-    3. apply the merge — an Arrow pandas UDF over the vocab rows only
-       (merge application is inherently sequential per word; Python is
-       acceptable here precisely because the input is Heaps'-law
-       vocab-sized, never corpus-sized).
-    Each iteration persists the new symbol table and unpersists the
-    old — lineage stays O(1) deep across merges instead of O(n_merges).
-
-    Returns (ordered merge list, final vocab DataFrame
-    ``(w, f, symbols array<string>)``)."""
-    import pandas as pd
-
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    vocab = word_freqs.select(
-        "w",
-        "f",
-        F.expr(
-            "transform(sequence(1, length(w)), i -> substring(w, i, 1))"
-        ).alias("symbols"),
-    ).persist()
-    vocab.count()
-
-    merges: list[tuple[str, str]] = []
-    for _ in range(int(n_merges)):
-        pair_freq = (
-            vocab.select(
-                F.explode(
-                    F.expr(
-                        "zip_with(slice(symbols, 1, size(symbols) - 1),"
-                        " slice(symbols, 2, size(symbols) - 1),"
-                        " (a, b) -> struct(a, b))"
-                    )
-                ).alias("p"),
-                "f",
-            )
-            .groupBy("p")
-            .agg(F.sum("f").alias("freq"))
-            .orderBy(F.desc("freq"), F.col("p.a"), F.col("p.b"))
-            .limit(1)
-        )
-        top = pair_freq.collect()
-        if not top:
-            break
-        a, b = top[0]["p"]["a"], top[0]["p"]["b"]
-        merges.append((a, b))
-
-        # factory so each iteration's UDF closes over ITS OWN (a, b)
-        # cells: UDF closures are pickled per JOB, so a plain loop
-        # variable would rebind to the last merge if a downstream
-        # action re-pickles the lineage (e.g. after cache eviction)
-        def _make_apply(a: str, b: str):
-            merged = a + b
-
-            @pandas_udf("array<string>")
-            def _apply(cols: pd.Series) -> pd.Series:
-                def merge_one(syms):
-                    out, i, n = [], 0, len(syms)
-                    while i < n:
-                        if i + 1 < n and syms[i] == a and syms[i + 1] == b:
-                            out.append(merged)
-                            i += 2
-                        else:
-                            out.append(syms[i])
-                            i += 1
-                    return out
-
-                return cols.map(merge_one)
-
-            return _apply
-
-        new_vocab = vocab.withColumn(
-            "symbols", _make_apply(a, b)("symbols")
-        ).persist()
-        new_vocab.count()
-        vocab.unpersist()
-        vocab = new_vocab
-    return merges, vocab
-
-
-def bpe_encode(
-    docs: DataFrame,
-    merges: list[tuple[str, str]],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Apply a TRAINED merge list to a corpus — the inference half of
-    the BPE pair (X200a trains; this encodes). Standard greedy apply
-    (Sennrich et al. 2016): per word, repeatedly merge the adjacent
-    pair with the LOWEST merge rank until no ranked pair remains.
-
-    Scale shape: the merge table is a driver-sized model shipped
-    inside the Arrow UDF closure (like the k-means centroids and the
-    PQ codebooks — model broadcast, data stays put); encoding streams
-    corpus-sized batches through ``mapInPandas``-style vectorization
-    with a per-batch WORD MEMO — Zipf's law means a batch's distinct
-    words are far fewer than its word occurrences, so the sequential
-    merge loop runs per distinct word, not per token. Output is
-    per-document counts (id, n_words, n_chars, n_tokens) — the
-    compression-ratio facts a tokenizer-budget pipeline needs; the
-    token STREAM itself would be an array column (driver-unsafe
-    output) and is trivially emitted by the same UDF when a sink
-    wants it."""
-    import pandas as pd
-
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = {pair: i for i, pair in enumerate(merges)}
-
-    @pandas_udf("struct<n_words: long, n_chars: long, n_tokens: long>")
-    def _enc(texts: pd.Series) -> pd.DataFrame:
-        memo: dict[str, int] = {}
-
-        def encode_word(w: str) -> int:
-            hit = memo.get(w)
-            if hit is not None:
-                return hit
-            syms = list(w)
-            while len(syms) > 1:
-                best_rank, best_i = None, -1
-                for i in range(len(syms) - 1):
-                    r = ranks.get((syms[i], syms[i + 1]))
-                    if r is not None and (best_rank is None or r < best_rank):
-                        best_rank, best_i = r, i
-                if best_rank is None:
-                    break
-                a, b = merges[best_rank]
-                merged, out, i = a + b, [], 0
-                while i < len(syms):
-                    if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                        out.append(merged)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                syms = out
-            memo[w] = len(syms)
-            return len(syms)
-
-        rows = []
-        for t in texts:
-            words = [w for w in (t or "").lower().split() if w]
-            rows.append(
-                {
-                    "n_words": len(words),
-                    "n_chars": sum(len(w) for w in words),
-                    "n_tokens": sum(encode_word(w) for w in words),
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return docs.select(
-        F.col(id_col),
-        _enc(F.col(text_col)).alias("e"),
-    ).select(id_col, "e.n_words", "e.n_chars", "e.n_tokens")
-
-
 # ---------------------------------------------------------------------------
 # X217 — positional inverted index + exact phrase search.
 #

@@ -1,22 +1,17 @@
-"""Row-level validation with quarantine routing.
+"""Row-level validation: the failed-rule names of each row.
 
 At ingestion scale malformed rows are a certainty and must neither kill
-the job (ANSI throw) nor silently vanish (permissive drop): the pipeline
-pattern is validate-and-route — good rows continue, bad rows land in a
-quarantine table with machine-readable reasons for replay after a fix.
+the job (ANSI throw) nor silently vanish (permissive drop): each row
+carries machine-readable reasons that a caller can route on.
 
 Single-pass shape: ALL rules evaluate in one projection (an array of
 (rule, passed) structs folded per row), so N rules cost one scan and
-stay inside one codegen stage — never N sequential filters. The
-valid/quarantine split reuses the same computed column; with the input
-cached or both branches written from one ``foreachBatch``, the scan is
-shared too.
+stay inside one codegen stage — never N sequential filters.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql import types as T
 
 #: name of the synthetic column carrying failed-rule names
 REASONS_COL = "__failed_rules"
@@ -41,111 +36,3 @@ def with_validation(df: DataFrame, rules: dict[str, Column]) -> DataFrame:
         F.filter(checks, lambda c: ~c["passed"]), lambda c: c["rule"]
     )
     return df.withColumn(REASONS_COL, failed)
-
-
-def split_valid(
-    df: DataFrame, rules: dict[str, Column]
-) -> tuple[DataFrame, DataFrame]:
-    """(valid, quarantine): valid rows drop the reasons column;
-    quarantine rows keep it. Callers writing both should materialize
-    from one pass (cache or foreachBatch) so the scan isn't doubled."""
-    checked = with_validation(df, rules)
-    valid = checked.filter(F.size(REASONS_COL) == 0).drop(REASONS_COL)
-    quarantine = checked.filter(F.size(REASONS_COL) > 0)
-    return valid, quarantine
-
-
-def quarantine_summary(
-    df: DataFrame, rules: dict[str, Column]
-) -> DataFrame:
-    """Per-rule failure counts — the monitoring surface. One scan, one
-    narrow shuffle of (rule, partial_count)."""
-    checked = with_validation(df, rules)
-    return (
-        checked.select(F.explode(REASONS_COL).alias("rule"))
-        .groupBy("rule")
-        .agg(F.count(F.lit(1)).alias("n_failed"))
-    )
-
-
-def stream_validate_and_route(
-    stream_df: DataFrame,
-    rules: dict[str, Column],
-    valid_path: str,
-    quarantine_path: str,
-    checkpoint: str,
-):
-    """Continuous validate-and-route: each micro-batch evaluates the
-    rules ONCE (the batch is cached for the two writes), appends good
-    rows to ``valid_path`` and bad rows + reasons to
-    ``quarantine_path``. foreachBatch + checkpoint give effectively-once
-    delivery across restarts (a replayed batch overwrites nothing here —
-    appends are deduplicated upstream by the checkpointed source
-    offsets)."""
-
-    def route(batch_df: DataFrame, _epoch: int) -> None:
-        checked = with_validation(batch_df, rules).persist()
-        try:
-            checked.filter(F.size(REASONS_COL) == 0).drop(
-                REASONS_COL
-            ).write.mode("append").parquet(valid_path)
-            checked.filter(F.size(REASONS_COL) > 0).withColumn(
-                "reasons", F.concat_ws(",", F.col(REASONS_COL))
-            ).drop(REASONS_COL).write.mode("append").parquet(quarantine_path)
-        finally:
-            checked.unpersist()
-
-    return (
-        stream_df.writeStream.foreachBatch(route)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
-    )
-
-
-def read_json_with_quarantine(
-    spark,
-    path: str,
-    schema: str | T.StructType,
-):
-    """Corrupt-record-tolerant JSONL ingestion: parse under PERMISSIVE
-    mode with a ``_corrupt_record`` capture column and split the scan
-    into (valid, corrupt) frames — the ingestion-side complement of the
-    row-rule quarantine above (a real feed contains lines that are not
-    even JSON; FAILFAST would abort the job on the first one, DROPMALFORMED
-    would silently lose them — both wrong for a pipeline that must
-    account for every input byte).
-
-    ``corrupt`` carries the raw offending line untouched, so the
-    quarantine is replayable after a parser/schema fix. Caveat wired in,
-    not documented-only: Spark requires the corrupt-capture column to be
-    selected together with a cache barrier for counts to be stable
-    (SPARK-21610: a count() over only the corrupt column can be pruned
-    to a metadata scan) — the returned frames are built from one cached
-    base so valid/corrupt counts always sum to the input line count.
-
-    Scale: PERMISSIVE parsing is per-line, pipeline-parallel, no
-    shuffle; the cache is scan-sized and should be released by the
-    caller after the split is consumed (register_cached contract)."""
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    if isinstance(schema, str):
-        schema = T._parse_datatype_string(schema)
-    full = T.StructType(
-        list(schema.fields)
-        + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    base = (
-        spark.read.schema(full)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .json(path)
-        .persist()
-    )
-    valid = base.filter(F.col("_corrupt_record").isNull()).drop(
-        "_corrupt_record"
-    )
-    corrupt = base.filter(F.col("_corrupt_record").isNotNull()).select(
-        F.col("_corrupt_record").alias("raw")
-    )
-    return register_cached(valid, [base]), corrupt

@@ -3,9 +3,9 @@
 The reference's source is the MySQL replication wire protocol via canal
 (``main.go:459-483``); the *semantics* it contributes — resume-from-offset,
 no initial snapshot, per-row change envelopes — map onto a Spark streaming
-source over envelope JSON files (Kafka in production; files in tests,
-which preserve offsets/ordering without the wire protocol — SURVEY §7
-known-hard #6).
+source over envelope JSON files, which preserve offsets/ordering
+without the wire protocol (SURVEY §7 known-hard #6). The envelope file
+directory is the engine's only source.
 
 This module provides:
 - a deterministic synthetic change-event feed derived from the ``orders``

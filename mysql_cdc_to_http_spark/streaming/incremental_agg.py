@@ -23,13 +23,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-from mysql_cdc_to_http_spark.streaming.latest_state import (
-    _recover_state_dir,
-    _swap_into_state_dir,
-    applied_epoch,
-)
+from pyspark.sql import DataFrame, functions as F
 
 
 def event_deltas(
@@ -97,78 +91,6 @@ def delta_aggregate(deltas: DataFrame) -> DataFrame:
         deltas.groupBy("grp")
         .agg(F.sum("d_n").alias("n"), F.sum("d_value").alias("sum_value"))
         .filter(F.col("n") > 0)
-    )
-
-
-def merge_deltas_into_state(
-    spark: SparkSession,
-    batch: DataFrame,
-    state_dir: str,
-    group_field: str,
-    value_field: str,
-    op_col: str = "op",
-    epoch_id: int | None = None,
-    snapshot_ops: Sequence[str] = (),
-) -> None:
-    """One ``foreachBatch`` maintenance step:
-    state' = delta_aggregate(state-as-deltas ∪ batch-deltas).
-
-    Delta application is NOT idempotent (unlike the latest-state rank
-    merge), and foreachBatch delivers at-least-once: a crash after the
-    swap but before Spark's checkpoint commit replays the batch. Pass
-    the foreachBatch ``epoch_id`` and the merge skips epochs already
-    recorded in the snapshot — the marker is written inside the tmp dir
-    BEFORE the swap, so it commits atomically with the data.
-
-    Reuses the crash-safe write-then-swap (latest_state) — the
-    maintained table is tiny (one row per group), so the swap is
-    metadata-cheap."""
-    import os
-
-    _recover_state_dir(state_dir)
-    if epoch_id is not None:
-        last = applied_epoch(state_dir)
-        if last is not None and epoch_id <= last:
-            return  # replayed batch — already folded into the snapshot
-    deltas = event_deltas(
-        batch, group_field, value_field, op_col, snapshot_ops=snapshot_ops
-    )
-    if os.path.exists(state_dir):
-        prior = spark.read.parquet(state_dir).select(
-            "grp",
-            F.col("n").alias("d_n"),
-            F.col("sum_value").alias("d_value"),
-        )
-        deltas = prior.unionByName(deltas)
-    merged = delta_aggregate(deltas)
-    _swap_into_state_dir(merged, state_dir, epoch_id=epoch_id)
-
-
-def stream_deltas_to_state(
-    changes: DataFrame,
-    spark: SparkSession,
-    state_dir: str,
-    checkpoint_dir: str,
-    group_field: str,
-    value_field: str,
-):
-    """Wire a streaming changelog into the maintained aggregate table."""
-
-    def _merge(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_deltas_into_state(
-            spark,
-            batch_df,
-            state_dir,
-            group_field,
-            value_field,
-            epoch_id=epoch_id,
-        )
-
-    return (
-        changes.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
     )
 
 

@@ -11,8 +11,8 @@ finding). On Delta/Iceberg this becomes MERGE INTO; parquet-overwrite is
 the dependency-free stand-in with the same semantics. (Round-7 status
 of the MERGE target: no delta/iceberg jar exists anywhere in this
 container — verified by filesystem search — and there is no network to
-vendor one, so the table-format sink stays env-gated alongside the
-Kafka/JDBC transports; the foreachBatch body is the single seam where
+vendor one, so the table-format sink stays env-gated; the foreachBatch
+body is the single seam where
 ``MERGE INTO state USING batch ON keys WHEN MATCHED UPDATE / NOT
 MATCHED INSERT / matched-and-op='d' DELETE`` drops in unchanged.)
 """
@@ -134,7 +134,7 @@ def merge_batch_into_state(
     _swap_into_state_dir(merged, state_dir)
 
 
-def _swap_into_state_dir(merged: DataFrame, state_dir: str, epoch_id=None) -> None:
+def _swap_into_state_dir(merged: DataFrame, state_dir: str) -> None:
     """Write-then-swap commit, shared by every parquet state store here:
     parquet overwrite would clobber its own input mid-plan, so the merge
     lands in a tmp dir, the live dir is renamed ASIDE (not deleted), tmp
@@ -145,22 +145,13 @@ def _swap_into_state_dir(merged: DataFrame, state_dir: str, epoch_id=None) -> No
     manifest/metadata commit — Delta/Iceberg MERGE INTO; rename is the
     local-FS stand-in.)
 
-    ``epoch_id``, when given, is recorded INSIDE the snapshot before the
-    ``_graft_commit`` marker, so the applied-epoch marker commits
-    atomically with the data (see ``applied_epoch`` — the at-least-once
-    replay guard). The commit marker is written LAST: parquet's
-    ``_SUCCESS`` only proves the data write finished, not that the epoch
-    marker was written, so recovery keying on ``_SUCCESS`` could promote
-    a marker-less tmp and replay its epoch on top of it (double-counted
-    deltas in the non-idempotent delta store). Promotion is gated on the
-    commit marker instead; an uncommitted tmp is discarded and its epoch
-    replayed from scratch."""
+    The ``_graft_commit`` marker is written LAST and promotion is gated
+    on it, so recovery never promotes a tmp whose write did not finish;
+    an uncommitted tmp is discarded and its batch replayed from
+    scratch."""
     tmp = state_dir + "__tmp"
     old = state_dir + "__old"
     merged.write.mode("overwrite").parquet(tmp)
-    if epoch_id is not None:
-        with open(os.path.join(tmp, _EPOCH_FILE), "w") as fh:
-            fh.write(str(int(epoch_id)))
     with open(os.path.join(tmp, _COMMIT_FILE), "w") as fh:
         fh.write("1")
     shutil.rmtree(old, ignore_errors=True)
@@ -170,21 +161,7 @@ def _swap_into_state_dir(merged: DataFrame, state_dir: str, epoch_id=None) -> No
     shutil.rmtree(old, ignore_errors=True)
 
 
-_EPOCH_FILE = "_graft_epoch"
 _COMMIT_FILE = "_graft_commit"
-
-
-def applied_epoch(state_dir: str) -> int | None:
-    """Last epoch committed into the state snapshot, or None. foreachBatch
-    delivers at-least-once: a crash after the swap but before Spark's
-    checkpoint commit replays the batch, and a NON-idempotent merge (the
-    delta store) must skip epochs it already applied. The marker rides
-    inside the swapped dir, so it is exactly as committed as the data."""
-    try:
-        with open(os.path.join(state_dir, _EPOCH_FILE)) as fh:
-            return int(fh.read().strip())
-    except (OSError, ValueError):
-        return None
 
 
 def _recover_state_dir(state_dir: str) -> None:
@@ -193,11 +170,9 @@ def _recover_state_dir(state_dir: str) -> None:
     If the live dir exists, any leftover __tmp/__old are stale partials —
     drop them. If it is missing, a crash hit the swap window: promote a
     COMMITTED __tmp (its _graft_commit marker is written after the data
-    AND the optional epoch marker — the swap only began after that),
-    else restore __old. An uncommitted tmp (data written, markers maybe
-    not) is discarded, never promoted: promoting it could lose the epoch
-    marker and double-apply the replayed batch in the non-idempotent
-    delta store.
+    — the swap only began after that), else restore __old. An
+    uncommitted tmp (data written, marker maybe not) is discarded, never
+    promoted.
     """
     tmp = state_dir + "__tmp"
     old = state_dir + "__old"

@@ -124,73 +124,3 @@ def running_user_totals_tws(events: DataFrame) -> DataFrame:
 import sys as _sys
 from pyspark import cloudpickle as _cloudpickle
 _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-
-
-def _update_totals_with_ttl(
-    key: tuple,
-    pdfs: Iterable[pd.DataFrame],
-    state: GroupState,
-):
-    """Running totals with EVENT-TIME eviction: a key idle past the
-    watermark has its state timeout fire — emit the final row (flagged)
-    and DROP the state. This is the bounded-state discipline at 100 TB:
-    without eviction, per-key state is immortal and grows with lifetime
-    key cardinality; with it, state tracks only keys active inside the
-    watermark horizon."""
-    if state.hasTimedOut:
-        n, total = state.get
-        state.remove()
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "finalized": [1],
-            }
-        )
-        return
-    n, total = state.get if state.exists else (0, 0.0)
-    max_ts_ms = 0
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-        max_ts_ms = max(
-            max_ts_ms, int(pdf["ts"].max().value // 1_000_000)
-        )
-    state.update((n, total))
-    # timeout when the WATERMARK passes this key's horizon: last event
-    # time + 1h of allowed inactivity
-    state.setTimeoutTimestamp(max_ts_ms + 3_600_000)
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "total_value": [total],
-            "finalized": [0],
-        }
-    )
-
-
-def running_user_totals_ttl(events: DataFrame) -> DataFrame:
-    """Streaming per-user running totals whose state EVICTS on
-    event-time timeout (watermark-driven). Input must carry ``ts``;
-    the 1h watermark below is what advances timeouts."""
-    out_schema = StructType(
-        [
-            StructField("user_id", LongType()),
-            StructField("n_events", LongType()),
-            StructField("total_value", DoubleType()),
-            StructField("finalized", LongType()),
-        ]
-    )
-    return (
-        events.withWatermark("ts", "1 hour")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update_totals_with_ttl,
-            outputStructType=out_schema,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )

@@ -5,6 +5,9 @@ compat vs correct mode, base64 heuristic edge cases, dead-letter extraction.
 
 from __future__ import annotations
 
+import re
+import sys
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -15,7 +18,7 @@ from mysql_cdc_to_http_spark.operators.envelope import (
     extract_table_name,
 )
 from mysql_cdc_to_http_spark.operators.pairing import pair_updates
-from mysql_cdc_to_http_spark.operators.routing import invert_groups
+from mysql_cdc_to_http_spark.operators.routing import invert_groups, load_groups
 
 
 def one(spark, value, fn):
@@ -111,6 +114,39 @@ def test_group_collision_last_wins():
     # main.go:325-329: same table in two groups → last wins
     groups = {"g1": ["t1", "t2"], "g2": ["t1"]}
     assert invert_groups(groups)["t1"] == "g2"
+
+
+#: malformed TABLE_GROUPS_FILE text → what the ValueError must name
+#: besides the file
+BAD_GROUP_FILES = {
+    # a scalar is not split into one table per character
+    "scalar_group": ("grp_sales: orders\n", "'grp_sales'"),
+    "mapping_group": ("grp_sales: {orders: 1}\n", "'grp_sales'"),
+    "null_table": ("grp_sales: [orders, ~]\n", "'grp_sales'"),
+    "top_level_list": ("- orders\n- lineitem\n", "mapping"),
+    # no silent fall-back to DEFAULT_GROUPS
+    "no_pyyaml": ("grp_sales: [orders]\n", "pyyaml"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(BAD_GROUP_FILES))
+def test_load_groups_rejects_malformed_file(tmp_path, monkeypatch, case):
+    text, names = BAD_GROUP_FILES[case]
+    path = tmp_path / "table_groups.yaml"
+    path.write_text(text)
+    if case == "no_pyyaml":
+        monkeypatch.setitem(sys.modules, "yaml", None)
+    with pytest.raises(ValueError, match=re.escape(names)) as err:
+        load_groups(str(path))
+    assert str(path) in str(err.value)
+
+
+def test_load_groups_null_group_and_empty_file(tmp_path):
+    path = tmp_path / "table_groups.yaml"
+    path.write_text("grp_sales: [orders]\ngrp_parties:\n")
+    assert load_groups(str(path)) == {"grp_sales": ["orders"], "grp_parties": []}
+    path.write_text("")
+    assert load_groups(str(path)) == {}
 
 
 #: (TABLE_GROUPS_FILE text or None for no file, table → expected group;
@@ -241,57 +277,6 @@ def test_apply_diff_broadcast_anti_join(spark, sf_dir):
     rebuilt = apply_diff(old, snapshot_diff(old, new, keys, comps), keys, comps)
     plan = rebuilt._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
-def test_observe_actions_zero_extra_pass(spark, sf_dir):
-    """Observation counters must match exact per-action counts and ride
-    the consuming action's job (no second scan: reading .get after one
-    write returns the metrics)."""
-    from mysql_cdc_to_http_spark.catalog import load_table
-    from mysql_cdc_to_http_spark.operators.diff import snapshot_diff
-    from mysql_cdc_to_http_spark.operators.metrics import observe_actions
-    from mysql_cdc_to_http_spark.queries.cdc import _diff_snapshots
-
-    old, new = _diff_snapshots(spark, sf_dir)
-    changes = snapshot_diff(
-        old, new, ["o_orderkey"], ["o_orderstatus", "o_totalprice"]
-    )
-    observed, obs = observe_actions(changes)
-    observed.write.mode("overwrite").format("noop").save()
-    got = obs.get
-    expected = {
-        r.action: r.n
-        for r in changes.groupBy("action")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    assert got["n_insert"] == expected.get("insert", 0) > 0
-    assert got["n_update"] == expected.get("update", 0) > 0
-    assert got["n_delete"] == expected.get("delete", 0) > 0
-    assert got["n_rows"] == sum(expected.values())
-
-
-def test_observe_actions_cdc_vocabulary(spark, sf_dir):
-    """The same counters work over the CDC op codes (c/u/d) on the
-    envelope stream — the consume-time log point the reference uses."""
-    from mysql_cdc_to_http_spark.operators.metrics import observe_actions
-    from mysql_cdc_to_http_spark.sources.cdc import synthetic_change_events
-
-    changes = synthetic_change_events(spark, sf_dir)
-    observed, obs = observe_actions(
-        changes, action_col="op", name="cdc_ops", actions=("c", "u", "d")
-    )
-    observed.write.mode("overwrite").format("noop").save()
-    got = obs.get
-    expected = {
-        r.op: r.n
-        for r in changes.groupBy("op")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    for a in ("c", "u", "d"):
-        assert got[f"n_{a}"] == expected.get(a, 0)
-    assert got["n_rows"] == sum(expected.values())
 
 
 def test_maintain_joined_view_equals_full_recompute(spark, sf_dir):

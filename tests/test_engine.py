@@ -617,3 +617,77 @@ def test_engine_dead_letters_poison_and_restarts(spark, tmp_path):
         assert _dead_letters(spark, dlq) == []
     finally:
         srv.shutdown()
+
+
+def _java_children(pid: int) -> list[int]:
+    """Pids of ``java`` processes whose parent is ``pid``."""
+    out = []
+    for entry in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{entry}/stat") as fh:
+                stat = fh.read()
+        except OSError:
+            continue
+        comm = stat[stat.index("(") + 1:stat.rindex(")")]
+        ppid = int(stat[stat.rindex(")") + 2:].split()[1])
+        if comm == "java" and ppid == pid:
+            out.append(int(entry))
+    return out
+
+
+def _alive(pid: int) -> bool:
+    """Running and not a zombie (an exited child its new parent has not
+    reaped yet has stopped all the same)."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            return fh.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except OSError:
+        return False
+
+
+def test_cli_pipeline_stops_cleanly_on_sigterm(tmp_path, sink_server):
+    """SIGTERM to ``python -m mysql_cdc_to_http_spark pipeline`` after the
+    first committed micro-batch: the CLI stops its queries and Spark and
+    exits 0 (not 143), and its driver JVM does not outlive it."""
+    import signal
+    import subprocess
+    import sys
+    import time
+
+    base, sink = sink_server
+    events_dir, work_dir = str(tmp_path / "events"), str(tmp_path / "w")
+    _write_one_file_batches(events_dir, 3, per_file=6)
+    env = dict(os.environ, POST_URL=base, MAX_FILES_PER_TRIGGER="1",
+               SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEMORY="1g")
+    env.pop("TABLE_GROUPS_FILE", None)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    log = open(tmp_path / "cli.log", "w")
+    proc = subprocess.Popen(
+        [sys.executable, "-m", "mysql_cdc_to_http_spark", "pipeline",
+         "--events-dir", events_dir, "--work-dir", work_dir],
+        cwd=repo, env=env, stdout=log, stderr=subprocess.STDOUT,
+        start_new_session=True,
+    )
+    try:
+        first_commit = os.path.join(work_dir, "ckpt_direct", "commits", "0")
+        deadline = time.monotonic() + 180
+        while not os.path.exists(first_commit):
+            assert proc.poll() is None, (tmp_path / "cli.log").read_text()[-2000:]
+            assert time.monotonic() < deadline, "no micro-batch committed"
+            time.sleep(0.2)
+        jvms = _java_children(proc.pid)
+        assert jvms, "the CLI runs no driver JVM"
+        proc.send_signal(signal.SIGTERM)
+        assert proc.wait(timeout=60) == 0, (tmp_path / "cli.log").read_text()[-2000:]
+        deadline = time.monotonic() + 30
+        while any(map(_alive, jvms)) and time.monotonic() < deadline:
+            time.sleep(0.2)
+        assert not any(map(_alive, jvms)), f"JVM outlived the CLI: {jvms}"
+        assert sink.hits
+    finally:
+        try:
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+        proc.wait()
+        log.close()

@@ -9,10 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from mysql_cdc_to_http_spark.operators.layout import (
-    compact_small_files,
-    write_partitioned,
-)
+from mysql_cdc_to_http_spark.operators.layout import write_partitioned
 
 
 def _plan(df) -> str:
@@ -67,135 +64,6 @@ def test_write_partitioned_sorts_within_files(spark, sf_dir, tmp_path):
     one = glob.glob(os.path.join(out, "event_type=*", "*.parquet"))[0]
     vals = [r["user_id"] for r in spark.read.parquet(one).collect()]
     assert vals == sorted(vals)
-
-
-def test_compact_small_files(spark, sf_dir, tmp_path):
-    frag = str(tmp_path / "frag")
-    _events(spark, sf_dir).repartition(16).write.parquet(frag)
-    assert len(glob.glob(os.path.join(frag, "*.parquet"))) == 16
-    out = str(tmp_path / "compact")
-    compact_small_files(spark, frag, 2, out)
-    assert len(glob.glob(os.path.join(out, "*.parquet"))) == 2
-    assert spark.read.parquet(out).count() == spark.read.parquet(frag).count()
-
-
-def test_stream_to_partitioned_layout_exactly_once(spark, sf_dir, tmp_path):
-    """Streamed ingestion into the hive layout: restart from checkpoint
-    must not double-deliver, partition dirs must exist, and a filter on
-    the partition column must prune (PartitionFilters in the scan)."""
-    import shutil
-
-    from mysql_cdc_to_http_spark.operators.layout import (
-        stream_to_partitioned_layout,
-    )
-
-    src = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
-        "event_id", "event_type", "user_id"
-    )
-    feed = str(tmp_path / "feed")
-    src.repartition(4).write.parquet(feed)
-
-    out = str(tmp_path / "stream_out")
-    ckpt = str(tmp_path / "ckpt")
-
-    def start():
-        stream = (
-            spark.readStream.schema(src.schema).parquet(feed)
-        )
-        return stream_to_partitioned_layout(
-            stream, out, ckpt, ["event_type"]
-        )
-
-    q = start()
-    q.processAllAvailable()
-    q.stop()
-    q2 = start()  # restart: checkpoint says nothing new
-    q2.processAllAvailable()
-    q2.stop()
-
-    back = spark.read.parquet(out)
-    assert back.count() == src.count()
-    assert (
-        back.select("event_id").distinct().count()
-        == src.select("event_id").distinct().count()
-    )
-    assert glob.glob(os.path.join(out, "event_type=*"))
-    one_type = src.first()["event_type"]
-    plan = _plan(back.filter(F.col("event_type") == one_type))
-    assert "PartitionFilters" in plan
-    shutil.rmtree(feed)
-
-
-def test_zorder_prunes_both_dimensions(spark, tmp_path):
-    """Z-order's contract is BALANCED file skipping (checked against the
-    real parquet footer min/max — the statistics scan planners skip
-    by): under a linear o_custkey sort, a predicate on o_totalprice
-    alone admits EVERY file (the non-leading column spans the full
-    domain per file), while the Morton layout prunes hard on either
-    column alone. Linear stays better for leading-column-only
-    predicates — that tradeoff is the operator's documented contract,
-    not a bug — so the test asserts z prunes well on BOTH dims and
-    linear prunes on only one."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    from mysql_cdc_to_http_spark.catalog import load_table
-    from mysql_cdc_to_http_spark.operators.layout import write_zordered
-
-    orders = load_table(spark, "/root/testdata/sf0.01", "orders").select(
-        "o_custkey", "o_totalprice"
-    )
-    n_files = 64
-    zdir, ldir = str(tmp_path / "z"), str(tmp_path / "lin")
-    write_zordered(orders, zdir, ["o_custkey", "o_totalprice"], n_files)
-    (
-        orders.repartitionByRange(n_files, F.col("o_custkey"))
-        .sortWithinPartitions("o_custkey")
-        .write.mode("overwrite")
-        .parquet(ldir)
-    )
-
-    # ~10% slices of each domain (custkey 1..1500, price ~1k..550k)
-    ck_pred = ("o_custkey", 700, 850)
-    tp_pred = ("o_totalprice", 20000.0, 70000.0)
-
-    def candidate_files(d, preds):
-        hits, total = 0, 0
-        for f in glob.glob(os.path.join(d, "part-*.parquet")):
-            md = pq.read_metadata(f)
-            names = md.schema.names
-            total += 1
-            admit = True
-            for col, lo, hi in preds:
-                st = md.row_group(0).column(names.index(col)).statistics
-                cmin, cmax = st.min, st.max
-                for rg in range(1, md.num_row_groups):
-                    st = md.row_group(rg).column(names.index(col)).statistics
-                    cmin, cmax = min(cmin, st.min), max(cmax, st.max)
-                if cmax < lo or cmin > hi:
-                    admit = False
-            hits += admit
-        return hits, total
-
-    z_tp, z_total = candidate_files(zdir, [tp_pred])
-    l_tp, l_total = candidate_files(ldir, [tp_pred])
-    z_ck, _ = candidate_files(zdir, [ck_pred])
-    # non-leading dim: linear admits everything, z skips most files
-    assert l_tp == l_total
-    assert z_tp <= z_total // 2, (z_tp, z_total)
-    # leading dim: z still prunes (balanced), even if less than linear
-    assert z_ck <= z_total // 2, (z_ck, z_total)
-
-    # correctness: both layouts return identical query results
-    pred = (
-        F.col("o_custkey").between(ck_pred[1], ck_pred[2])
-        & F.col("o_totalprice").between(tp_pred[1], tp_pred[2])
-    )
-    zc = spark.read.parquet(zdir).filter(pred).count()
-    lc = spark.read.parquet(ldir).filter(pred).count()
-    assert zc == lc == orders.filter(pred).count() > 0
 
 
 # --- deterministic sharded export -------------------------------------------

@@ -18,7 +18,6 @@ from mysql_cdc_to_http_spark.operators.multimodal import (
     attach_media,
     decode_media,
     extract_features,
-    frame_sample_plan,
 )
 from mysql_cdc_to_http_spark.operators.similarity import (
     assign_buckets,
@@ -147,9 +146,6 @@ def test_multimodal_stub_and_features(spark, sf_dir):
     for r in rows:
         assert len(r.features) == 32
         assert abs(sum(r.features) - 1.0) < 1e-3  # normalized histogram
-    frames = frame_sample_plan(assets)
-    if frames.count() > 0:
-        assert frames.agg(F.min("frame_no")).collect()[0][0] == 0
 
 
 def _encode_png(arr, filters=None):
@@ -269,33 +265,6 @@ def test_png_decode_rejects_unsupported_variants():
     assert decode_media(_encode_png(img), "image/png").shape == (2, 3, 3)
 
 
-def test_image_stats_real_decode_over_mapinpandas(spark):
-    """image_stats runs the REAL decode path distributed: a generated
-    PNG yields exact width/height/channels/mean; an undecodable payload
-    yields a decode_error row instead of failing the stage."""
-    import numpy as np
-
-    from mysql_cdc_to_http_spark.operators.multimodal import image_stats
-
-    img = np.zeros((4, 6, 3), dtype=np.uint8)
-    img[:, :, 0] = 30  # R plane constant → mean = 10.0 exactly
-    png = _encode_png(img, filters=[0, 1, 2, 4])
-    rows = spark.createDataFrame(
-        [
-            (1, "image/png", bytearray(png)),
-            (2, "video/mp4", bytearray(b"not-an-image")),
-        ],
-        "asset_id long, media_type string, content binary",
-    )
-    got = {r.asset_id: r for r in image_stats(rows).collect()}
-    ok = got[1]
-    assert (ok.width, ok.height, ok.channels) == (6, 4, 3)
-    assert abs(ok.mean_intensity - 10.0) < 1e-9
-    assert ok.decode_error is None
-    bad = got[2]
-    assert bad.width is None and bad.decode_error is not None
-
-
 def test_hyperplane_lsh_recovers_planted_near_identicals(spark, sf_dir):
     """Planted ≥0.999-cosine variants must be recovered by the banded
     sign-bucket path (the q_dedup_embedding production config)."""
@@ -373,53 +342,6 @@ def test_connected_components_nonconvergence_is_loud(spark):
     # and a sufficient budget converges exactly
     comp = connected_components(edges, nodes, id_col="id", max_iter=25)
     assert {r.cluster_id for r in comp.collect()} == {1}
-
-
-def test_knn_topk_strategy_selection(spark, sf_dir):
-    """auto = exact under the row threshold, IVF above it; explicit
-    strategies pin the plan; both strategies return k rows per query
-    and exact == bruteforce results."""
-    import pytest as _pytest
-
-    from mysql_cdc_to_http_spark.catalog import load_table
-    from mysql_cdc_to_http_spark.operators.similarity import (
-        cosine_topk_bruteforce,
-        knn_topk,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.limit(3)
-    with _pytest.raises(ValueError):
-        knn_topk(queries, emb, strategy="bogus")
-
-    def plan(df):
-        return df._jdf.queryExecution().optimizedPlan().toString()
-
-    # small corpus → auto picks the exact broadcast scan (no bucket col)
-    auto_small = knn_topk(queries, emb, k=2, strategy="auto")
-    assert "bucket" not in plan(auto_small)
-    exact = cosine_topk_bruteforce(queries, emb, k=2)
-    assert sorted(map(tuple, auto_small.collect())) == sorted(
-        map(tuple, exact.collect())
-    )
-    # conf-forced tiny threshold → auto switches to the IVF probe path
-    spark.conf.set("spark.graft.knn.bruteforceMaxRows", "10")
-    try:
-        auto_big = knn_topk(queries, emb, k=2, strategy="auto")
-        assert "bucket" in plan(auto_big)
-        # per-query row budget holds on the approximate path too
-        counts = {
-            r["query_id"]: r["n"]
-            for r in auto_big.groupBy("query_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        assert all(n == 2 for n in counts.values())
-    finally:
-        spark.conf.unset("spark.graft.knn.bruteforceMaxRows")
-    # corpus_rows hint avoids the count job and drives the same choice
-    hinted = knn_topk(queries, emb, k=2, strategy="auto", corpus_rows=5)
-    assert "bucket" not in plan(hinted)
 
 
 def test_release_all_cached_releases_lsh_intermediates(spark):
@@ -538,30 +460,6 @@ def test_connected_components_init_fuses_first_hop(spark):
     got = {r.id: r.cluster_id for r in comp.collect()}
     release_all_cached()
     assert got == {1: 1, 2: 1, 3: 1}
-
-
-def test_cache_scope_releases_only_its_own(spark):
-    """cache_scope unpersists frames registered inside the block and
-    leaves earlier registrations cached (the precise per-pipeline form;
-    release_all_cached stays the serial-driver catch-all)."""
-    from mysql_cdc_to_http_spark.operators.caching import (
-        cache_scope,
-        register_cached,
-        release_all_cached,
-    )
-
-    outer = spark.range(10).persist()
-    register_cached(outer, [outer])
-    outer.count()
-    with cache_scope():
-        inner = spark.range(5).persist()
-        register_cached(inner, [inner])
-        inner.count()
-        assert inner.storageLevel.useMemory
-    assert not inner.storageLevel.useMemory  # scope released it
-    assert outer.storageLevel.useMemory  # untouched
-    released = release_all_cached()
-    assert released == 1 and not outer.storageLevel.useMemory
 
 
 def test_incremental_dedup_equals_one_shot(spark, sf_dir, tmp_path):
@@ -878,30 +776,6 @@ def test_resize_nearest_exact_pixels():
     ]
 
 
-def test_resize_images_mapinpandas_real_png(spark):
-    import numpy as np
-
-    from mysql_cdc_to_http_spark.operators.multimodal import (
-        resize_nearest,
-    )
-    from mysql_cdc_to_http_spark.operators import multimodal as mm
-
-    img = np.arange(64, dtype=np.uint8).reshape(8, 8, 1)
-    png = _encode_png(img)
-    assets = spark.createDataFrame(
-        [(1, "image/png", bytearray(png)), (2, "video/mp4", bytearray(b"xx"))],
-        "asset_id long, media_type string, content binary",
-    )
-    rows = {r["asset_id"]: r for r in mm.resize_images(assets, 4, 4).collect()}
-    good = rows[1]
-    assert (good["width"], good["height"], good["channels"]) == (4, 4, 1)
-    expect = resize_nearest(img, 4, 4).tobytes()
-    assert bytes(good["pixels"]) == expect
-    # undecodable video quarantines instead of failing the stage
-    assert rows[2]["decode_error"] is not None
-    assert rows[2]["pixels"] is None
-
-
 def test_triangle_count_known_graphs(spark):
     from mysql_cdc_to_http_spark.operators.graph import triangle_count_df
 
@@ -990,62 +864,6 @@ def test_decode_wav_exact():
 
     with pytest.raises(ValueError):
         decode_wav(b"RIFFgarbage-not-a-wav")
-
-
-def test_audio_stats_real_decode_over_mapinpandas(spark):
-    """REAL WAV decode through the Arrow mapInPandas pipeline: exact
-    rate/channels/frames/duration/peak per asset; a corrupt payload
-    quarantines to a decode_error row instead of failing the stage."""
-    import numpy as np
-
-    from mysql_cdc_to_http_spark.operators.multimodal import audio_stats
-
-    pcm = np.array([0, 3000, -4000, 1000], dtype="<i2").tobytes()
-    good = _make_wav(8000, 1, 2, pcm)
-    rows = [(1, "audio/wav", bytearray(good)), (2, "audio/wav", bytearray(b"RIFFbroken"))]
-    df = spark.createDataFrame(
-        rows, "asset_id long, media_type string, content binary"
-    )
-    out = {r.asset_id: r for r in audio_stats(df).collect()}
-    ok = out[1]
-    assert ok.decode_error is None
-    assert (ok.sample_rate, ok.n_channels, ok.n_frames) == (8000, 1, 4)
-    assert ok.duration_ms == 4 * 1000 // 8000
-    assert ok.peak_abs == 4000
-    assert abs(ok.rms - float(np.sqrt(np.mean(np.array([0, 3000, -4000, 1000], dtype=np.float64) ** 2)))) < 1e-9
-    bad = out[2]
-    assert bad.sample_rate is None and bad.decode_error is not None
-
-
-def test_resample_wav_deterministic_halving(spark):
-    """Nearest-sample resample 8 kHz → 4 kHz keeps exactly every other
-    sample (pixel-center mapping) and emits mono PCM16; stereo mixes
-    down by integer-truncated mean; re-runs are byte-identical."""
-    import numpy as np
-
-    from mysql_cdc_to_http_spark.operators.multimodal import (
-        resample_nearest_audio,
-        resample_wavs,
-    )
-
-    src = np.arange(8, dtype=np.int32)
-    out = resample_nearest_audio(src, 8000, 4000)
-    assert out.tolist() == [1, 3, 5, 7]
-    # identity resample is a no-op
-    assert resample_nearest_audio(src, 8000, 8000).tolist() == src.tolist()
-
-    pcm = np.array([10, 20, 30, 40, 50, 60, 70, 80], dtype="<i2").tobytes()
-    wav = _make_wav(8000, 1, 2, pcm)
-    df = spark.createDataFrame(
-        [(7, "audio/wav", bytearray(wav))],
-        "asset_id long, media_type string, content binary",
-    )
-    r1 = resample_wavs(df, dst_rate=4000).collect()[0]
-    r2 = resample_wavs(df, dst_rate=4000).collect()[0]
-    assert r1.decode_error is None and r1.n_frames == 4
-    got = np.frombuffer(bytes(r1.pcm16), dtype="<i2").tolist()
-    assert got == [20, 40, 60, 80]
-    assert bytes(r1.pcm16) == bytes(r2.pcm16)
 
 
 def test_embedding_audit_parity_on_ragged_batch(spark, tmp_path):
@@ -1142,60 +960,6 @@ def test_encode_png_gray_roundtrip_exact():
 
     with _pytest.raises(ValueError, match="grayscale"):
         encode_png_gray(np.zeros((2, 2, 3), dtype=np.uint8))
-
-
-def test_bpe_train_matches_reference_implementation(spark):
-    """X200+: the distributed BPE loop must produce the same ordered
-    merge list and final segmentations as a straightforward in-memory
-    reference BPE (same deterministic tie-break: freq desc, then pair
-    lexicographic) on a small corpus."""
-    from mysql_cdc_to_http_spark.operators.text import bpe_train
-
-    word_freqs = [
-        ("lower", 5), ("lowest", 3), ("newer", 6), ("wider", 2),
-        ("low", 7), ("new", 4), ("widest", 1),
-    ]
-
-    # reference in-memory BPE
-    def ref_bpe(wf, n_merges):
-        vocab = {w: [*w] for w, _ in wf}
-        freqs = dict(wf)
-        merges = []
-        for _ in range(n_merges):
-            pc = {}
-            for w, syms in vocab.items():
-                for i in range(len(syms) - 1):
-                    pc[(syms[i], syms[i + 1])] = (
-                        pc.get((syms[i], syms[i + 1]), 0) + freqs[w]
-                    )
-            if not pc:
-                break
-            best = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))[0]
-            merges.append(best)
-            a, b = best
-            for w, syms in vocab.items():
-                out, i = [], 0
-                while i < len(syms):
-                    if (
-                        i + 1 < len(syms)
-                        and syms[i] == a
-                        and syms[i + 1] == b
-                    ):
-                        out.append(a + b)
-                        i += 2
-                    else:
-                        out.append(syms[i])
-                        i += 1
-                vocab[w] = out
-        return merges, vocab
-
-    want_merges, want_vocab = ref_bpe(word_freqs, 6)
-    df = spark.createDataFrame(word_freqs, "w string, f long")
-    got_merges, got_vocab_df = bpe_train(df, 6)
-    assert got_merges == want_merges
-    got_vocab = {r["w"]: list(r["symbols"]) for r in got_vocab_df.collect()}
-    assert got_vocab == want_vocab
-    got_vocab_df.unpersist()
 
 
 def test_kmv_sketch_estimates_and_coordination(spark, sf_dir):
@@ -1305,66 +1069,6 @@ def test_prefix_filter_exact_recall(spark, sf_dir):
     }
     assert len(brute) > 0  # the variant construction plants true pairs
     assert got == brute  # complete AND sound
-
-
-def test_bpe_encode_matches_train_and_reference(spark):
-    """X210: (a) greedy rank-lowest-first encoding reproduces the
-    SEQUENTIAL merge application bpe_train performs — encoding the
-    training words with the full merge list yields exactly the final
-    symbol-table token counts; (b) counts match an independent
-    pure-python sequential-apply reference on fresh text."""
-    from pyspark.sql import functions as F
-
-    from mysql_cdc_to_http_spark.operators.text import bpe_encode, bpe_train
-
-    freqs = spark.createDataFrame(
-        [("low", 5), ("lower", 2), ("newest", 6), ("widest", 3),
-         ("newer", 4), ("wide", 2)],
-        "w string, f long",
-    )
-    merges, vocab = bpe_train(freqs, 8)
-    want = {r.w: len(r.symbols) for r in vocab.collect()}
-    docs = spark.createDataFrame(
-        [(i, w) for i, (w, _) in enumerate(
-            [("low", 0), ("lower", 0), ("newest", 0), ("widest", 0),
-             ("newer", 0), ("wide", 0)])],
-        "doc_id long, text string",
-    )
-    got = {r.doc_id: r.n_tokens for r in bpe_encode(docs, merges).collect()}
-    for i, w in enumerate(["low", "lower", "newest", "widest", "newer",
-                           "wide"]):
-        assert got[i] == want[w], (w, got[i], want[w])
-
-    # (b) independent sequential-apply reference on unseen words
-    def ref_encode(word):
-        syms = list(word)
-        for a, b in merges:  # sequential, in training order
-            out, i = [], 0
-            while i < len(syms):
-                if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                    out.append(a + b)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            syms = out
-        return len(syms)
-
-    fresh = spark.createDataFrame(
-        [(0, "newfangled widgets"), (1, "the lowest wideness"),
-         (2, ""), (3, "   ")],
-        "doc_id long, text string",
-    )
-    got2 = {
-        r.doc_id: (r.n_words, r.n_tokens)
-        for r in bpe_encode(fresh, merges).collect()
-    }
-    for did, text in [(0, "newfangled widgets"), (1, "the lowest wideness"),
-                      (2, ""), (3, "   ")]:
-        words = [w for w in text.lower().split() if w]
-        assert got2[did] == (
-            len(words), sum(ref_encode(w) for w in words)
-        ), (did, got2[did])
 
 
 def test_group_split_is_leakage_free(spark, sf_dir):

@@ -37,34 +37,6 @@ def test_partition_pruning(spark, sf_dir, tmp_path):
     assert df.count() == n_expected > 0
 
 
-def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
-    """Same-bucketed tables join with ZERO exchanges (vs 4 unbucketed) —
-    the co-location strategy for recurring fact⋈fact joins at scale."""
-    from mysql_cdc_to_http_spark.operators.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        orders = load_table(spark, sf_dir, "orders")
-        li = load_table(spark, sf_dir, "lineitem").withColumnRenamed(
-            "l_orderkey", "o_orderkey"
-        )
-        write_bucketed(orders, "b_orders", "o_orderkey", 8)
-        write_bucketed(li, "b_lineitem", "o_orderkey", 8)
-        j = bucketed_join(spark, "b_orders", "b_lineitem", "o_orderkey")
-        plan = plan_of(j)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        assert j.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_lint_flags_cartesian(spark, sf_dir):
     big_a = load_table(spark, sf_dir, "orders")
     big_b = load_table(spark, sf_dir, "lineitem")
@@ -1525,3 +1497,110 @@ def test_global_sort_class_a_bounded(spark, name):
         "(drop the presentation sort or move to GLOBAL_SORT_CLASS_B "
         "with an ordering-contract argument)"
     )
+
+
+# ---------------------------------------------------------------------------
+# Shipped-surface lint: every top-level def in the package must be reachable
+# from what ships, so library code nothing runs cannot grow back unnoticed.
+# Roots: the registered (@query) functions, every module's import-time
+# statements (CLI ``main`` included), and the entry scripts. A def is
+# reached when its name occurs as an AST identifier (Name or Attribute) in
+# a root or in a reached def; names in strings, comments and docstrings do
+# not count, nor do import statements alone. Names are matched without
+# their module: a def that shares its name with a reached one counts as
+# reached.
+# ---------------------------------------------------------------------------
+import ast as _ast
+import os as _os
+
+_REPO = _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+_SHIPPED_ROOTS = (
+    "__spark_entry__.py", "bench.py", "bench_stream.py", "scripts", "perfbench",
+)
+
+#: Defs no shipped root reaches, each with why it stays. Every entry must
+#: still be unreachable, so the list only shrinks.
+UNSHIPPED_ALLOWED = {
+    "explain_formatted": "plan-lint toolkit the plan lints run over queries",
+    "lint_plan": "plan-lint toolkit the plan lints run over queries",
+    "PlanIssue": "plan-lint toolkit: lint_plan's result type",
+    "block_stats": "test-only: pins q_record_linkage's block-size bound",
+    "triangle_count_df": "test-only: test_triangle_count_known_graphs",
+    "write_partitioned": "test-only: partition-pruning tests in test_layout.py",
+    "write_shards": "test-only: sharded-export tests in test_layout.py",
+    "compact_parquet": "test-only: test_compact_parquet",
+    "resize_nearest": "test-only: test_resize_nearest_exact_pixels",
+    "ivf_staleness": "test-only: test_ivf_staleness_gate",
+    "stream_to_state": "test-only: test_latest_state_stream_merge_and_replay",
+}
+
+
+def _py_files(root):
+    if root.endswith(".py"):
+        yield root
+        return
+    for dirpath, _, files in _os.walk(root):
+        yield from (_os.path.join(dirpath, f) for f in sorted(files) if f.endswith(".py"))
+
+
+def _module_body(path):
+    with open(path) as fh:
+        return _ast.parse(fh.read()).body
+
+
+def _identifiers(nodes):
+    out = set()
+    for node in nodes:
+        for n in _ast.walk(node):
+            if isinstance(n, _ast.Name):
+                out.add(n.id)
+            elif isinstance(n, _ast.Attribute):
+                out.add(n.attr)
+    return out
+
+
+def _is_query(fn):
+    return any(
+        isinstance(d, _ast.Call) and getattr(d.func, "id", None) == "query"
+        for d in fn.decorator_list
+    )
+
+
+def _unshipped_defs():
+    defs: dict[str, list] = {}
+    seen: set[str] = set()
+    for path in _py_files(_os.path.join(_REPO, "mysql_cdc_to_http_spark")):
+        for st in _module_body(path):
+            if isinstance(st, (_ast.FunctionDef, _ast.AsyncFunctionDef, _ast.ClassDef)):
+                defs.setdefault(st.name, []).append(st)
+                if isinstance(st, _ast.FunctionDef) and _is_query(st):
+                    seen.add(st.name)
+            elif not isinstance(st, (_ast.Import, _ast.ImportFrom)):
+                seen |= _identifiers([st])
+    for root in _SHIPPED_ROOTS:
+        for path in _py_files(_os.path.join(_REPO, root)):
+            if _os.path.basename(path).startswith("test_"):
+                continue
+            seen |= _identifiers(
+                st for st in _module_body(path)
+                if not isinstance(st, (_ast.Import, _ast.ImportFrom))
+            )
+    reached: set[str] = set()
+    frontier = seen & defs.keys()
+    while frontier:
+        reached |= frontier
+        seen |= _identifiers(st for name in frontier for st in defs[name])
+        frontier = (seen & defs.keys()) - reached
+    return defs.keys() - reached
+
+
+def test_every_package_def_is_reachable_from_shipped_roots():
+    unshipped = _unshipped_defs()
+    assert sorted(unshipped - UNSHIPPED_ALLOWED.keys()) == [], (
+        "top-level defs that no query, CLI, entry script, scripts/ or "
+        "perfbench/ reaches — delete them (and tests that only test them)"
+    )
+    assert sorted(UNSHIPPED_ALLOWED.keys() - unshipped) == [], (
+        "allowlisted defs are reachable now — drop them from UNSHIPPED_ALLOWED"
+    )
+    assert all(reason.strip() for reason in UNSHIPPED_ALLOWED.values())

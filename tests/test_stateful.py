@@ -122,66 +122,3 @@ def test_rocksdb_state_store_provider_works(spark, sf_dir):
     assert got == want
 
 
-def test_stateful_ttl_evicts_idle_key(spark, tmp_path):
-    """ADVICE r8: running_user_totals_ttl's event-time-timeout path had
-    no test. Two micro-batches: user 1 is active only in batch 1; batch
-    2's events push the watermark (max ts − 1h) past user 1's timeout
-    horizon (last ts + 1h), so the timeout fires — user 1 must emit a
-    finalized=1 eviction row carrying its accumulated totals, and user
-    2 (still inside the horizon) must not."""
-    import datetime as dt
-    import os
-    import time
-
-    from mysql_cdc_to_http_spark.streaming.stateful import (
-        running_user_totals_ttl,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def _write(name, rows):
-        df = spark.createDataFrame(rows, "user_id long, ts timestamp, value double")
-        df.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stage" / name))
-        # move the single part file in, with an increasing mtime so the
-        # file source processes batches in this order
-        part = next(
-            p for p in (tmp_path / "stage" / name).iterdir()
-            if p.name.endswith(".parquet")
-        )
-        dest = src / f"{name}.parquet"
-        part.rename(dest)
-        os.utime(dest, (time.time(), time.time()))
-        time.sleep(0.05)
-
-    t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-    _write("b1", [(1, t0, 10.0), (1, t0 + dt.timedelta(minutes=5), 7.0)])
-    # 12h later: watermark after this batch = 12:00 − 1h = 11:00, far
-    # past user 1's timeout at 01:05
-    _write("b2", [(2, t0 + dt.timedelta(hours=12), 3.0)])
-
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
-    out = running_user_totals_ttl(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("ttl_totals")
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination(30)
-
-    rows = spark.sql("SELECT * FROM ttl_totals").collect()
-    evicted = [r for r in rows if r.finalized == 1]
-    assert [(r.user_id, r.n_events, r.total_value) for r in evicted] == [
-        (1, 2, 17.0)
-    ]
-    # user 2 stays live (no eviction row), but did emit a running row
-    assert any(r.user_id == 2 and r.finalized == 0 for r in rows)

@@ -258,77 +258,6 @@ def test_watermark_drops_late_events(spark, tmp_path):
     assert (d(2024, 1, 1, 12, 0, 0), 1) in out, out
 
 
-def test_incremental_agg_stream_matches_batch(spark, sf_dir, tmp_path):
-    """Micro-batched delta maintenance equals the one-shot aggregate:
-    replaying the changelog in any batch split telescopes to the same
-    maintained table (and a re-merge of an already-applied batch must
-    NOT — deltas are at-most-once per event, unlike idempotent rank
-    merges — so the foreachBatch wiring relies on checkpointed offsets)."""
-    from mysql_cdc_to_http_spark.queries.streaming import _orders_changelog
-    from mysql_cdc_to_http_spark.streaming.incremental_agg import (
-        delta_aggregate,
-        event_deltas,
-        merge_deltas_into_state,
-    )
-
-    changes = _orders_changelog(spark, sf_dir)
-    state_dir = str(tmp_path / "agg_state")
-    # split the changelog into 3 deterministic micro-batches by op
-    for op in ("c", "u", "d"):
-        merge_deltas_into_state(
-            spark,
-            changes.filter(F.col("op") == op),
-            state_dir,
-            group_field="s",
-            value_field="v",
-        )
-    got = {
-        r["grp"]: (r["n"], float(r["sum_value"]))
-        for r in spark.read.parquet(state_dir).collect()
-    }
-    want = {
-        r["grp"]: (r["n"], float(r["sum_value"]))
-        for r in delta_aggregate(
-            event_deltas(changes, group_field="s", value_field="v")
-        ).collect()
-    }
-    assert got == want and "F" not in got and len(got) == 2
-
-
-def test_incremental_agg_epoch_replay_guard(spark, sf_dir, tmp_path):
-    """foreachBatch is at-least-once; replaying an already-committed
-    epoch must be a no-op (the applied-epoch marker commits atomically
-    with the snapshot), while the next epoch applies normally."""
-    from mysql_cdc_to_http_spark.queries.streaming import _orders_changelog
-    from mysql_cdc_to_http_spark.streaming.incremental_agg import (
-        merge_deltas_into_state,
-    )
-
-    changes = _orders_changelog(spark, sf_dir)
-    state_dir = str(tmp_path / "epoch_state")
-    batch0 = changes.filter(F.col("op") == "c")
-    merge_deltas_into_state(
-        spark, batch0, state_dir, group_field="s", value_field="v", epoch_id=0
-    )
-    snap = sorted(map(tuple, spark.read.parquet(state_dir).collect()))
-    # crash-replay of epoch 0: state must not change
-    merge_deltas_into_state(
-        spark, batch0, state_dir, group_field="s", value_field="v", epoch_id=0
-    )
-    assert sorted(map(tuple, spark.read.parquet(state_dir).collect())) == snap
-    # epoch 1 applies
-    merge_deltas_into_state(
-        spark,
-        changes.filter(F.col("op") == "d"),
-        state_dir,
-        group_field="s",
-        value_field="v",
-        epoch_id=1,
-    )
-    after = {r["grp"] for r in spark.read.parquet(state_dir).collect()}
-    assert "F" not in after
-
-
 def test_event_deltas_honor_op_codes(spark):
     """A delete whose envelope still carries an after-image (tombstone
     dialects) must not count the row back in; an insert carrying a
@@ -355,45 +284,37 @@ def test_event_deltas_honor_op_codes(spark):
     assert out == {}  # insert then delete → group vanishes
 
 
-def test_uncommitted_tmp_discarded_on_recovery(spark, sf_dir, tmp_path):
+def test_uncommitted_tmp_discarded_on_recovery(spark, tmp_path):
     """Crash between the parquet write (which creates _SUCCESS) and the
-    marker writes must NOT promote __tmp: a promoted marker-less
-    snapshot loses the applied-epoch record, so the replayed epoch would
-    be folded AGAIN on top of a state that already contains it —
-    double-counted deltas. Recovery discards the uncommitted tmp and the
-    replay rebuilds from scratch instead."""
-    from mysql_cdc_to_http_spark.queries.streaming import _orders_changelog
-    from mysql_cdc_to_http_spark.streaming.incremental_agg import (
-        merge_deltas_into_state,
+    _graft_commit marker must NOT promote __tmp: recovery at the top of
+    the next merge discards the uncommitted snapshot, so none of its rows
+    leak into state. A COMMITTED tmp (the crash hit after the marker) is
+    promoted."""
+    from mysql_cdc_to_http_spark.streaming.latest_state import (
+        _recover_state_dir,
     )
 
-    changes = _orders_changelog(spark, sf_dir)
-    batch0 = changes.filter(F.col("op") == "c")
+    schema = "k long, offset long, op string"
+    batch0 = spark.createDataFrame([(1, 10, "c"), (2, 11, "c")], schema)
+    stale = spark.createDataFrame([(3, 12, "c")], schema)
     state_dir = str(tmp_path / "state")
-    merge_deltas_into_state(
-        spark, batch0, state_dir, group_field="s", value_field="v", epoch_id=0
-    )
-    want = sorted(map(tuple, spark.read.parquet(state_dir).collect()))
-    # simulate the first-epoch crash window: tmp data fully written
-    # (_SUCCESS present) but neither _graft_epoch nor _graft_commit made
-    # it, and no live dir exists yet
     tmp = state_dir + "__tmp"
-    os.replace(state_dir, tmp)
-    os.remove(os.path.join(tmp, "_graft_epoch"))
-    os.remove(os.path.join(tmp, "_graft_commit"))
+
+    def keys():
+        return sorted(r["k"] for r in spark.read.parquet(state_dir).collect())
+
+    # first-merge crash window: tmp data fully written (_SUCCESS present)
+    # but no _graft_commit marker, and no live dir exists yet
+    stale.write.parquet(tmp)
     assert os.path.exists(os.path.join(tmp, "_SUCCESS"))
-    merge_deltas_into_state(
-        spark, batch0, state_dir, group_field="s", value_field="v", epoch_id=0
-    )
-    assert sorted(map(tuple, spark.read.parquet(state_dir).collect())) == want
+    merge_batch_into_state(spark, batch0, state_dir, ["k"])
+    assert keys() == [1, 2]
     assert not os.path.exists(tmp)
-    # a COMMITTED tmp (both markers present) is promoted and its epoch
-    # honored: the replayed epoch is then a no-op
+    # a committed tmp with no live dir is promoted as-is
     os.replace(state_dir, tmp)
-    merge_deltas_into_state(
-        spark, batch0, state_dir, group_field="s", value_field="v", epoch_id=0
-    )
-    assert sorted(map(tuple, spark.read.parquet(state_dir).collect())) == want
+    _recover_state_dir(state_dir)
+    assert keys() == [1, 2]
+    assert not os.path.exists(tmp)
 
 
 def test_event_deltas_reject_unknown_op(spark):
