@@ -9,7 +9,7 @@ replays the ``$SPARK_GRAFT_SF_DIR`` feeds as timed micro-batches through
 the two stateful surfaces that define the engine's streaming story:
 
 1. **CDC pipeline**: envelope JSON files → streaming parse →
-   ``stream_to_state`` foreachBatch merge into the parquet state store
+   ``merge_batch_into_state`` foreachBatch merge into the parquet state store
    (sources/cdc.py → streaming/latest_state.py), INCLUDING a mid-stream
    kill + checkpoint restart. Reports sustained rows/s, per-batch
    latency percentiles, state rows/bytes per batch, and two hard

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from mysql_cdc_to_http_spark.operators import caching
+
 from mysql_cdc_to_http_spark.operators.similarity import (
     _centroid_literals,
     as_double,
@@ -275,15 +277,14 @@ def pca_power_scores(
     a NONDETERMINISTIC upstream (a sampled frame) would give μ, each t,
     and the final projection different data, breaking the documented
     exact-trajectory contract. The cache pins one materialization for
-    all of them; release via caching.release_all_cached() after the
-    final action (the register_cached contract)."""
+    all of them."""
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
     q6 = Decimal("0.000001")
-    base = df.select(F.col(id_col), as_double(vec_col).alias("cv")).persist()
+    base = caching.persist(
+        df.select(F.col(id_col), as_double(vec_col).alias("cv"))
+    )
     n = base.count()
     dim = len(base.select("cv").first()[0])
     mu_rows = (
@@ -329,7 +330,4 @@ def pca_power_scores(
         w = [
             float(Decimal(x / lam).quantize(q6, ROUND_HALF_UP)) for x in t
         ]
-    out = base.select(
-        F.col(id_col), F.round(proj_col(w), 6).alias("pc1")
-    )
-    return register_cached(out, [base])
+    return base.select(F.col(id_col), F.round(proj_col(w), 6).alias("pc1"))

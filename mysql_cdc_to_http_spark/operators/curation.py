@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from mysql_cdc_to_http_spark.operators import caching
+
 
 def tokenize(text_col):
     """Lowercased whitespace tokens; trimmed first — leading/trailing
@@ -142,19 +144,20 @@ def fuzzy_decontaminate(
 
     Returns (doc_id, bench_id, jaccard) — one row per (corpus doc,
     benchmark doc) pair at or above ``threshold``."""
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
     from mysql_cdc_to_http_spark.operators.dedup import (
         band_signatures,
         prepare_minhash,
     )
 
     rows_per_band = n_hashes // bands
-    prep_c = prepare_minhash(
-        corpus, id_col, text_col, n_hashes, shingle_k, "word"
-    ).persist()
-    prep_b = prepare_minhash(
-        benchmark, id_col, text_col, n_hashes, shingle_k, "word"
-    ).persist()
+    prep_c = caching.persist(
+        prepare_minhash(corpus, id_col, text_col, n_hashes, shingle_k, "word")
+    )
+    prep_b = caching.persist(
+        prepare_minhash(
+            benchmark, id_col, text_col, n_hashes, shingle_k, "word"
+        )
+    )
     banded_c = band_signatures(
         prep_c, id_col, "sig", bands, rows_per_band, max_bucket_size=500
     )
@@ -187,7 +190,7 @@ def fuzzy_decontaminate(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    verified = (
+    return (
         joined.select("id_a", "id_b", (inter / union).alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
         .select(
@@ -196,7 +199,6 @@ def fuzzy_decontaminate(
             "jaccard",
         )
     )
-    return register_cached(verified, [prep_c, prep_b])
 
 
 def repetition_score(
@@ -410,14 +412,13 @@ def dsir_scores(
     # property, so "grams in target docs per bucket" == Σ c over target
     # docs' rows) — deriving them from the persisted doc_counts removes
     # two of the three tokenize+explode passes (guide §2.3 "aggregate
-    # before you shuffle", §2.4). Released via the caching contract.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    doc_counts = grams.groupBy(id_col, "b").agg(
-        F.count(F.lit(1)).alias("c"),
-        F.max("__is_t").alias("__is_t"),
-    ).persist()
-    register_cached(doc_counts, [doc_counts])
+    # before you shuffle", §2.4).
+    doc_counts = caching.persist(
+        grams.groupBy(id_col, "b").agg(
+            F.count(F.lit(1)).alias("c"),
+            F.max("__is_t").alias("__is_t"),
+        )
+    )
     lm_t = (
         doc_counts.filter(F.col("__is_t") == 1)
         .groupBy("b")

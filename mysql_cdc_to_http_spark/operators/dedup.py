@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
+from mysql_cdc_to_http_spark.operators import caching
+
 #: 31-bit Mersenne prime: a·h + b stays under 2^62, so the permutation
 #: arithmetic never overflows a long even under ANSI mode.
 _MERSENNE = (1 << 31) - 1
@@ -287,17 +289,13 @@ def minhash_dedup_pairs(
     shingles — ~8× fewer on prose, the right default for long-document
     corpora at scale)."""
     rows_per_band = n_hashes // bands
-    prepared = (
+    # consumed twice (banding + verify) — cache instead of recomputing
+    # the signature fold; at cluster scale this is a checkpoint to
+    # storage rather than executor memory
+    prepared = caching.persist(
         prepare_minhash(
             docs, id_col, text_col, n_hashes, shingle_k, shingle_mode
         )
-        # consumed twice (banding + verify) — cache instead of recomputing
-        # the signature fold; at cluster scale this is a checkpoint to
-        # storage rather than executor memory. Registered so the caller
-        # can release_all_cached() after materializing (see
-        # operators/caching.py — repeated calls must not accumulate
-        # cached blocks in a long-lived session).
-        .persist()
     )
     cands = lsh_candidate_pairs(
         prepared, id_col, "sig", bands, rows_per_band
@@ -326,12 +324,7 @@ def minhash_dedup_pairs(
         .filter(F.col("est_jaccard") >= threshold - 0.2)
         .select("id_a", "id_b")
     )
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    return register_cached(
-        jaccard_verify(est, prepared, id_col, "shingles", threshold),
-        [prepared],
-    )
+    return jaccard_verify(est, prepared, id_col, "shingles", threshold)
 
 
 @pandas_udf(LongType())
@@ -430,9 +423,8 @@ def simhash_pairs(
     width = n_bits // 4
     mask = (1 << width) - 1
     sh = docs.select(F.col(id_col), fingerprint(F.col(text_col)).alias("sh"))
-    # consumed twice (banding + hamming verify) — compute the UDF once;
-    # registered with register_cached (operators/caching.py) for release
-    sh = sh.persist()
+    # consumed twice (banding + hamming verify) — compute the UDF once
+    sh = caching.persist(sh)
     chunks = F.array(
         *[
             F.struct(
@@ -475,18 +467,15 @@ def simhash_pairs(
     a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
     hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    return register_cached(
+    return (
         cands.join(a, "id_a")
         .join(b, "id_b")
         .select("id_a", "id_b", hamming.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
-        .distinct(),
-        [sh],
+        .distinct()
     )
 
-# Executors must not need this repo on their PYTHONPATH: register this
+
 def incremental_dedup(
     spark,
     new_docs: DataFrame,
@@ -632,6 +621,7 @@ def incremental_dedup(
     return out
 
 
+# Executors must not need this repo on their PYTHONPATH: register this
 # module for pickle-by-value so UDFs/closures ship inside the task
 # (the driver contract imports __spark_entry__.py by path, not site-packages).
 import sys as _sys
@@ -664,8 +654,6 @@ def semantic_dedup(
     survivor rule."""
     from mysql_cdc_to_http_spark.operators.clustering import kmeans
     from mysql_cdc_to_http_spark.operators.similarity import as_double
-
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
     from mysql_cdc_to_http_spark.operators.similarity import dot, l2_norm
 
     assigned = kmeans(vectors, k, iters, id_col, vec_col).select(
@@ -675,11 +663,10 @@ def semantic_dedup(
     # and the survivor join consume it, and its lineage re-runs the full
     # kmeans assignment otherwise; per-row norms precomputed here cut the
     # pair stage from 3 folds/pair (dot + 2 norms) to 1 (dot) + 1 multiply
-    side = (
+    side = caching.persist(
         vectors.select(F.col(id_col), as_double(vec_col).alias("cv"))
         .withColumn("__n", l2_norm(F.col("cv")))
         .join(assigned, id_col)
-        .persist()
     )
     a = side.select(
         F.col(id_col).alias("id_a"),
@@ -703,7 +690,7 @@ def semantic_dedup(
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
-    result = (
+    return (
         side.select(id_col, "cluster")
         .join(dups.withColumn("__dup", F.lit(True)), id_col, "left")
         .select(
@@ -712,7 +699,6 @@ def semantic_dedup(
             F.coalesce(~F.col("__dup"), F.lit(True)).alias("kept"),
         )
     )
-    return register_cached(result, [side])
 
 
 # --------------------------------------------------------------------------
@@ -859,21 +845,17 @@ def prefix_filter_pairs(
     this operator's contract."""
     from pyspark.sql.window import Window as W
 
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
     # Persisted: the tokenized corpus feeds THREE consumers in one DAG
     # (the posting-list flatten, and both verify-side payload lookups);
     # without persist each re-reads and re-tokenizes the corpus. Sized
     # at one array row per doc — the same budget as the doc itself.
-    toks = (
+    toks = caching.persist(
         docs.select(
             F.col(id_col),
             F.array_distinct(
                 F.split(normalize_text(F.col(text_col)), " ")
             ).alias("toks"),
-        )
-        .withColumn("n", F.size("toks"))
-        .persist()
+        ).withColumn("n", F.size("toks"))
     )
     flat = toks.select(id_col, "n", F.explode("toks").alias("tok"))
     df_rank = flat.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -928,7 +910,7 @@ def prefix_filter_pairs(
     ta = toks.select(F.col(id_col).alias("id_a"), F.col("toks").alias("ta"))
     tb = toks.select(F.col(id_col).alias("id_b"), F.col("toks").alias("tb"))
     inter = F.size(F.array_intersect("ta", "tb"))
-    verified = (
+    return (
         cands.join(ta, "id_a")
         .join(tb, "id_b")
         .select(
@@ -942,4 +924,3 @@ def prefix_filter_pairs(
             >= F.lit(threshold_num) * F.col("uni")
         )
     )
-    return register_cached(verified, [toks])

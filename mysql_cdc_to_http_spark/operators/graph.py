@@ -35,7 +35,7 @@ import warnings
 
 from pyspark.sql import DataFrame, functions as F
 
-from mysql_cdc_to_http_spark.operators.caching import register_cached
+from mysql_cdc_to_http_spark.operators import caching
 
 
 def connected_components(
@@ -79,10 +79,6 @@ def connected_components(
     ``strict=True`` (default) raises so an oracle-gated caller cannot
     silently return wrong components; ``strict=False`` downgrades to a
     warning and returns the partial labels.
-
-    The returned frame depends on persisted intermediates — callers
-    should ``release_all_cached()`` after materializing it
-    (operators/caching.py).
     """
     if algorithm not in ("label", "star"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
@@ -111,8 +107,8 @@ def connected_components(
                 ),
             )
         )
-        sym = (
-            edges.select(both.alias("__e")).select("__e.__s", "__e.__d").persist()
+        sym = caching.persist(
+            edges.select(both.alias("__e")).select("__e.__s", "__e.__d")
         )
         all_nodes = nodes.select(F.col(id_col).alias("__node"))
         # Checkpoint (not persist) per round: persist caches DATA but keeps
@@ -148,17 +144,15 @@ def connected_components(
                 f"exceeds the iteration budget; raise max_iter)"
             )
             if strict:
-                sym.unpersist()
                 raise RuntimeError(msg)
             warnings.warn(msg)
         isolated = all_nodes.join(endpoints, "__node", "left_anti").select(
             "__node", F.col("__node").alias("__label")
         )
-        out = labels.unionAll(isolated).select(
+        # labels is checkpoint-backed (freed by GC); only sym needs release
+        return labels.unionAll(isolated).select(
             F.col("__node").alias(id_col), F.col("__label").alias("cluster_id")
         )
-        # labels is checkpoint-backed (freed by GC); only sym needs release
-        return register_cached(out, [sym])
     finally:
         # Restore the caller's reliable-checkpoint dir. If none was
         # set before, Spark has no public unset — the dir then
@@ -338,22 +332,18 @@ def pagerank(
     ``edges`` and the derived node set are persisted for the loop:
     every iteration (and the node count) consumes them, and an
     unpersisted edge lineage re-runs its upstream joins once per round —
-    measured 6.5× worse at sf0.1 on the trade graph. Released via the
-    engine's register_cached/release_all_cached contract."""
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    edges = edges.persist()
-    nodes = (
+    measured 6.5× worse at sf0.1 on the trade graph."""
+    edges = caching.persist(edges)
+    nodes = caching.persist(
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .persist()
     )
     n_nodes = nodes.count()  # model-sized driver scalar
     # out-degree rides on the edge ONCE (persisted) instead of a second
     # per-iteration join — each round is then exactly one join + one agg
     outdeg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("__outdeg"))
-    edges_w = edges.join(outdeg, src).persist()
+    edges_w = caching.persist(edges.join(outdeg, src))
     pr = nodes.select(
         "node", F.lit(round(1.0 / n_nodes, round_iter)).alias("pr")
     )
@@ -376,7 +366,7 @@ def pagerank(
                 round_iter,
             ).alias("pr"),
         )
-    return register_cached(pr, [edges, nodes, edges_w])
+    return pr
 
 
 # Executors must not need this repo on their PYTHONPATH (driver contract
@@ -386,33 +376,6 @@ from pyspark import cloudpickle as _cloudpickle
 _cloudpickle.register_pickle_by_value(_sys.modules[__name__])
 
 
-def triangle_count_df(
-    edges: DataFrame, src: str = "u", dst: str = "v"
-) -> DataFrame:
-    """Global triangle count by degree-ordered wedge join (the MapReduce
-    classic from Suri & Vassilvitskii, "Counting Triangles and the Curse
-    of the Last Reducer").
-
-    ``edges`` is an UNDIRECTED edge list, one row per edge, canonical
-    ``src < dst``, no self-loops, no duplicates. The naive count joins
-    edges on shared endpoints — quadratic in the max degree, and one
-    celebrity node melts its reducer. Degree ordering fixes it:
-
-    1. Compute each node's degree (one shuffle over endpoints).
-    2. Orient every edge from the (degree, id)-SMALLER endpoint to the
-       larger. Every node's OUT-degree is then O(sqrt(|E|)) regardless
-       of its real degree — the skew bound that makes the wedge join
-       safe at any scale.
-    3. Wedges = oriented ⋈ oriented on the source; each wedge
-       (a→b, a→c) with (b ≺ c) is closed iff oriented edge b→c exists.
-       Each triangle is counted EXACTLY once (its ≺-minimum vertex is
-       the wedge apex).
-
-    Returns a 1-row DataFrame (n_triangles BIGINT) — an aggregate, like
-    every count in this engine; nothing collects to the driver."""
-    return triangle_count_oriented(oriented_edges(edges, src=src, dst=dst))
-
-
 def oriented_edges(
     edges: DataFrame, src: str = "u", dst: str = "v"
 ) -> DataFrame:
@@ -420,7 +383,7 @@ def oriented_edges(
     emitted from its (degree, id)-SMALLER endpoint. Returns columns
     ``s, t, ds, dt`` (source, target, their full-graph degrees).
 
-    Split out of ``triangle_count_df`` (r8 verdict #1) so the oriented
+    Split out of the triangle count (r8 verdict #1) so the oriented
     list can be built ONCE, persisted, and shared by the exact and
     DOULION-sampled triangle forms: orientation is a total order on
     NODES, so any edge-SUBSET of this list is itself consistently
@@ -489,7 +452,7 @@ def basket_pairs(
     lines), catastrophic on real basket data where one crawler/bot
     basket of 10⁵ items would emit 10¹⁰ rows through a single task
     ("the curse of the last reducer", the same failure
-    triangle_count_df's degree-orientation guards against). The cap
+    oriented_edges' degree-orientation guards against). The cap
     makes the bound structural instead of data-model-dependent:
 
     1. Rank items within each basket by ``md5(salt|order|item)``

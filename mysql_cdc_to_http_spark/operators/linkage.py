@@ -39,8 +39,8 @@ def blocked_pairs(
     capping per-block pair fan-out at max_block². Recall contract:
     EXACT for every block ≤ max_block (no row is dropped); larger
     blocks compare only the sampled members — and a block that big
-    means the key is too coarse (audit with ``block_stats`` and pick a
-    finer key / add a pass) rather than a workload to brute-force.
+    means the key is too coarse (audit its block-size distribution and
+    pick a finer key / add a pass) rather than a workload to brute-force.
     Default None preserves uncapped semantics for oracled callers
     whose keys are verified bounded (q_record_linkage pins its key's
     max block size in tests/test_plans.py)."""
@@ -100,31 +100,6 @@ def fuzzy_match(
     return (
         pairs.withColumn(out_col, d)
         .filter((F.col(out_col) >= 0) & (F.col(out_col) <= max_dist))
-    )
-
-
-def block_stats(
-    df: DataFrame, block_key: Column
-) -> DataFrame:
-    """Blocking-key health audit: one row with the block-size
-    distribution (n_blocks, max/p99 block size, and the implied
-    candidate-pair total Σ k·(k−1)/2). Run this BEFORE paying the
-    within-block join on a new key — within-block cost is quadratic in
-    block size, so ``max_size`` IS the largest task and ``n_pairs`` IS
-    the shuffle the join will emit. Two cheap aggregates over keys
-    only; no payload moves."""
-    sizes = df.groupBy(block_key.alias("__block")).agg(
-        F.count(F.lit(1)).alias("k")
-    )
-    return sizes.agg(
-        F.count(F.lit(1)).alias("n_blocks"),
-        F.max("k").alias("max_size"),
-        F.expr("percentile_approx(k, 0.99)").cast("bigint").alias(
-            "p99_size"
-        ),
-        F.sum(
-            (F.col("k") * (F.col("k") - F.lit(1))) / F.lit(2)
-        ).cast("bigint").alias("n_pairs"),
     )
 
 

@@ -21,19 +21,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-#: Schema of the media-asset frame produced by attach_media.
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("asset_id", T.LongType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("content", T.BinaryType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("content_md5", T.StringType()),
-        T.StructField("content_sha256", T.StringType()),
-    ]
-)
-
-
 def attach_media(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Synthesize a binary media column from document text (deterministic
     stand-in for real image/audio payloads) with typed metadata + content
@@ -261,18 +248,6 @@ def extract_features(assets: DataFrame) -> DataFrame:
     return assets.select("asset_id", "media_type", "content").mapInPandas(
         _featurize_batch, schema=_FEATURE_SCHEMA
     )
-
-
-def resize_nearest(arr: np.ndarray, width: int, height: int) -> np.ndarray:
-    """Nearest-neighbor resize by pure index sampling (no imaging lib):
-    output pixel (i, j) reads source pixel (⌊(i+.5)·sh/h⌋, ⌊(j+.5)·sw/w⌋)
-    — the standard pixel-center mapping, deterministic integer math."""
-    if arr.ndim == 2:
-        arr = arr[:, :, None]
-    sh, sw = arr.shape[:2]
-    rows = np.floor((np.arange(height) + 0.5) * sh / height).astype(int)
-    cols = np.floor((np.arange(width) + 0.5) * sw / width).astype(int)
-    return arr[rows[:, None], cols[None, :], :]
 
 
 # --------------------------------------------------------------------------

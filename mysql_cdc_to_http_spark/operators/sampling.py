@@ -12,6 +12,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from mysql_cdc_to_http_spark.operators import caching
+
 
 def stratified_sample(
     df: DataFrame,
@@ -262,13 +264,8 @@ def _pin_ranges(part: DataFrame) -> DataFrame:
     not a guarantee: an upstream InMemoryRelation was observed (r17) to
     defeat it and produce an off-by-one prefix at sf0.1. Persisting the
     partitioned frame makes boundary agreement structural (and drops the
-    second range-exchange evaluation — guide §2.4). Released per query
-    via the register_cached contract (bench.py / callers)."""
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    part = part.persist()
-    register_cached(part, [part])
-    return part
+    second range-exchange evaluation — guide §2.4)."""
+    return caching.persist(part)
 
 
 def ranked_prefix_sums(

@@ -21,6 +21,8 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window as W
 
+from mysql_cdc_to_http_spark.operators import caching
+
 
 def as_double(vec):
     return F.transform(vec, lambda x: x.cast("double"))
@@ -228,12 +230,10 @@ def hyperplane_lsh_pairs(
         ]
     )
     rows_per_band = n_planes // bands
-    sig = (
+    # consumed twice: banding + cosine verify join-back
+    sig = caching.persist(
         corpus.select(F.col(id_col), as_double(vec_col).alias("cv"))
         .withColumn("bits", sign_bits)
-        # consumed twice: banding + cosine verify join-back; registered
-        # with register_cached (operators/caching.py) for release
-        .persist()
     )
     chunks = F.array(
         *[
@@ -280,9 +280,7 @@ def hyperplane_lsh_pairs(
     )
     a = sig.select(F.col(id_col).alias("id_a"), F.col("cv").alias("va"))
     b = sig.select(F.col(id_col).alias("id_b"), F.col("cv").alias("vb"))
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    return register_cached(
+    return (
         cands.join(a, "id_a")
         .join(b, "id_b")
         .select(
@@ -290,8 +288,7 @@ def hyperplane_lsh_pairs(
             "id_b",
             F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos_sim"),
         )
-        .filter(F.col("cos_sim") >= threshold),
-        [sig],
+        .filter(F.col("cos_sim") >= threshold)
     )
 
 
@@ -503,9 +500,8 @@ def maintain_ivf_index(
     by the SAME centroid projection that built the index. Centroids stay
     fixed between retrains, so incremental == full rebuild EXACTLY (the
     identity is this operator's contract, property-tested row-exactly
-    and oracle-checked by q_knn_ivf_incremental); drift is watched by
-    ``ivf_staleness`` and a retrain is an explicit, gated event — never
-    an implicit per-batch cost.
+    and oracle-checked by q_knn_ivf_incremental); a retrain is an
+    explicit, gated event — never an implicit per-batch cost.
 
     Scale shape: the anti-join broadcasts touched keys (delta-sized by
     definition); assignment of the delta is the usual zero-shuffle
@@ -523,52 +519,3 @@ def maintain_ivf_index(
     )
     return kept.unionByName(reassigned.select(*kept.columns))
 
-
-def ivf_staleness(
-    old_index: DataFrame, new_index: DataFrame, id_col: str = "vec_id"
-) -> DataFrame:
-    """Centroid-staleness audit for the retrain gate: one row with the
-    sizes of both index generations, how many surviving vectors CHANGED
-    bucket (re-embedding drift — the signal that the fixed centroids no
-    longer describe the data), arrivals/departures, and
-    ``stale_micro`` = moved+in+out per million of the new index. The
-    caller retrains (recompute centroids + one full re-bucketing) only
-    when stale_micro crosses its threshold — the gate that keeps
-    incremental maintenance from silently degrading recall. All counts
-    integer; the ratio is a truncated micro-unit division, so the audit
-    is engine-exact."""
-    o = old_index.select(F.col(id_col).alias("id"), F.col("bucket").alias("ob"))
-    n = new_index.select(F.col(id_col).alias("id"), F.col("bucket").alias("nb"))
-    j = o.join(n, "id", "full_outer")
-    return j.agg(
-        F.count("ob").cast("long").alias("n_old"),
-        F.count("nb").cast("long").alias("n_new"),
-        F.sum(
-            F.when(
-                F.col("ob").isNotNull()
-                & F.col("nb").isNotNull()
-                & (F.col("ob") != F.col("nb")),
-                1,
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_moved"),
-        F.sum(F.when(F.col("ob").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_in"),
-        F.sum(F.when(F.col("nb").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_out"),
-        # Empty new index (all vectors deleted) → staleness is
-        # undefined, surfaced as an explicit NULL rather than a silent
-        # div-by-zero NULL (default mode) / exception (ANSI) —
-        # r11 ADVICE.
-        F.expr(
-            "CAST(CASE WHEN count(nb) = 0 THEN NULL ELSE"
-            " (sum(CASE WHEN ob IS NOT NULL AND nb IS NOT NULL"
-            " AND ob != nb THEN 1 ELSE 0 END)"
-            " + sum(CASE WHEN ob IS NULL THEN 1 ELSE 0 END)"
-            " + sum(CASE WHEN nb IS NULL THEN 1 ELSE 0 END)) * 1000000"
-            " div count(nb) END AS BIGINT)"
-        ).alias("stale_micro"),
-    )

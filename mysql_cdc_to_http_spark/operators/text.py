@@ -440,7 +440,7 @@ def positional_postings(
     One posexplode over the token array — a single fact-sized pass, no
     shuffle of its own (the consumer's join/write decides the
     partitioning). At corpus scale, persist this bucketed/partitioned
-    BY TERM (operators/layout.py:write_partitioned) so a phrase probe
+    BY TERM (a hive-partitioned write) so a phrase probe
     reads only its terms' postings files instead of re-exploding the
     corpus; the probe-side plan below is unchanged either way.
     """

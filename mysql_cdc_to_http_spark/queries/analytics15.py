@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mysql_cdc_to_http_spark.catalog import load_table
+from mysql_cdc_to_http_spark.operators import caching
 from mysql_cdc_to_http_spark.queries.registry import query
 from mysql_cdc_to_http_spark.queries.curation import (  # noqa: E402
     _KAPPA_STOPS_SQL as _KAPPA_STOPS_SQL_REF,
@@ -1340,10 +1341,8 @@ def q_segmented_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-derived the segmented series — and the fact-sized daily
     # rollup under it — per consumer (measured plan: 21 Exchange / 12
     # scans). The series is (types × days)-sized: persist it, one
-    # fact pass. Released via the register_cached contract.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    seg = (
+    # fact pass.
+    seg = caching.persist(
         idx.crossJoin(F.broadcast(par))
         .select(
             "event_type",
@@ -1351,9 +1350,7 @@ def q_segmented_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("i").cast("decimal(38,0)").alias("i"),
             "x",
         )
-        .persist()
     )
-    register_cached(seg, [seg])
     def _mo(df, keys):
         return df.groupBy(*keys).agg(
             F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
@@ -1505,11 +1502,8 @@ def q_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (guide §2.4/§5): base and both lag-join sides re-derived the
     # zero-filled daily series — and the fact rollup under it — per
     # consumer (measured plan: 16 Exchange / 12 scans). The series is
-    # span-days-sized: persist it, one fact pass. Released via the
-    # register_cached contract.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    dense = (
+    # span-days-sized: persist it, one fact pass.
+    dense = caching.persist(
         grid.join(obs, "i", "left")
         .select(
             "i",
@@ -1517,9 +1511,7 @@ def q_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("x"), F.lit(0).cast("decimal(38,0)")
             ).alias("x"),
         )
-        .persist()
     )
-    register_cached(dense, [dense])
     base = dense.agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum("x").cast("decimal(38,0)").alias("s"),
@@ -3964,18 +3956,13 @@ def q_bigram_lm_xent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact-sized tokenize+explode under it — per consumer (measured
     # plan: 16 Exchange / 4 scans). The table is bigram-vocabulary-
     # sized (Heaps-sublinear): persist it, one train explode pass.
-    # Released via the register_cached contract.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    train_bg = (
+    train_bg = caching.persist(
         tok.filter(F.expr("doc_id % 2 = 0 AND size(t) >= 2"))
         .select(bg.alias("b"))
         .select("b.w1", "b.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("cab"))
-        .persist()
     )
-    register_cached(train_bg, [train_bg])
     train_u = train_bg.groupBy("w1").agg(
         F.sum("cab").cast("decimal(38,0)").alias("ca")
     )

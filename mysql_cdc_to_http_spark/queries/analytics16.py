@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mysql_cdc_to_http_spark.catalog import load_table
+from mysql_cdc_to_http_spark.operators import caching
 from mysql_cdc_to_http_spark.queries.registry import query
 
 # χ²(4) upper 0.05 — shared literal (5 event types → df = 4)
@@ -1663,20 +1664,16 @@ def q_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ k² rows per value) → 1 row."""
     from pyspark.sql.window import Window as W
 
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
     ev = load_table(spark, sf_dir, "events")
     # tc ((group, value) counts — grid-sized, NOT fact-sized) feeds FIVE
     # consumers (vals, grps, the dense left join, gsz, tsz), each of
     # which re-ran the fact aggregate; cum (the densified grid) feeds
     # both sides of the value-keyed pair join. Persist both → one fact
     # pass (guide §2.4/§5; the q_friedman/q_kendall_tau grid pattern).
-    tc = (
+    tc = caching.persist(
         ev.groupBy(F.col("event_type").alias("g"), F.col("value").alias("v"))
         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("c"))
-        .persist()
     )
-    register_cached(tc, [tc])
     vals = tc.select("v").distinct()
     grps = tc.select("g").distinct()
     dense = (
@@ -1695,15 +1692,16 @@ def q_jonckheere(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("v")
         .rowsBetween(W.unboundedPreceding, -1)
     )
-    cum = dense.select(
-        "g",
-        "v",
-        "c",
-        F.coalesce(
-            F.sum("c").over(w), F.lit(0).cast("decimal(38,0)")
-        ).alias("fp"),
-    ).persist()
-    register_cached(cum, [cum])
+    cum = caching.persist(
+        dense.select(
+            "g",
+            "v",
+            "c",
+            F.coalesce(
+                F.sum("c").over(w), F.lit(0).cast("decimal(38,0)")
+            ).alias("fp"),
+        )
+    )
     a = cum.select(
         F.col("g").alias("ga"),
         "v",

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mysql_cdc_to_http_spark.catalog import load_table
+from mysql_cdc_to_http_spark.operators import caching
 from mysql_cdc_to_http_spark.queries.registry import query
 
 # Shared oracle fragment: word n-gram list per document, mirroring
@@ -267,16 +268,15 @@ def q_pipeline_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     repetition = F.lit(1.0) - F.size(F.array_distinct("__g3")) / F.size(
         "__g3"
     ).cast("double")
-    quality = (
+    # three consumers (decontaminate, the anti-join, the mixture) —
+    # persist the NARROW survivor projection (arrays dropped) so the
+    # tokenize+n-gram stage runs once, not three times (9.3 s →
+    # ~3 s at sf0.1)
+    quality = caching.persist(
         staged.withColumn("n_tokens", n_tokens)
         .withColumn("__rep", repetition)
         .filter((F.col("n_tokens") >= 20) & (F.col("__rep") <= 0.3))
-        # three consumers (decontaminate, the anti-join, the mixture) —
-        # persist the NARROW survivor projection (arrays dropped) so the
-        # tokenize+n-gram stage runs once, not three times (9.3 s →
-        # ~3 s at sf0.1); released via the caching contract
         .select("doc_id", "source", "text", "n_tokens")
-        .persist()
     )
     # 3. decontaminate vs the src0 benchmark slice
     bench = benchmark_ngram_set(docs.filter(F.col("source") == "src0"), n=5)
@@ -297,13 +297,8 @@ def q_pipeline_recipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = pack_sequences(
         mixed.select("doc_id", "n_tokens"), budget=512
     )
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    return register_cached(
-        packed.join(mixed.select("doc_id", "source"), "doc_id")
-        .select("doc_id", "source", "n_tokens", "bin_id", "offset_in_bin")
-        ,
-        [quality],
+    return packed.join(mixed.select("doc_id", "source"), "doc_id").select(
+        "doc_id", "source", "n_tokens", "bin_id", "offset_in_bin"
     )
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mysql_cdc_to_http_spark.catalog import load_table
+from mysql_cdc_to_http_spark.operators import caching
 from mysql_cdc_to_http_spark.queries.registry import query
 
 # Deterministic PII injection: the synthetic corpus contains no PII, so
@@ -790,7 +791,7 @@ def q_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join shuffle), then JVM levenshtein with the threshold
     short-circuit on within-block pairs only. The key frees exactly
     the trailing 2 digits of the customer id, so blocks are
-    STRUCTURALLY ≤ 100 members at ANY sf (pinned with block_stats in
+    STRUCTURALLY ≤ 100 members at ANY sf (pinned in
     tests/test_plans.py) and blocking prunes ≥ 98% of the quadratic
     all-pairs space; for keys without such a construction bound, pass
     ``max_block`` to blocked_pairs (deterministic md5 truncation) —
@@ -1289,15 +1290,10 @@ def q_cluster_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # counts — and the doc-join + explode + kmeans-assignment
     # projection under them — per consumer (measured plan: 10 Exchange
     # / 8 scans). tf is vocabulary-sized: persist it, one token pass.
-    # Released via the register_cached contract.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    tf = (
+    tf = caching.persist(
         toks.groupBy("cluster", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
-    register_cached(tf, [tf])
     ct = tf.groupBy("cluster").agg(F.sum("tf").alias("ctot"))
     tt = tf.groupBy("tok").agg(F.sum("tf").alias("ttot"))
     tot = tf.agg(F.sum("tf").alias("gtot"))

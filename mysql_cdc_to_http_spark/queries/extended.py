@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mysql_cdc_to_http_spark.catalog import load_table
+from mysql_cdc_to_http_spark.operators import caching
 from mysql_cdc_to_http_spark.queries.registry import query
 
 
@@ -572,20 +573,16 @@ def q_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         cms_partials,
     )
 
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
     li = load_table(spark, sf_dir, "lineitem")
     # ONE fact scan (r11 verdict #5 — this was the suite's #3 query at
     # 4.4 s with two full lineitem passes): pre-aggregate to
     # (ship-month, suppkey, count) — ~months x |suppkey| rows — persist
     # that, and derive BOTH the sketch partials (weighted, identical by
     # SUM associativity) and the exact probe side from it.
-    base = (
+    base = caching.persist(
         li.groupBy(
             F.month("l_shipdate").alias("seg"), F.col("l_suppkey")
-        )
-        .agg(F.count(F.lit(1)).alias("base_cnt"))
-        .persist()
+        ).agg(F.count(F.lit(1)).alias("base_cnt"))
     )
     partials = cms_partials(
         base, "seg", "l_suppkey", depth=4, width=512, weight_col="base_cnt"
@@ -596,7 +593,7 @@ def q_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top = exact.orderBy(F.desc("exact_cnt"), F.asc("l_suppkey")).limit(10)
     est = cms_estimate(merged, top, "l_suppkey", depth=4, width=512)
-    result = (
+    return (
         top.join(est, "l_suppkey")
         .select(
             "l_suppkey",
@@ -606,7 +603,6 @@ def q_cms_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("exact_cnt"), F.asc("l_suppkey"))
     )
-    return register_cached(result, [base])
 
 
 @query(
@@ -691,15 +687,13 @@ def q_join_size_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 # X123 — triangle counting (graph analytics family #3 after connected
 # components and PageRank). Graph: parts co-purchased in one order.
 # --------------------------------------------------------------------------
-from mysql_cdc_to_http_spark.operators.caching import register_memo
-
-_TRI_EDGES: dict = register_memo({})
 
 
 def _copurchase_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The co-purchase graph's canonical edge list, degree-oriented and
-    PERSISTED ONCE per (session, sf_dir) — shared by exact (X123) and
-    DOULION-sampled (X183) triangle counting (r8 verdict #1: both forms
+    PERSISTED — shared by exact (X123) and DOULION-sampled (X183)
+    triangle counting through CacheManager, which serves every call's
+    identical plan from one materialization (r8 verdict #1: both forms
     previously regenerated the within-order pair self-join + edge
     distinct independently, so the sampled form paid the full shared
     floor and its absolute win lagged its p³ story).
@@ -717,16 +711,9 @@ def _copurchase_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-degrees only shrink). At 100 TB, swap .persist() for a
     write-then-read of the oriented list (the q_agg_q15 persist-rollup
     discipline at cluster scale); the sharing shape is identical."""
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
     from mysql_cdc_to_http_spark.operators.graph import oriented_edges
     from mysql_cdc_to_http_spark.operators.sampling import split_bucket
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _TRI_EDGES.get(key)
-    if cached is not None:
-        if not cached.is_cached:  # re-persist after release_all_cached
-            register_cached(cached.persist(), [cached])
-        return cached
     # Edge build via collect_set + double explode (the q_kcore_peel r16
     # edge-build shave): one groupBy shuffle instead of the distinct +
     # self-join-on-orderkey (two more fact exchanges + sort). Orders
@@ -751,12 +738,11 @@ def _copurchase_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least("s", "t").cast("string"),
         F.greatest("s", "t").cast("string"),
     )
-    oriented = oriented_edges(edges).withColumn(
-        "keep50", split_bucket(pair_key, 100, salt="tri-v1") < 50
+    return caching.persist(
+        oriented_edges(edges).withColumn(
+            "keep50", split_bucket(pair_key, 100, salt="tri-v1") < 50
+        )
     )
-    _TRI_EDGES[key] = oriented
-    register_cached(oriented.persist(), [oriented])
-    return oriented
 
 
 @query(
@@ -792,7 +778,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed self-join on l_orderkey (per-order line count is bounded, so
     pair fan-out is bounded — never a global cross join), then distinct
     over canonical (u < v) pairs. Counting is the degree-ordered wedge
-    join of ``operators/graph.py:triangle_count_df``: orienting edges
+    join of ``operators/graph.py:triangle_count_oriented``: orienting edges
     low→high (degree, id) caps every out-degree at O(sqrt(E)), which is
     what keeps the wedge join's largest task bounded when the graph has
     celebrity nodes ("the curse of the last reducer"). The DuckDB
@@ -1167,16 +1153,12 @@ def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # capped pair build each re-derived the distinct (order, part)
     # stream — a fact-sized scan + distinct exchange per consumer
     # (measured plan: 12 Exchange / 5 scans). Persist it, one fact
-    # pass. Released via the register_cached contract.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    pr = (
+    # pass.
+    pr = caching.persist(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .persist()
     )
-    register_cached(pr, [pr])
     n = pr.select("l_orderkey").distinct().agg(
         F.count(F.lit(1)).alias("n_orders")
     )
@@ -1278,18 +1260,17 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = pr.select(
         F.col("l_orderkey").alias("o2"), F.col("l_partkey").alias("v")
     )
-    e = (
+    # the edge list feeds FOUR consumers (the src aggregate + one
+    # join per BFS level); without a persist Catalyst re-derives
+    # the lineitem self-join edge build once per consumer (r16:
+    # measured ~3x the edge cost at sf0.1, 2.98 -> 1.1 s warm).
+    # At scale this is the same move a production BFS makes:
+    # materialize the edge RDD once, iterate over it.
+    e = caching.persist(
         pr.join(b, F.col("l_orderkey") == F.col("o2"))
         .filter(F.col("l_partkey") != F.col("v"))
         .select(F.col("l_partkey").alias("u"), "v")
         .distinct()
-        # the edge list feeds FOUR consumers (the src aggregate + one
-        # join per BFS level); without a persist Catalyst re-derives
-        # the lineitem self-join edge build once per consumer (r16:
-        # measured ~3x the edge cost at sf0.1, 2.98 -> 1.1 s warm).
-        # At scale this is the same move a production BFS makes:
-        # materialize the edge RDD once, iterate over it.
-        .persist()
     )
     src = e.agg(F.min("u").alias("s"))
     d0 = src.select(F.col("s").alias("n"), F.lit(0).alias("d"))
@@ -1308,13 +1289,10 @@ def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     lv = levels[0]
     for x in levels[1:]:
         lv = lv.unionAll(x)
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    return register_cached(
+    return (
         lv.groupBy(F.col("n").alias("part"))
         .agg(F.min("d").cast("bigint").alias("hops"))
-        .select("part", "hops"),
-        [e],
+        .select("part", "hops")
     )
 
 

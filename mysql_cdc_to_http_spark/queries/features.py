@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mysql_cdc_to_http_spark.catalog import load_table
+from mysql_cdc_to_http_spark.operators import caching
 from mysql_cdc_to_http_spark.queries.registry import query
 
 
@@ -469,12 +470,9 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # filter+aggregate pass (guide §2.4; the q_abc_analysis ranked-
     # cumulative precedent). Identical by construction: lo_cut/hi_cut
     # are still "the val at __grank == k / == __gn-k+1 per grp".
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    ranked = grouped_ranks(
-        o, ["grp"], [F.col("val"), F.col("o_orderkey")]
-    ).persist()
-    register_cached(ranked, [ranked])
+    ranked = caching.persist(
+        grouped_ranks(o, ["grp"], [F.col("val"), F.col("o_orderkey")])
+    )
     k = F.expr("(__gn + 99) div 100")
     is_lo = F.col("__grank") == k
     is_hi = F.col("__grank") == F.col("__gn") - k + 1
@@ -2415,18 +2413,13 @@ def q_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consume the ranked cumulative — un-persisted, each re-ran the
     # fact-sized per-part aggregate AND the range-partitioned prefix
     # pass (measured plan: 15 Exchange). The ranked frame is
-    # part-cardinality-sized: persist it, one fact pass. Released via
-    # the register_cached contract.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    ranked = (
+    # part-cardinality-sized: persist it, one fact pass.
+    ranked = caching.persist(
         ranked_prefix_sums(
             rev, [F.col("cents").desc(), F.col("l_partkey").asc()], ["cents"]
         )
         .withColumnRenamed("cents__cum", "cum")
-        .persist()
     )
-    register_cached(ranked, [ranked])
     tot = ranked.agg(F.sum("cents").alias("total"))
     classed = ranked.crossJoin(F.broadcast(tot)).select(
         F.when(F.col("cum") * 100 <= 80 * F.col("total"), "A")
@@ -3364,10 +3357,7 @@ def q_conformal_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the test coverage audit each re-derived the daily-revenue fact
     # aggregate (measured plan: 24 Exchange / 11 scans). The labeled
     # daily table is (priority × days)-sized: persist, one fact pass.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    lab = daily.withColumn("b", b).persist()
-    register_cached(lab, [lab])
+    lab = caching.persist(daily.withColumn("b", b))
     cf = _ols_closed_form(
         _ols_moments(lab.filter(F.col("b") < 40))
     ).select("prio", "num", "denx", "numi")
@@ -3612,10 +3602,7 @@ def q_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline and the dense brute-force scorer underneath (measured
     # plan: 16 Exchange / 12 scans). od is ≤10 rows: persist it, the
     # two heavy ranking pipelines run once.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    od = od.persist()
-    register_cached(od, [od])
+    od = caching.persist(od)
     total = od.agg(
         F.expr(
             "CAST((CAST(sum(w * overlap) AS DECIMAL(25,0)) * 1000000)"
@@ -4405,29 +4392,23 @@ def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-derived the zero-filled grid — and the fact aggregate under it
     # — per consumer (measured plan: 23 Exchange / 18 scans). Both
     # frames are calendar-bounded (types × span-days): persist them,
-    # one fact pass. Released via the register_cached contract.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    dense = (
+    # one fact pass.
+    dense = caching.persist(
         grid.join(obs2, ["event_type", "idx"], "left")
         .withColumn(
             "x", F.coalesce(F.col("x"), F.lit(0).cast("decimal(38,0)"))
         )
-        .persist()
     )
-    register_cached(dense, [dense])
     st = dense.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum("x").cast("decimal(38,0)").alias("s"),
     )
-    dev = (
+    dev = caching.persist(
         dense.join(st, "event_type")
         .select(
             "event_type", "idx", F.expr("n * x - s").alias("dev"), "n"
         )
-        .persist()
     )
-    register_cached(dev, [dev])
     den = dev.groupBy("event_type").agg(
         F.sum(F.expr("dev * dev")).cast("decimal(38,0)").alias("den"),
         F.max("n").alias("n"),
@@ -5308,16 +5289,12 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q2 re-aliasing on top) re-derived the grid and the fact aggregate
     # per consumer (measured plan: 31 Exchange / 16 scans). Calendar-
     # bounded frame: persist, one fact pass.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    dense = (
+    dense = caching.persist(
         grid.join(obs2, ["event_type", "i"], "left")
         .withColumn(
             "x", F.coalesce(F.col("x"), F.lit(0).cast("decimal(38,0)"))
         )
-        .persist()
     )
-    register_cached(dense, [dense])
     b = dense.select(
         F.col("event_type").alias("t2"),
         F.col("i").alias("i"),
@@ -6238,16 +6215,12 @@ def q_friedman(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (type, day) aggregate — once per consumer (measured plan: 57
     # Exchange / 26 scans). The grid is (types × days)-sized, i.e.
     # calendar-bounded: persist it so the fact pass runs once.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    dense = (
+    dense = caching.persist(
         grid.join(obs2, ["event_type", "i"], "left")
         .withColumn(
             "x", F.coalesce(F.col("x"), F.lit(0).cast("decimal(38,0)"))
         )
-        .persist()
     )
-    register_cached(dense, [dense])
     wday = (
         W.partitionBy("i")
         .orderBy("x")
@@ -6608,16 +6581,12 @@ def q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-joined pair sides each re-derived the grid (and the fact
     # aggregate under it) per consumer (measured plan: 36 Exchange / 16
     # scans). Calendar-bounded frame: persist, one fact pass.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    dense = (
+    dense = caching.persist(
         grid.join(obs2, ["event_type", "i"], "left")
         .withColumn(
             "x", F.coalesce(F.col("x"), F.lit(0).cast("decimal(38,0)"))
         )
-        .persist()
     )
-    register_cached(dense, [dense])
     wtype = (
         W.partitionBy("event_type")
         .orderBy("x")
@@ -8460,14 +8429,13 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-scaling customer table); the decile reduction is one
     aggregate over a 10-way broadcast cross join. Output is 10 rows.
     """
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
     from mysql_cdc_to_http_spark.operators.sampling import (
         ranked_prefix_sums,
     )
 
     # rev (customer-sized) feeds the ranked-prefix pass AND tots — each
     # re-ran the fact aggregate. Persist it: one orders pass (guide §2.4).
-    rev = (
+    rev = caching.persist(
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
@@ -8480,9 +8448,7 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("cents")
         )
         .withColumn("__one", F.lit(1).cast("bigint"))
-        .persist()
     )
-    register_cached(rev, [rev])
     ranked = ranked_prefix_sums(
         rev,
         [F.col("cents").asc(), F.col("o_custkey").asc()],

@@ -13,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mysql_cdc_to_http_spark.catalog import load_table
-from mysql_cdc_to_http_spark.operators import text as tx
+from mysql_cdc_to_http_spark.operators import caching, text as tx
 from mysql_cdc_to_http_spark.operators.dedup import (
     minhash_dedup_pairs,
     simhash_pairs,
@@ -357,38 +357,25 @@ def _dup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.unionByName(variants)
 
 
-from mysql_cdc_to_http_spark.operators.caching import register_memo
-
-_DUP_PREP: dict = register_memo({})
-
-
 def _dup_corpus_prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash signatures (id, shingles, sig) for the FULL dup corpus,
-    computed in ONE Arrow pass, persisted, memoized per (session,
-    sf_dir) — signature prep is a deterministic function of (text,
-    params), so it is content-addressed and shareable across the fold
-    loop's epochs (r8 verdict #4: the per-fold pandas-UDF pass was
-    q_dedup_incremental's dominant fixed cost)."""
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
+    computed in ONE Arrow pass and persisted — signature prep is a
+    deterministic function of (text, params), so it is content-addressed
+    and shareable across the fold loop's epochs (r8 verdict #4: the
+    per-fold pandas-UDF pass was q_dedup_incremental's dominant fixed
+    cost)."""
     from mysql_cdc_to_http_spark.operators.dedup import prepare_minhash
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _DUP_PREP.get(key)
-    if cached is not None:
-        if not cached.is_cached:  # re-persist after release_all_cached
-            register_cached(cached.persist(), [cached])
-        return cached
     # repartition before persisting: the corpus is thousands of rows,
     # and every fold re-scans this cache several times (band m/n sides,
     # shingle source, survivor anti-join) — 8 cached partitions means 8
     # tasks per rescan instead of the source parquet's 32. At real
     # scale size this to the signature volume, not a constant.
-    prep = prepare_minhash(
-        _dup_corpus(spark, sf_dir), "doc_id", "text", 64, 3, "word"
-    ).repartition(8)
-    _DUP_PREP[key] = prep
-    register_cached(prep.persist(), [prep])
-    return prep
+    return caching.persist(
+        prepare_minhash(
+            _dup_corpus(spark, sf_dir), "doc_id", "text", 64, 3, "word"
+        ).repartition(8)
+    )
 
 
 @query(
@@ -959,9 +946,9 @@ def q_knn_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-position tie-break), so hash parity certifies the maintenance
     algebra, not just row counts. Per-bucket occupancy plus
     ``n_arrivals`` (vectors whose bucket differs from their old
-    assignment, or brand-new) audits the churn the index absorbed;
-    ``ivf_staleness`` turns the same numbers into the retrain gate
-    (property- and streaming-fold-tested in tests/test_llm_ops.py).
+    assignment, or brand-new) audits the churn the index absorbed — the
+    numbers a retrain gate reads (property- and streaming-fold-tested
+    in tests/test_llm_ops.py).
 
     Cross-engine exactness: argmax margins on this corpus dwarf float
     noise (the q_kmeans rule — dot-with-unit-centroid ranks identically
@@ -2333,8 +2320,8 @@ def q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas pass — no shuffle before it; the group count is a
     window PARTITIONED BY the hash (keyed, never unpartitioned); output
     is asset-sized. A real thumbnail corpus slots into the same stage:
-    decode_media handles the container, resize_nearest normalizes to
-    the 8×8 grid, the hash math is unchanged."""
+    decode_media handles the container, a resize normalizes to the
+    8×8 grid, the hash math is unchanged."""
     from collections.abc import Iterator
 
     import numpy as np
@@ -3093,16 +3080,13 @@ def q_domain_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     D² over D domains (20 here), model-sized. The audit intersection
     join shuffles on shingle with ≤D rows per key — bounded fan-out,
     dropped entirely in the sketch-only production path."""
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
     docs = load_table(spark, sf_dir, "documents")
     sh, _ = _domain_signatures(docs)
     # sh (distinct (source, shingle) — the one fact-sized frame) used to
     # be re-derived by the signature aggregate AND both sides of the
     # audit self-join: persist it → one tokenize+explode+distinct pass
     # (guide §2.4/§5).
-    sh = sh.persist()
-    register_cached(sh, [sh])
+    sh = caching.persist(sh)
     sigs = sh.groupBy("source").agg(
         *[F.min(_dmh_hash(i)).alias(f"s{i}") for i in range(_DMH_SLOTS)],
         F.count(F.lit(1)).cast("long").alias("nsh"),
@@ -3331,9 +3315,11 @@ def q_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = F.split(
         F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " "
     )
-    sh = (
-        corpus.select("doc_id", toks.alias("t"))
-        .select(
+    # sh feeds the signature aggregate AND the exact-intersection
+    # counts below — persist the (sample-sized) frame, one
+    # tokenize+explode pass (guide §2.4/§5)
+    sh = caching.persist(
+        corpus.select("doc_id", toks.alias("t")).select(
             "doc_id",
             F.explode(
                 F.array_distinct(
@@ -3344,14 +3330,7 @@ def q_lsh_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("g"),
         )
-        # sh feeds the signature aggregate AND the exact-intersection
-        # counts below — persist the (sample-sized) frame, one
-        # tokenize+explode pass (guide §2.4/§5)
-        .persist()
     )
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    register_cached(sh, [sh])
 
     def slot(i):
         return F.conv(
@@ -3834,26 +3813,23 @@ _CONTAIN_SCREEN_K = 32
 
 def _shingle_hash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, hs: array<long>) — distinct word-3-shingle
-    md5-longs per document, built ONCE per (appId, sf_dir), persisted,
-    and shared by the whole containment family (X240 dedup, X253
-    decontamination, X254 sketch audit). The tokenize→shingle→md5
-    chain is the dominant projection cost of all three (3.3 s of
+    md5-longs per document, persisted, and shared by the whole
+    containment family (X240 dedup, X253 decontamination, X254 sketch
+    audit): every call plans the same frame, so CacheManager serves
+    them all from one materialization. The tokenize→shingle→md5 chain
+    is the dominant projection cost of all three (3.3 s of
     q_decontaminate_containment's 4.2 s at sf0.1 was this hash pass);
     at 100 TB this frame IS the materialize-once shingle table a
     production dedup stack maintains, so sharing it is the honest
-    scale shape, not a bench trick. Lifecycle: the standard
-    register_cached/release_all_cached contract."""
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
+    scale shape, not a bench trick."""
     from mysql_cdc_to_http_spark.operators.dedup import word_shingles
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hashes = _CONTAIN_MEMO.get(key)
-    if hashes is None:
-        docs = load_table(spark, sf_dir, "documents")
-        # word_shingles already emits DISTINCT string shingles; md5
-        # preserves distinctness, so no second array_distinct pass
-        # over the (much longer) hash array.
-        hashes = docs.select(
+    docs = load_table(spark, sf_dir, "documents")
+    # word_shingles already emits DISTINCT string shingles; md5
+    # preserves distinctness, so no second array_distinct pass
+    # over the (much longer) hash array.
+    return caching.persist(
+        docs.select(
             "doc_id",
             "source",
             F.transform(
@@ -3863,12 +3839,7 @@ def _shingle_hash_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).alias("hs"),
         ).repartition(8)
-        _CONTAIN_MEMO[key] = hashes
-        register_cached(hashes.persist(), [hashes])
-    elif not hashes.is_cached:
-        register_cached(hashes.persist(), [hashes])
-    return hashes
-_CONTAIN_MEMO: dict = register_memo({})
+    )
 
 
 @query(
@@ -4345,29 +4316,20 @@ def q_mrl_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-1 comparison — un-persisted, each brute-force corpus scorer
     # ran twice (measured plan: 9 Exchange / 9 scans). The arms are
     # (queries × 10)-sized: persist both, one scoring pass per arm.
-    # Released via the register_cached contract.
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
-    full_r = (
-        cosine_topk_bruteforce(queries_df, corpus, k=10)
-        .select(
+    full_r = caching.persist(
+        cosine_topk_bruteforce(queries_df, corpus, k=10).select(
             F.col("query_id").alias("qid"),
             F.col("corpus_id").alias("cid"),
             F.col("rank").alias("ar"),
         )
-        .persist()
     )
-    register_cached(full_r, [full_r])
-    tr_r = (
-        cosine_topk_bruteforce(q_t, c_t, k=10)
-        .select(
+    tr_r = caching.persist(
+        cosine_topk_bruteforce(q_t, c_t, k=10).select(
             F.col("query_id").alias("qid"),
             F.col("corpus_id").alias("cid"),
             F.col("rank").alias("br"),
         )
-        .persist()
     )
-    register_cached(tr_r, [tr_r])
     pairs = full_r.join(
         tr_r.withColumnRenamed("qid", "t_qid").withColumnRenamed(
             "cid", "t_cid"
@@ -4543,7 +4505,7 @@ def q_prefix_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 # to the SAME fixed centroids (X45's zero-shuffle argmax projection,
 # the oracled X228 pattern) and compare occupancy shares — the
 # monitoring query a production ANN index runs to decide when
-# `ivf_staleness` (X228) should trigger a retrain. Two snapshots
+# the X228 index should be retrained. Two snapshots
 # compare via two 8-row histograms, never by co-scanning vectors —
 # the X226 sketch-vs-co-scan argument at the index level.
 # --------------------------------------------------------------------------
@@ -5076,7 +5038,6 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     extension work (multilingual pair curation)."""
     from pyspark.sql.window import Window as W
 
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
     from mysql_cdc_to_http_spark.operators.similarity import as_double, cosine
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
@@ -5088,16 +5049,14 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     tgt = emb.filter(F.col("vec_id") % 2 == 1).select(
         F.col("vec_id").alias("tgt_id"), as_double("embedding").alias("tv")
     )
-    scored = (
-        tgt.crossJoin(F.broadcast(src))
-        .select(
+    scored = caching.persist(
+        tgt.crossJoin(F.broadcast(src)).select(
             "src_id",
             "tgt_id",
             F.round(F.round(cosine(F.col("sv"), F.col("tv")), 6) * 1000000)
             .cast("long")
             .alias("cm"),
         )
-        .persist()
     )
     w_s = W.partitionBy("src_id").orderBy(F.desc("cm"), F.asc("tgt_id"))
     nn_src = (
@@ -5129,7 +5088,7 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_best = W.partitionBy("src_id").orderBy(
         F.desc("margin_micro"), F.asc("tgt_id")
     )
-    result = (
+    return (
         margined.withColumn("r", F.row_number().over(w_best))
         .filter((F.col("r") == 1) & (F.col("margin_micro") >= 1000000))
         .select(
@@ -5140,7 +5099,6 @@ def q_bitext_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("src_id")
     )
-    return register_cached(result, [scored])
 
 
 # --------------------------------------------------------------------------
@@ -7369,8 +7327,6 @@ def q_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql.window import Window as W
 
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     corpus = emb.filter(F.col("vec_id") >= 10)
@@ -7379,12 +7335,11 @@ def q_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r16 (guide §2.4/§5): the brute-force truth is joined by every
     # sweep point — un-persisted it re-scored the whole corpus once per
     # point. It is (queries × k)-sized: persist it.
-    truth = (
-        cosine_topk_bruteforce(queries, corpus, k=3)
-        .select("query_id", "corpus_id")
-        .persist()
+    truth = caching.persist(
+        cosine_topk_bruteforce(queries, corpus, k=3).select(
+            "query_id", "corpus_id"
+        )
     )
-    register_cached(truth, [truth])
     bsize = bucketed.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("long").alias("n")
     )
@@ -7446,17 +7401,14 @@ def q_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = prank.filter(F.col("pr") <= max_np).select(
         "query_id", "qv", "bucket", "pr"
     )
-    cand = (
-        bucketed.join(F.broadcast(probes), "bucket")
-        .select(
+    cand = caching.persist(
+        bucketed.join(F.broadcast(probes), "bucket").select(
             "query_id",
             "pr",
             F.col("vec_id").alias("corpus_id"),
             F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cos_sim"),
         )
-        .persist()
     )
-    register_cached(cand, [cand])
     prank_nb = prank.select("query_id", "bucket", "pr")
     out = None
     for np_ in _IVF_SWEEP_NPROBES:

@@ -383,7 +383,7 @@ def q_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sharded-export manifest (operators/layout.py:shard_manifest):
     per-shard row count + order-independent XOR content checksum under
-    the deterministic md5 shard assignment write_shards uses. The
+    the deterministic md5 shard assignment (``split_bucket``). The
     auditor's view of a training-data delivery — any engine with md5
     recomputes membership AND checksum from the shard files alone, so
     the oracle proves the full manifest bit-for-bit (XOR of 60-bit md5

@@ -18,6 +18,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from mysql_cdc_to_http_spark.catalog import load_table
+from mysql_cdc_to_http_spark.operators import caching
 from mysql_cdc_to_http_spark.queries.registry import query
 
 
@@ -1609,10 +1610,7 @@ def q_agg_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dominant cost. The 1-row max then BROADCASTS back into the
     filter (q_agg_q22 cutoff pattern); supplier names join broadcast.
     Integer equality means tie membership is exact — no epsilon, no
-    float max. Cache released via release_all_cached (bench/harness
-    contract, operators/caching.py)."""
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
+    float max."""
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp"))
@@ -1620,19 +1618,18 @@ def q_agg_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev_tt = F.round(F.col("l_extendedprice") * 100).cast("bigint") * (
         F.lit(100) - F.round(F.col("l_discount") * 100).cast("bigint")
     )
-    rev = (
-        li.groupBy("l_suppkey").agg(F.sum(rev_tt).alias("total_tt")).persist()
+    rev = caching.persist(
+        li.groupBy("l_suppkey").agg(F.sum(rev_tt).alias("total_tt"))
     )
     mx = rev.agg(F.max("total_tt").alias("mx"))
     supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    out = (
+    return (
         rev.crossJoin(F.broadcast(mx))
         .filter(F.col("total_tt") == F.col("mx"))
         .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .select("s_suppkey", "s_name", "total_tt")
         .orderBy("s_suppkey")
     )
-    return register_cached(out, [rev])
 
 
 # --------------------------------------------------------------------------
@@ -1997,8 +1994,6 @@ def q_agg_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     price in); the threshold pass and final sort run over the
     part-sized rollup only. Ordering by (val_cents DESC, partkey)
     totally orders ties."""
-    from mysql_cdc_to_http_spark.operators.caching import register_cached
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity"
     )
@@ -2009,20 +2004,18 @@ def q_agg_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("l_quantity")).cast("bigint")
         * F.round(F.col("p_retailprice") * 100).cast("bigint")
     )
-    stock = (
+    stock = caching.persist(
         li.join(F.broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .groupBy("l_partkey")
         .agg(F.sum(val).alias("val_cents"))
-        .persist()
     )
     tot = stock.agg(F.sum("val_cents").alias("total"))
-    out = (
+    return (
         stock.crossJoin(F.broadcast(tot))
         .filter(F.col("val_cents") * 2000 > F.col("total"))
         .select(F.col("l_partkey").alias("partkey"), "val_cents")
         .orderBy(F.col("val_cents").desc(), "partkey")
     )
-    return register_cached(out, [stock])
 
 
 def _schema_evolution_cache(spark: SparkSession, sf_dir: str) -> str:

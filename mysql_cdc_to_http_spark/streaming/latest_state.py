@@ -203,29 +203,6 @@ def read_state(
     return spark.read.parquet(state_dir).filter(F.col(op_col) != "d")
 
 
-def stream_to_state(
-    changes: DataFrame,
-    spark: SparkSession,
-    state_dir: str,
-    checkpoint_dir: str,
-    key_cols: Sequence[str],
-    offset_col: str = "offset",
-):
-    """Wire a streaming change feed into the state store via foreachBatch."""
-
-    def _merge(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_batch_into_state(
-            spark, batch_df, state_dir, key_cols, offset_col
-        )
-
-    return (
-        changes.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-        .start()
-    )
-
-
 def snapshot_as_of(
     history: DataFrame,
     offset,

@@ -74,6 +74,7 @@ def main() -> int:
 
     import pyspark.sql.types as T
 
+    from mysql_cdc_to_http_spark.operators.caching import release_all_cached
     from tests.oracle import compare
 
     qs, oracles = mod.queries(), mod.oracle_sql()
@@ -112,6 +113,9 @@ def main() -> int:
         except Exception as exc:  # noqa: BLE001 — harness records any error
             fails.append(n)
             print(f"{n:30s} ERROR {str(exc)[:200]}", flush=True)
+        finally:
+            # each query's persisted frames die with it, as in bench.py
+            release_all_cached()
 
     # entry smoke: the driver calls entry(spark) and collects
     if mode in ("window", "all"):

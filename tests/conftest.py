@@ -47,6 +47,16 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture(autouse=True)
+def _release_cached_frames():
+    """Unpersist every frame a test's queries persisted, so no cached
+    frame outlives the test that made it (operators/caching.py)."""
+    yield
+    from mysql_cdc_to_http_spark.operators.caching import release_all_cached
+
+    release_all_cached()
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF0001

@@ -1,15 +1,9 @@
-"""Layout operators: partition pruning actually fires on the written
-layout, files are clustered (one per partition value), row-group sort
-keys hold within files, and the data round-trips exactly."""
+"""Layout operators and audits: the shard manifest's checksum, the
+z-order layout audit and the rendezvous rebalance audit."""
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import functions as F
-
-from mysql_cdc_to_http_spark.operators.layout import write_partitioned
 
 
 def _plan(df) -> str:
@@ -18,92 +12,7 @@ def _plan(df) -> str:
     )
 
 
-def _events(spark, sf_dir):
-    return spark.read.parquet(os.path.join(sf_dir, "events.parquet")).select(
-        "event_id", "event_type", "user_id"
-    )
-
-
-def test_write_partitioned_prunes_and_clusters(spark, sf_dir, tmp_path):
-    src = _events(spark, sf_dir)
-    out = str(tmp_path / "events_by_type")
-    write_partitioned(src, out, ["event_type"], sort_by=["user_id"])
-
-    n_types = src.select("event_type").distinct().count()
-    dirs = glob.glob(os.path.join(out, "event_type=*"))
-    assert len(dirs) == n_types
-    # repartition-by-value clustering: exactly one data file per value
-    for d in dirs:
-        assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1
-
-    back = spark.read.parquet(out)
-    one_type = src.first()["event_type"]
-    plan = _plan(back.filter(F.col("event_type") == one_type))
-    assert "PartitionFilters" in plan and "event_type" in plan.split(
-        "PartitionFilters", 1
-    )[1][:200]
-    # pruned read returns exactly the partition's rows
-    assert (
-        back.filter(F.col("event_type") == one_type).count()
-        == src.filter(F.col("event_type") == one_type).count()
-    )
-
-
-def test_write_partitioned_round_trips_exactly(spark, sf_dir, tmp_path):
-    src = _events(spark, sf_dir)
-    out = str(tmp_path / "rt")
-    write_partitioned(src, out, ["event_type"], sort_by=["user_id"])
-    back = spark.read.parquet(out).select(*src.columns)
-    assert back.exceptAll(src).count() == 0 and src.exceptAll(back).count() == 0
-
-
-def test_write_partitioned_sorts_within_files(spark, sf_dir, tmp_path):
-    src = _events(spark, sf_dir)
-    out = str(tmp_path / "sorted")
-    write_partitioned(src, out, ["event_type"], sort_by=["user_id"])
-    one = glob.glob(os.path.join(out, "event_type=*", "*.parquet"))[0]
-    vals = [r["user_id"] for r in spark.read.parquet(one).collect()]
-    assert vals == sorted(vals)
-
-
 # --- deterministic sharded export -------------------------------------------
-
-
-def test_write_shards_one_file_per_shard_and_roundtrip(spark, tmp_path, sf_dir):
-    import glob
-
-    from mysql_cdc_to_http_spark.catalog import load_table
-    from mysql_cdc_to_http_spark.operators.layout import write_shards
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "shards")
-    manifest = write_shards(docs, out, "doc_id", n_shards=8).collect()
-
-    assert [r["shard"] for r in manifest] == list(range(8))
-    for r in manifest:
-        files = glob.glob(f"{out}/shard={r['shard']}/*.parquet")
-        assert len(files) == 1, f"shard {r['shard']}: {len(files)} files"
-
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    assert sorted(r["doc_id"] for r in back.select("doc_id").collect()) == sorted(
-        r["doc_id"] for r in docs.select("doc_id").collect()
-    )
-    assert sum(r["n_rows"] for r in manifest) == docs.count()
-
-
-def test_write_shards_membership_partition_invariant(spark, tmp_path, sf_dir):
-    from mysql_cdc_to_http_spark.catalog import load_table
-    from mysql_cdc_to_http_spark.operators.layout import write_shards
-
-    docs = load_table(spark, sf_dir, "documents")
-    m1 = write_shards(
-        docs.repartition(1), str(tmp_path / "a"), "doc_id", n_shards=8
-    ).collect()
-    m2 = write_shards(
-        docs.repartition(13), str(tmp_path / "b"), "doc_id", n_shards=8
-    ).collect()
-    assert [tuple(r) for r in m1] == [tuple(r) for r in m2]
 
 
 def test_shard_manifest_checksum_detects_any_row_change(spark, sf_dir):
@@ -121,24 +30,6 @@ def test_shard_manifest_checksum_detects_any_row_change(spark, sf_dir):
                                "doc_id", 8).collect()}
     diffs = [s for s in full if tampered.get(s) != full[s]]
     assert len(diffs) == 1
-
-
-def test_shard_manifest_verifies_written_shards(spark, tmp_path, sf_dir):
-    """The auditor flow: recompute the manifest FROM the shard files and
-    match it against the producer's manifest."""
-    from mysql_cdc_to_http_spark.catalog import load_table
-    from mysql_cdc_to_http_spark.operators.layout import (
-        shard_manifest,
-        write_shards,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    out = str(tmp_path / "shards")
-    produced = write_shards(docs, out, "doc_id", n_shards=8).collect()
-    audited = shard_manifest(
-        spark.read.parquet(out), "doc_id", 8
-    ).collect()
-    assert [tuple(r) for r in audited] == [tuple(r) for r in produced]
 
 
 # --- X81 oracled audit form: q_zorder_layout --------------------------------

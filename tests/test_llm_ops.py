@@ -351,7 +351,6 @@ def test_release_all_cached_releases_lsh_intermediates(spark):
     from mysql_cdc_to_http_spark.operators.caching import release_all_cached
     from mysql_cdc_to_http_spark.operators.dedup import simhash_pairs
 
-    release_all_cached()  # drain leftovers from other tests
     df = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "alpha beta gamma")],
         "doc_id long, text string",
@@ -387,7 +386,6 @@ def test_connected_components_star_deep_chain(spark, tmp_path):
         checkpoint_every=3,
     )
     got = {r.id: r.cluster_id for r in comp.collect()}
-    release_all_cached()
     assert got == {i: 0 for i in range(n)}
 
 
@@ -395,7 +393,6 @@ def test_connected_components_restores_checkpoint_dir(spark, tmp_path):
     """Round-5 ADVICE regression: the checkpoint_dir= option must not
     leave the session-global reliable-checkpoint dir redirected after
     the call returns."""
-    from mysql_cdc_to_http_spark.operators.caching import release_all_cached
     from mysql_cdc_to_http_spark.operators.graph import connected_components
 
     sc = spark.sparkContext
@@ -409,7 +406,6 @@ def test_connected_components_restores_checkpoint_dir(spark, tmp_path):
         checkpoint_every=1,
     )
     comp.collect()
-    release_all_cached()
     # Spark nests a fresh UUID per setCheckpointDir call, so exact
     # equality is unattainable; what matters is that future reliable
     # checkpoints land back under the CALLER's tree, not cc_ckpt.
@@ -444,21 +440,18 @@ def test_connected_components_star_matches_label(spark):
             e, nodes, algorithm="star", max_iter=50
         ).collect()
     }
-    release_all_cached()
     assert got == want
 
 
 def test_connected_components_init_fuses_first_hop(spark):
     """Fused init = one hop already propagated: a diameter-2 chain needs
     only 2 loop rounds (propagate + confirm), where self-init needed 3."""
-    from mysql_cdc_to_http_spark.operators.caching import release_all_cached
     from mysql_cdc_to_http_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     nodes = spark.createDataFrame([(i,) for i in (1, 2, 3)], "id long")
     comp = connected_components(edges, nodes, max_iter=2)
     got = {r.id: r.cluster_id for r in comp.collect()}
-    release_all_cached()
     assert got == {1: 1, 2: 1, 3: 1}
 
 
@@ -468,7 +461,6 @@ def test_incremental_dedup_equals_one_shot(spark, sf_dir, tmp_path):
     drop-on-smaller-match == min-of-component on clique-shaped dup
     clusters), and the second fold reuses state instead of recomputing
     batch-1 signatures."""
-    from mysql_cdc_to_http_spark.operators.caching import release_all_cached
     from mysql_cdc_to_http_spark.operators.dedup import (
         incremental_dedup,
         minhash_dedup_pairs,
@@ -501,7 +493,6 @@ def test_incremental_dedup_equals_one_shot(spark, sf_dir, tmp_path):
         .filter("is_canonical")
         .collect()
     }
-    release_all_cached()
     corpus.unpersist()
     assert set(kept) == want
     # the store holds exactly the survivors' signatures
@@ -518,7 +509,6 @@ def test_incremental_dedup_state_swap_crash_windows(spark, sf_dir, tmp_path):
     import os
     import shutil
 
-    from mysql_cdc_to_http_spark.operators.caching import release_all_cached
     from mysql_cdc_to_http_spark.operators.dedup import incremental_dedup
     from mysql_cdc_to_http_spark.queries.llm import _dup_corpus
 
@@ -581,7 +571,6 @@ def test_incremental_dedup_state_swap_crash_windows(spark, sf_dir, tmp_path):
     assert fold(st, b2) == kept2
     assert stored(st) == want_state
     assert not os.path.exists(st + "__old")
-    release_all_cached()
     corpus.unpersist()
 
 
@@ -755,33 +744,17 @@ def test_exact_span_dedup_shuffles_carry_no_text(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_resize_nearest_exact_pixels():
-    import numpy as np
-
-    from mysql_cdc_to_http_spark.operators.multimodal import resize_nearest
-
-    # 4×4 gradient → 2×2 picks pixel centers (rows/cols 1 and 3)
-    src = np.arange(16, dtype=np.uint8).reshape(4, 4)
-    out = resize_nearest(src, 2, 2)
-    assert out.shape == (2, 2, 1)
-    assert out[:, :, 0].tolist() == [[5, 7], [13, 15]]
-    # upscale 2×2 → 4×4 replicates each source pixel 2×2
-    small = np.array([[10, 20], [30, 40]], dtype=np.uint8)
-    up = resize_nearest(small, 4, 4)[:, :, 0]
-    assert up.tolist() == [
-        [10, 10, 20, 20],
-        [10, 10, 20, 20],
-        [30, 30, 40, 40],
-        [30, 30, 40, 40],
-    ]
-
-
 def test_triangle_count_known_graphs(spark):
-    from mysql_cdc_to_http_spark.operators.graph import triangle_count_df
+    from mysql_cdc_to_http_spark.operators.graph import (
+        oriented_edges,
+        triangle_count_oriented,
+    )
 
     def count(pairs):
         e = spark.createDataFrame(pairs, "u long, v long")
-        return triangle_count_df(e).collect()[0]["n_triangles"]
+        return triangle_count_oriented(oriented_edges(e)).collect()[0][
+            "n_triangles"
+        ]
 
     # K4: C(4,3) = 4 triangles
     k4 = [(a, b) for a in range(4) for b in range(a + 1, 4)]
@@ -1382,41 +1355,6 @@ def test_ivf_incremental_foreachbatch_fold(spark, sf_dir):
     got = {(r["vec_id"], r["bucket"]) for r in state.collect()}
     want = {(r["vec_id"], r["bucket"]) for r in rebuilt.collect()}
     assert got == want
-
-
-def test_ivf_staleness_gate(spark, sf_dir):
-    """ivf_staleness audits churn absorbed by the index: counts must
-    reconcile with the fixture's arithmetic and the retrain gate fires
-    only above threshold. Identity case: staleness of an index against
-    itself is zero."""
-    from mysql_cdc_to_http_spark.operators.similarity import (
-        assign_buckets,
-        ivf_staleness,
-        maintain_ivf_index,
-    )
-
-    (_, centroids, old_index, deletes, reembeds, inserts, _) = (
-        _ivf_churn_fixture(spark, sf_dir)
-    )
-    maintained = maintain_ivf_index(
-        old_index, reembeds.unionByName(inserts), deletes, centroids
-    )
-    row = ivf_staleness(old_index, maintained).collect()[0]
-    n_old = old_index.count()
-    assert row["n_old"] == n_old
-    assert row["n_out"] == deletes.count()
-    assert row["n_in"] == inserts.count()
-    assert 0 < row["n_moved"] <= reembeds.count()
-    assert (
-        row["stale_micro"]
-        == (row["n_moved"] + row["n_in"] + row["n_out"]) * 1000000 // row["n_new"]
-    )
-    # this fixture's churn (~1/23 + moved subset of 1/7 + 1/31) sits
-    # below a 30% retrain threshold — the gate keeps the centroids
-    assert row["stale_micro"] < 300000
-    zero = ivf_staleness(maintained, maintained).collect()[0]
-    assert zero["n_moved"] == zero["n_in"] == zero["n_out"] == 0
-    assert zero["stale_micro"] == 0
 
 
 def test_lsh_calibration_matches_operator_and_curve(spark, sf_dir):

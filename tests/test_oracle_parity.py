@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from mysql_cdc_to_http_spark.operators.caching import release_all_cached
 from mysql_cdc_to_http_spark.queries import all_queries, all_oracles
 from tests.oracle import compare
 
@@ -18,6 +19,7 @@ def test_oracle_parity(spark, sf_dir_oracle, name):
     df = QUERIES[name](spark, sf_dir_oracle)
     ok, msg = compare(df, ORACLES[name], sf_dir_oracle)
     assert ok, f"{name}: {msg}"
+    _assert_release_empties_cache(spark, name)
 
 
 @pytest.mark.parametrize(
@@ -27,6 +29,16 @@ def test_rows_only_smoke(spark, sf_dir, name):
     df = QUERIES[name](spark, sf_dir)
     assert df.count() >= 0
     assert len(df.schema.fields) > 0
+    _assert_release_empties_cache(spark, name)
+
+
+def _assert_release_empties_cache(spark, name):
+    """No cached frame outlives the query that made it: after the
+    release every query's caller runs, Spark's CacheManager holds
+    nothing."""
+    release_all_cached()
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    assert cache_manager.isEmpty(), f"{name} left a cached frame"
 
 
 def test_survey2_window_ordering():

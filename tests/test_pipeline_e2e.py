@@ -6,7 +6,6 @@ alternative."""
 from __future__ import annotations
 
 import http.server
-import json
 import threading
 
 import pytest

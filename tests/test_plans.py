@@ -753,10 +753,16 @@ def test_record_linkage_block_distribution_pinned(spark):
     STRUCTURALLY <= 100 members at ANY sf (measured exactly 100 at
     sf0.1) — bounded by the key's construction, not by data luck.
     Also pins that blocking prunes >= 98% of the quadratic space."""
-    from mysql_cdc_to_http_spark.operators.linkage import block_stats
-
     cust = load_table(spark, "/root/testdata/sf0.1", "customer")
-    st = block_stats(cust, F.substring("c_name", 10, 7)).collect()[0]
+    st = (
+        cust.groupBy(F.substring("c_name", 10, 7))
+        .agg(F.count(F.lit(1)).alias("k"))
+        .agg(
+            F.max("k").alias("max_size"),
+            F.sum(F.col("k") * (F.col("k") - 1) / 2).alias("n_pairs"),
+        )
+        .collect()[0]
+    )
     n = cust.count()
     assert st["max_size"] <= 100, st
     assert st["n_pairs"] * 50 < n * (n - 1) / 2, st  # >=98% pruned
@@ -913,73 +919,60 @@ def test_overlap_bin_join_null_bounds_dropped_not_failed(spark):
         ).collect()
 
 
+def _executed_plan(df) -> str:
+    """The simple physical plan minus each InMemoryRelation's body.
+
+    InMemoryRelation prints its CACHED child plan (incl. the original
+    scans) nested under it — that subtree is what the cache REPLACES,
+    not what executes. Node depth = column where the node text starts,
+    past the ` : | +-` tree bars (plain leading-space counting is
+    defeated by the bars, which keep sibling branches at a fixed
+    column)."""
+    import re
+
+    mode = df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "simple"
+    )
+    plan = df._jdf.queryExecution().explainString(mode)
+    assert "InMemoryTableScan" in plan, plan[:800]
+
+    def depth(line: str) -> int:
+        return re.match(r"^[\s:|+\-=*()0-9]*", line).end()
+
+    out, skip_past = [], None
+    for line in plan.splitlines():
+        if skip_past is not None:
+            if line.strip() and depth(line) > skip_past:
+                continue
+            skip_past = None
+        if "InMemoryRelation" in line:
+            skip_past = depth(line)
+        out.append(line)
+    return "\n".join(out)
+
+
 def test_triangle_forms_share_one_edge_materialization(spark, sf_dir):
     """X123/X183 (r8 verdict #1): exact and DOULION triangle counting
     must share ONE persisted oriented edge list. After either form has
     materialized it, BOTH plans read the edge list from the in-memory
     relation — neither rebuilds the lineitem pair self-join or the
-    degree orientation — and the sampled form is a pure filter of it."""
-    from mysql_cdc_to_http_spark.queries.extended import (
-        _TRI_EDGES,
-        _copurchase_oriented,
-    )
-
-    # unpersist any memoized edge list BEFORE clearing the memo —
-    # clearing alone leaks the InMemoryRelation in the shared test
-    # session (round-9 advice)
-    for _frame in _TRI_EDGES.values():
-        _frame.unpersist()
-    _TRI_EDGES.clear()
-    exact = QUERIES["q_triangle_count"](spark, sf_dir)
-    rows_exact = exact.collect()  # builds + persists the shared list
-    assert len(_TRI_EDGES) == 1  # one memoized edge list for this sf_dir
-    shared = next(iter(_TRI_EDGES.values()))
-    assert shared.is_cached
-
-    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-        "simple"
-    )
-
-    import re
-
-    def _executed_lines(plan: str) -> list[str]:
-        # InMemoryRelation prints its CACHED child plan (incl. the
-        # original lineitem scan) nested under it — that subtree is
-        # what the cache REPLACES, not what executes. Drop each
-        # InMemoryRelation's deeper-nested body, keep the rest. Node
-        # depth = column where the node text starts, past the ` : | +-`
-        # tree bars (plain leading-space counting is defeated by the
-        # bars, which keep sibling branches at a fixed column).
-        def depth(line: str) -> int:
-            return re.match(r"^[\s:|+\-=*()0-9]*", line).end()
-
-        out, skip_past = [], None
-        for line in plan.splitlines():
-            if skip_past is not None:
-                if line.strip() and depth(line) > skip_past:
-                    continue
-                skip_past = None
-            if "InMemoryRelation" in line:
-                skip_past = depth(line)
-            out.append(line)
-        return out
-
+    degree orientation — and the sampled form is a pure filter of it.
+    The containment family shares its shingle-hash corpus the same way:
+    once q_dedup_containment has run, q_containment_sketch reads the
+    cached corpus instead of re-hashing the documents."""
+    rows_exact = QUERIES["q_triangle_count"](spark, sf_dir).collect()
     for name in ("q_triangle_count", "q_triangle_count_approx"):
-        plan = (
-            QUERIES[name](spark, sf_dir)
-            ._jdf.queryExecution()
-            .explainString(mode)
-        )
-        assert "InMemoryTableScan" in plan, (name, plan[:800])
-        executed = "\n".join(_executed_lines(plan))
+        executed = _executed_plan(QUERIES[name](spark, sf_dir))
         # the expensive build is NOT re-run: no lineitem scan, no
         # (u,v) pair-distinct exchange anywhere in the EXECUTED plan
         assert "lineitem" not in executed, name
         assert "Exchange hashpartitioning(u#" not in executed, name
-    # still correct: memoized second call returns identical results
+    # still correct: a second build served from the cache is identical
     assert QUERIES["q_triangle_count"](spark, sf_dir).collect() == rows_exact
-    # and the helper hands back the SAME frame (no rebuild)
-    assert _copurchase_oriented(spark, sf_dir) is shared
+
+    QUERIES["q_dedup_containment"](spark, sf_dir).collect()
+    executed = _executed_plan(QUERIES["q_containment_sketch"](spark, sf_dir))
+    assert "documents" not in executed, executed
 
 
 def test_multipass_linkage_catches_typo_inside_first_key(spark):
@@ -1524,14 +1517,6 @@ UNSHIPPED_ALLOWED = {
     "explain_formatted": "plan-lint toolkit the plan lints run over queries",
     "lint_plan": "plan-lint toolkit the plan lints run over queries",
     "PlanIssue": "plan-lint toolkit: lint_plan's result type",
-    "block_stats": "test-only: pins q_record_linkage's block-size bound",
-    "triangle_count_df": "test-only: test_triangle_count_known_graphs",
-    "write_partitioned": "test-only: partition-pruning tests in test_layout.py",
-    "write_shards": "test-only: sharded-export tests in test_layout.py",
-    "compact_parquet": "test-only: test_compact_parquet",
-    "resize_nearest": "test-only: test_resize_nearest_exact_pixels",
-    "ivf_staleness": "test-only: test_ivf_staleness_gate",
-    "stream_to_state": "test-only: test_latest_state_stream_merge_and_replay",
 }
 
 
@@ -1604,3 +1589,56 @@ def test_every_package_def_is_reachable_from_shipped_roots():
         "allowlisted defs are reachable now — drop them from UNSHIPPED_ALLOWED"
     )
     assert all(reason.strip() for reason in UNSHIPPED_ALLOWED.values())
+
+
+# ---------------------------------------------------------------------------
+# Cache-lifecycle lint: every frame the package persists goes through
+# operators/caching.persist, which records it for release_all_cached. A raw
+# ``.persist()``/``.cache()`` outside it is a frame no release reaches.
+# ---------------------------------------------------------------------------
+
+#: Top-level defs allowed a raw persist, each with why: they unpersist the
+#: frame themselves. Every entry must still hold a raw persist, so the list
+#: only shrinks.
+RAW_PERSIST_ALLOWED = {
+    "kcenter_coreset": "unpersists its corpus in a try/finally once the "
+    "k selection rounds have collected",
+    "incremental_dedup": "per-fold state: unpersists the fold's signatures "
+    "and state before returning, and must not hold them across folds",
+}
+
+
+def _raw_persist_sites():
+    sites = []
+    pkg = _os.path.join(_REPO, "mysql_cdc_to_http_spark")
+    for path in _py_files(pkg):
+        for st in _module_body(path):
+            for n in _ast.walk(st):
+                if not (
+                    isinstance(n, _ast.Call)
+                    and isinstance(n.func, _ast.Attribute)
+                    and n.func.attr in ("persist", "cache")
+                ):
+                    continue
+                if isinstance(n.func.value, _ast.Name) and n.func.value.id == "caching":
+                    continue  # caching.persist(...)
+                owner = getattr(st, "name", "<module>")
+                if path.endswith(_os.path.join("operators", "caching.py")) and owner == "persist":
+                    continue
+                sites.append((owner, f"{_os.path.relpath(path, _REPO)}:{n.lineno}"))
+    return sites
+
+
+def test_persist_only_through_caching_persist():
+    sites = _raw_persist_sites()
+    stray = [loc for owner, loc in sites if owner not in RAW_PERSIST_ALLOWED]
+    assert stray == [], (
+        "raw .persist()/.cache() outside operators/caching.persist — use "
+        "caching.persist(df) so release_all_cached() unpersists the frame"
+    )
+    owners = {owner for owner, _ in sites}
+    assert sorted(RAW_PERSIST_ALLOWED.keys() - owners) == [], (
+        "allowlisted defs no longer persist raw — drop them from "
+        "RAW_PERSIST_ALLOWED"
+    )
+    assert all(reason.strip() for reason in RAW_PERSIST_ALLOWED.values())

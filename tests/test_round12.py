@@ -224,10 +224,12 @@ def test_containment_trio_shares_one_shingle_corpus(spark):
     """X240/X253/X254 must all consume llm._shingle_hash_corpus — one
     persisted md5-shingle table (the materialize-once production
     shape), not three private hash passes. InMemoryTableScan in each
-    plan proves the persist is actually hit."""
-    import mysql_cdc_to_http_spark.queries.llm as llm
+    plan proves the persist is actually hit, and every query's cached
+    corpus resolves to the same CacheManager entry."""
+    from mysql_cdc_to_http_spark.queries.llm import _shingle_hash_corpus
 
-    key_hits = []
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    entries = set()
     for name in (
         "q_dedup_containment",
         "q_containment_sketch",
@@ -235,12 +237,11 @@ def test_containment_trio_shares_one_shingle_corpus(spark):
     ):
         plan = plan_of(QUERIES[name](spark, SF))
         assert "InMemoryTableScan" in plan, f"{name} not reading the cache"
-        key_hits.append(
-            any(sf == SF for (_, sf) in llm._CONTAIN_MEMO.keys())
-        )
-    assert all(key_hits)
-    # exactly ONE memo entry for this sf_dir — three queries, one table
-    assert sum(1 for (_, sf) in llm._CONTAIN_MEMO.keys() if sf == SF) == 1
+        corpus = _shingle_hash_corpus(spark, SF)
+        entry = cache_manager.lookupCachedData(corpus._jdf).get()
+        entries.add(spark._jvm.System.identityHashCode(entry))
+    # three queries, one table
+    assert len(entries) == 1
 
 
 # ---------------------------------------------------------------------------

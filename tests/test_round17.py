@@ -295,7 +295,6 @@ def test_ivf_probe_sweep_matches_per_point_ivf_topk(spark, sf_dir):
         assert got[np_] == (hits, recall, scanned), (
             np_, got[np_], (hits, recall, scanned),
         )
-    release_all_cached()
 
 
 # ---------------------------------------------------------------------------
@@ -385,7 +384,6 @@ def test_copurchase_edges_equal_join_form(spark, sf_dir):
 # totals pass could draw different reservoir-sampled range boundaries)
 # ---------------------------------------------------------------------------
 def test_ranked_prefix_sums_exact_over_cached_upstream(spark):
-    from mysql_cdc_to_http_spark.operators.caching import release_all_cached
     from mysql_cdc_to_http_spark.operators.sampling import (
         ranked_prefix_sums,
     )
@@ -407,11 +405,9 @@ def test_ranked_prefix_sums_exact_over_cached_upstream(spark):
     bad = [(k, c) for k, c in rows.items() if c != k + 1]
     assert not bad, bad[:10]
     df.unpersist()
-    release_all_cached()
 
 
 def test_grouped_ranks_exact_over_cached_upstream(spark):
-    from mysql_cdc_to_http_spark.operators.caching import release_all_cached
     from mysql_cdc_to_http_spark.operators.sampling import grouped_ranks
 
     n = 4000
@@ -435,14 +431,12 @@ def test_grouped_ranks_exact_over_cached_upstream(spark):
             range(1, len(items) + 1)
         ), f"group {g} ranks wrong"
     df.unpersist()
-    release_all_cached()
 
 
 # ---------------------------------------------------------------------------
 # dsir_scores — hand-computed scores on a planted corpus
 # ---------------------------------------------------------------------------
 def test_dsir_scores_planted_exact(spark):
-    from mysql_cdc_to_http_spark.operators.caching import release_all_cached
     from mysql_cdc_to_http_spark.operators.curation import dsir_scores
 
     docs = [
@@ -484,7 +478,6 @@ def test_dsir_scores_planted_exact(spark):
         r["doc_id"]: (r["n_grams"], r["score"], r["selected"])
         for r in dsir_scores(df, F.col("lang") == "en").collect()
     }
-    release_all_cached()
     for did, (ng, sc) in exp.items():
         g_ng, g_sc, g_sel = got[did]
         assert g_ng == ng, (did, g_ng, ng)

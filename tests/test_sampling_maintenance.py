@@ -1,4 +1,4 @@
-"""Sampling/split determinism + compaction behavior."""
+"""Sampling/split determinism."""
 
 from __future__ import annotations
 
@@ -8,7 +8,6 @@ import os
 from pyspark.sql import functions as F
 
 from mysql_cdc_to_http_spark.catalog import load_table
-from mysql_cdc_to_http_spark.operators.maintenance import compact_parquet
 from mysql_cdc_to_http_spark.operators.sampling import hash_split, stratified_sample
 
 
@@ -41,20 +40,6 @@ def test_stratified_sample_fractions(spark, sf_dir):
     assert got.get("zh", 0) == totals["zh"]  # fraction 1.0 keeps all
     for lang in ("en", "de"):
         assert got[lang] < totals[lang]  # strict subsample
-
-
-def test_compact_parquet(spark, sf_dir, tmp_path):
-    frag = str(tmp_path / "frag")
-    load_table(spark, sf_dir, "orders").repartition(40).write.parquet(frag)
-    n_before = len(glob.glob(os.path.join(frag, "part-*")))
-    assert n_before >= 40
-    out = str(tmp_path / "compact")
-    compact_parquet(spark, frag, out, target_file_bytes=10 * 1024 * 1024)
-    n_after = len(glob.glob(os.path.join(out, "part-*")))
-    assert n_after < n_before
-    assert (
-        spark.read.parquet(out).count() == spark.read.parquet(frag).count()
-    )
 
 
 def test_pack_sequences_partition_invariant(spark, sf_dir):

@@ -25,7 +25,6 @@ from mysql_cdc_to_http_spark.sources.queue import (
 from mysql_cdc_to_http_spark.streaming.latest_state import (
     merge_batch_into_state,
     read_state,
-    stream_to_state,
 )
 
 
@@ -43,8 +42,15 @@ def test_latest_state_stream_merge_and_replay(spark, sf_dir, tmp_path):
     )
     state_dir = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_to_state(
-        changes, spark, state_dir, ckpt, ["tbl", "pk"], offset_col="offset"
+    q = (
+        changes.writeStream.foreachBatch(
+            lambda batch, _epoch: merge_batch_into_state(
+                spark, batch, state_dir, ["tbl", "pk"], "offset"
+            )
+        )
+        .option("checkpointLocation", ckpt)
+        .outputMode("update")
+        .start()
     )
     q.processAllAvailable()
     q.stop()
